@@ -31,13 +31,10 @@ Execution is forced with a noop-format write (full materialization, no
 driver collect) except for top-k/limit queries where collect is the honest
 cost. Times include planning — that's what a user pays.
 
-Methodology (round-7, folding tools/probe.py in per the r6 verdict): FIVE
-timed runs per query. ``queries``/``value`` stay min-of-the-first-3 for
-round-over-round continuity with r1–r6; ``steady``/``steady_value`` are
-the median of the last 3 runs — past the volume-dependent JIT tail that
-min-of-3 occasionally catches (the r4→r6 "drift" was this measurement
-artifact, diagnosed by the 5-run probe; now both numbers ship in the
-artifact so no future round has to re-litigate it). Fixture-building
+Methodology: FIVE timed runs per query. ``queries``/``value`` are the
+min of the first 3 runs; ``steady``/``steady_value`` are the median of
+the last 3 runs — past the volume-dependent JIT tail that min-of-3
+occasionally catches. Both numbers ship in the artifact. Fixture-building
 queries (layout/ingest) get their session fixture cache cleared before
 every run so the measured cost stays the FULL build+probe cycle.
 """

@@ -492,17 +492,20 @@ def mv_partial_delta_maintain(
     group (groups netting to zero rows drop out); merging into the
     stored view is the caller's pointer-swap.
 
-    ``include_untouched=True`` (round 20, guide §2.4 — shuffles removed
-    outright) returns post-batch partials for EVERY group instead: the
-    fold's full-outer join already carries the untouched stored rows,
-    and each fold expression is an exact identity when every delta-side
-    column is NULL (``+ coalesce(NULL,0)`` on longs; ``least``/
-    ``greatest`` ignore NULLs; the hll branch returns the stored sketch
-    untouched), so restricting ``folded`` to touched groups — and
-    making the caller re-scan and LeftAnti-join the stored view to add
-    the untouched rows back — pays one extra scan plus one extra
-    equi-join of the view for nothing. Callers that stage the FULL
-    post-state (MV maintenance, live serves) use this form.
+    ``include_untouched=True`` returns post-batch partials for EVERY
+    group instead, the form callers that stage the full post-state use
+    (MV maintenance, live serves). Without min/max/hll columns it folds
+    as a union: the stored rows and the delta rows, each delta row
+    carrying its z-weighted partials (``z``, ``z·c``, ``z`` where ``c``
+    is non-null), are stacked, grouped by ``on`` and summed, with
+    ``coalesce(sum, 0)`` and ``__cnt > 0`` as the exact fold of the
+    stored row with the batch's aggregate delta. That is one aggregate
+    and no join; groups netting to zero rows drop out, and an update
+    that moves nothing arrives as a −1/+1 pair that cancels. With an
+    extremum or sketch column the delta is aggregated per group and
+    full-outer-joined to the stored rows, whose untouched side folds as
+    an identity (``+ coalesce(NULL, 0)`` on longs; ``least``/
+    ``greatest`` ignore NULLs; the hll branch keeps the stored sketch).
 
     Scale: per-batch work = one delta-sized aggregate + a base scan
     restricted to risky groups, independent of how many measure columns
@@ -516,6 +519,12 @@ def mv_partial_delta_maintain(
     extremum, which is exactly the refresh cost this operator exists
     to avoid."""
     on = list(on)
+    has_minmax = any(
+        "min" in kinds or "max" in kinds or "hll" in kinds
+        for kinds in spec.values()
+    )
+    if include_untouched and not has_minmax:
+        return _union_fold(data, delta, on, spec, z)
     pos = F.col(z) > 0
     d_aggs = [
         F.sum(z).cast("long").alias("__d_cnt"),
@@ -563,14 +572,10 @@ def mv_partial_delta_maintain(
             )
         if "hll" in kinds:
             risky_any = risky_any | (F.col(f"__hll_del_{c}") == 1)
-    has_minmax = any(
-        "min" in kinds or "max" in kinds or "hll" in kinds
-        for kinds in spec.values()
-    )
     risky = had_view & risky_any
     if has_minmax:
-        # a VIEW-LESS group carrying any delete is risky too (round-15
-        # advice): its insert-only fold would keep a same-changeset-
+        # a VIEW-LESS group carrying any delete is risky too: its
+        # insert-only fold would keep a same-changeset-
         # deleted value as the stored extremum — natural when change
         # feeds spanning several merge batches accumulate into one
         # maintain call. Sum/count-only MVs skip this: their fold is
@@ -655,3 +660,41 @@ def mv_partial_delta_maintain(
         .agg(*r_aggs)
     )
     return only_touched(folded).unionByName(recomputed)
+
+
+def _union_fold(
+    data: DataFrame,
+    delta: DataFrame,
+    on: list,
+    spec: dict,
+    z: str,
+) -> DataFrame:
+    """Every group's post-batch partials for a count/sum-only spec:
+    stored rows ∪ z-weighted delta rows → ``groupBy(on)`` → summed
+    partials, in ``data``'s column order. Sum columns are integral, so
+    each summed partial equals the stored value plus the batch's
+    aggregate delta."""
+    weighted = {"__cnt": F.col(z)}
+    for c, kinds in spec.items():
+        if "sum" in kinds:
+            weighted[f"__sum_{c}"] = F.col(z) * F.col(c)
+        if "cnt" in kinds:
+            weighted[f"__cnt_{c}"] = (
+                F.when(F.col(c).isNotNull(), F.col(z)).otherwise(0)
+            )
+    pos = {c: i for i, c in enumerate(data.columns)}
+    names = sorted(weighted, key=lambda n: pos.get(n, len(pos)))
+    return (
+        data.select(*on, *names)
+        .unionByName(
+            delta.select(*on, *[weighted[n].alias(n) for n in names])
+        )
+        .groupBy(*on)
+        .agg(
+            *[
+                F.coalesce(F.sum(n), F.lit(0)).cast("long").alias(n)
+                for n in names
+            ]
+        )
+        .filter(F.col("__cnt") > 0)
+    )

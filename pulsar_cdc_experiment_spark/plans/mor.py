@@ -406,8 +406,12 @@ def _read_cached(
 
 def _component_schema(spark: SparkSession, path: str):
     """Read schema of one overlay component via the per-path cache
-    (same ``mor::{path}`` key the writers seed) — zero inference jobs
-    on a warm cache, one on a cold one, exactly like ``_read_cached``."""
+    (the ``mor::{path}`` key ``_read_cached`` uses) — zero inference
+    jobs on a warm cache, one on a cold one. ``merge_into_mor`` seeds
+    only its delete sidecar's slot: a delta directory's read-back
+    schema carries partition columns discovered from its path, which
+    the writer's schema does not spell, so the first read after each
+    merge runs one schema-inference job per new delta component."""
     from ..sources.tables import _cached_schema
 
     return _cached_schema(
@@ -1006,21 +1010,27 @@ def auto_compact_mor(
         return rep
 
 
-def change_feed_mor(
+def _touched_images(
     spark: SparkSession,
     root: str,
     from_seq: int,
-    to_seq: int | None = None,
-) -> DataFrame:
-    """Row-level NET change feed between two sequences — same output
-    contract as the copy-on-write ``change_feed`` (``change_type`` ∈
-    insert/delete/update_pre/update_post). Both reconstructions are
-    pruned to the keys the spanned DELETE SIDECARS carry before the
-    full-outer diff — the sidecars are exactly the touched-key metadata,
-    so feed cost tracks the span's changesets, never table size. A
-    schema-evolved span pads the pre side's missing columns with typed
-    NULLs, so an update confined to an evolved column still emits its
-    pre/post pair (the copy-on-write change_feed convention)."""
+    to_seq: int | None,
+) -> tuple[list, list, DataFrame, DataFrame]:
+    """Pre and post images of the keys a sequence span touched, as
+    ``(keys, data_cols, pre, post)``. The touched keys are the keys the
+    span's delete sidecars carry, so the cost tracks the span's
+    changesets, never table size. ``pre`` is ``read_mor(from_seq)``
+    semi-joined to those keys. ``post`` folds the span's deltas onto
+    ``pre`` with ``read_mor``'s ``__born``/``__dmax`` rule: a span
+    sidecar always outranks a pre row (dseq > from_seq >= its birth),
+    and a span delta survives deletes at or below its own sequence.
+    Outside the touched keys nothing changes across the span, so the
+    post side needs no second overlay read. ``data_cols`` are the
+    manifest's non-key columns that either side carries: ``post`` has
+    every one of them, while a schema-evolved span can leave some off
+    ``pre``. ``post`` also keeps the rule's ``__born``/``__dmax``
+    columns; consumers select the data columns, which saves a
+    projection over the whole plan."""
     man = _read_manifest(root)
     keys = man["keys"]
     base_seq = man.get("base_seq", 0)
@@ -1033,41 +1043,42 @@ def change_feed_mor(
             "sequences are unreachable"
         )
     span = [s for s in man["seqs"] if from_seq < s["seq"] <= hi]
-    # round-20: one multi-path sidecar scan (see _delete_scan)
     dels = _delete_scan(spark, root, span)
-    touched = dels.select(*keys).distinct()
-
-    pre = read_mor(spark, root, from_seq).join(touched, keys, "left_semi")
-    # post = the SPAN folded onto the touched pre-image (round-19
-    # optimization): read_mor(hi) semi-joined to touched re-reads the
-    # whole overlay (base + every delta + every sidecar) a second time,
-    # but outside the span nothing the feed reports can change — the
-    # touched pre rows ARE the base state the span applies to. Fold
-    # with read_mor's exact __born/__dmax rule: a span sidecar always
-    # outranks a pre row (dseq > from_seq >= its birth), span deltas
-    # survive deletes at-or-below their own seq. Halves the feed's
-    # plan (one overlay read instead of two, one semi-join).
+    dmax = dels.groupBy(*keys).agg(F.max("__dseq").alias("__dmax"))
+    pre = read_mor(spark, root, from_seq).join(dmax, keys, "left_semi")
     post_rows = pre.withColumn("__born", F.lit(from_seq))
     span_deltas = _delta_span_scan(spark, root, span)
     if span_deltas is not None:
         post_rows = post_rows.unionByName(
             span_deltas, allowMissingColumns=True
         )
-    dmax = dels.groupBy(*keys).agg(F.max("__dseq").alias("__dmax"))
-    post = (
-        post_rows.join(dmax, keys, "left")
-        .filter(
-            F.col("__dmax").isNull() | (F.col("__dmax") <= F.col("__born"))
-        )
-        .drop("__dmax", "__born")
+    post = post_rows.join(dmax, keys, "left").filter(
+        F.col("__dmax").isNull() | (F.col("__dmax") <= F.col("__born"))
     )
-
-    types = {f.name: f.dataType for f in post.schema.fields}
-    for f in pre.schema.fields:
-        types.setdefault(f.name, f.dataType)
     data_cols = [
-        c for c in man["columns"] if c not in keys and c in types
+        c for c in man["columns"] if c not in keys and c in post.columns
     ]
+    return keys, data_cols, pre, post
+
+
+def change_feed_mor(
+    spark: SparkSession,
+    root: str,
+    from_seq: int,
+    to_seq: int | None = None,
+) -> DataFrame:
+    """Row-level NET change feed between two sequences — same output
+    contract as the copy-on-write ``change_feed`` (``change_type`` ∈
+    insert/delete/update_pre/update_post). A full outer join of the
+    touched keys' pre and post images (:func:`_touched_images`) keeps
+    only real changes: a key whose row images are equal emits nothing.
+    A schema-evolved span pads the pre side's missing columns with
+    typed NULLs, so an update confined to an evolved column still emits
+    its pre/post pair (the copy-on-write change_feed convention)."""
+    keys, data_cols, pre, post = _touched_images(
+        spark, root, from_seq, to_seq
+    )
+    types = {f.name: f.dataType for f in post.schema.fields}
 
     def _side(df: DataFrame, flag: str, img: str) -> DataFrame:
         have = set(df.columns)
@@ -1128,6 +1139,37 @@ def change_feed_mor(
         *keys,
         F.col("__e.change_type").alias("change_type"),
         *[F.col(f"__e.row.{c}").alias(c) for c in data_cols],
+    )
+
+
+def change_zset_mor(
+    spark: SparkSession,
+    root: str,
+    from_seq: int,
+    to_seq: int | None = None,
+) -> DataFrame:
+    """The span between two sequences as a z-set over the touched keys:
+    every pre image (:func:`_touched_images`) labelled
+    ``change_type = "delete"`` and every post image labelled
+    ``"insert"``, in ``change_feed_mor``'s column order. Unlike the net
+    feed there is no pre/post join, so a key whose row did not change
+    still emits a delete/insert pair of equal images. Summaries that
+    add weights (count, sum) cancel such a pair exactly; an extremum
+    summary sees it as a delete reaching its stored value and
+    recomputes that group. Columns a side lacks after a
+    schema-evolving merge read as typed NULLs."""
+    keys, data_cols, pre, post = _touched_images(
+        spark, root, from_seq, to_seq
+    )
+    return post.select(
+        *keys, F.lit("insert").alias("change_type"), *data_cols
+    ).unionByName(
+        pre.select(
+            *keys,
+            F.lit("delete").alias("change_type"),
+            *[c for c in data_cols if c in pre.columns],
+        ),
+        allowMissingColumns=True,
     )
 
 

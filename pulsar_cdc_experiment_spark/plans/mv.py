@@ -432,16 +432,18 @@ def _folded_partials(
     base_new: DataFrame,
     precheck_risky: bool = True,
 ) -> DataFrame:
-    """LAZY plan for the MV's post-changeset partial rows: validate the
-    changeset and delegate the partial math to
-    ``mv_partial_delta_maintain`` (``include_untouched=True`` — the
-    fold's full-outer join carries the untouched stored rows as
-    identity folds, see the operator). Shared by maintenance (which
-    stages and publishes the result) and the round-17 LIVE serve
-    (which rolls the composed partials up at query time without ever
-    publishing). ``precheck_risky`` runs one probe job to skip the
-    risky leg — right for maintenance VERBS; the live serve passes
-    False so plan construction stays job-free."""
+    """LAZY plan for the MV's post-changeset partial rows, every group
+    included: validate the changeset and the integral sum partials,
+    then delegate to ``mv_partial_delta_maintain`` with
+    ``include_untouched=True``. A count/sum MV folds as one union and
+    aggregate of stored and delta rows; an MV with a min/max/hll
+    column folds through a full outer join and recomputes its risky
+    groups from ``base_new`` (a DataFrame or a lazy callable, see the
+    operator). Shared by maintenance, which stages and publishes the
+    result, and the live serves, which roll the partials up at query
+    time without publishing. ``precheck_risky`` runs one probe job to
+    skip the risky leg — right for maintenance VERBS; the live serves
+    pass False so plan construction stays job-free."""
     from ..operators.materialize import mv_partial_delta_maintain
 
     group_cols = man["group_cols"]
@@ -472,17 +474,8 @@ def _folded_partials(
                 f"{dtypes.get(f'__sum_{c}')} — refresh_mv this MV "
                 "instead, or store the measure as integer cents"
             )
-    # round-20 (guide §2.4): the fold's full-outer join already carries
-    # the untouched stored rows as exact identity folds, so ask the
-    # operator for the FULL post-state instead of re-scanning the stored
-    # partials and LeftAnti-joining the touched keys back out — one scan
-    # and one equi-join of the view fewer in every maintain and every
-    # live serve (the LeftAnti SMJ the r19 verdict flagged across the
-    # live-serve family is exactly this join).
     new_rows = mv_partial_delta_maintain(
-        data, base_new,
-        changes.select(*group_cols, *sorted(spec), "__z"),
-        group_cols, spec,
+        data, base_new, changes, group_cols, spec,
         precheck_risky=precheck_risky,
         include_untouched=True,
     )
@@ -498,27 +491,25 @@ def _fold_changes_and_swap(
     pre_swap=None,
 ) -> None:
     """The shared incremental-fold core of plain and join MV
-    maintenance: stage :func:`_folded_partials`' result as a new data
-    generation. Fingerprint stamping is the CALLER's (plain and join
-    MVs stamp different source sets) — passed as ``pre_swap`` so a
+    maintenance: checkpoint the changeset, then stage
+    :func:`_folded_partials`' result as a new data generation.
+    Fingerprint stamping is the CALLER's (plain and join MVs stamp
+    different source sets) — passed as ``pre_swap`` so a
     derivation-token mismatch aborts BEFORE the publish, leaving the
     stored partials byte-untouched for a re-cut retry. The
     ``precheck_risky`` probe is affordable here: maintenance is a
-    VERB, jobs allowed, and the probe skips the risky-recompute leg —
-    and with it the base scan — in the common no-extremum-hit batch."""
+    VERB, jobs allowed, and for an MV with a min/max/hll column the
+    probe skips the risky-recompute leg — and with it the base scan —
+    in the common no-extremum-hit batch."""
     _sweep_mv(d, man)
     # Materialize AND lineage-truncate the changeset for the verb's
-    # duration (round-19 optimization, guide §3.3/§5): it is O(changes)
-    # small, and the fold plan references it several times (the risky
-    # probe, the touched/untouched split, the delta aggregate). The
-    # previous persist() cached the ROWS but every downstream action
-    # (probe job, staging write) still re-ANALYZED the caller's full
-    # feed-compose lineage — measured as ~1 s driver gaps per maintain
-    # in the streaming loops. localCheckpoint(eager=True) pays the same
-    # one materialization the persist's first action paid, and every
-    # consumer then plans against a bare ExistingRDD scan. Maintenance
-    # is a VERB (jobs sanctioned); the LIVE serve path calls
-    # _folded_partials directly and stays job-free.
+    # duration: it is O(changes) small, and the fold plan may reference
+    # it more than once (the risky probe, the delta aggregate, the
+    # staging write). persist() would cache the rows, but every action
+    # would still re-analyze the caller's whole feed lineage;
+    # localCheckpoint(eager=True) pays one materialization and every
+    # consumer then plans against a bare ExistingRDD scan. The live
+    # serves call _folded_partials directly and stay job-free.
     changes = changes.localCheckpoint(eager=True)
     try:
         out = _folded_partials(
@@ -665,6 +656,43 @@ def changes_from_feed(feed: DataFrame, cols: Sequence[str]) -> DataFrame:
         )
         .alias("__z"),
     )
+
+
+def _span_changes(
+    spark: SparkSession, mor_root: str, applied: int, latest: int, project
+) -> DataFrame:
+    """The z-weighted changeset of a MoR table's span ``applied →
+    latest`` for a plain MV: ``project`` applied once to the span's
+    z-set (``plans.mor.change_zset_mor``), weighed by
+    :func:`changes_from_feed` — ``insert`` +1, ``delete`` −1, and any
+    other label the projection emits aborts the fold. An unchanged or
+    projection-invisible row arrives as a cancelling −1/+1 pair."""
+    from .mor import change_zset_mor
+
+    feed = project(change_zset_mor(spark, mor_root, applied, latest))
+    return changes_from_feed(
+        feed, [c for c in feed.columns if c != "change_type"]
+    )
+
+
+def _lazy_base(spark: SparkSession, mor_root: str, project, as_of=None):
+    """``base_new`` as a callable: the projected table state at
+    ``as_of`` (``None`` = current), built only when a risky-group
+    recompute asks for it — a count/sum MV never does."""
+    from .mor import read_mor
+
+    def base_new(_risky_keys):
+        return _project_rows(project, read_mor(spark, mor_root, as_of))
+
+    return base_new
+
+
+def _project_rows(project, rows: DataFrame) -> DataFrame:
+    """Apply a feed projection (which keeps ``change_type``) to plain
+    table rows."""
+    return project(
+        rows.withColumn("change_type", F.lit("insert"))
+    ).drop("change_type")
 
 
 def _list_mvs(mv_root: str) -> list[dict]:
@@ -1915,14 +1943,16 @@ def maintain_mv_from_mor(
     name: str,
     project,
 ) -> dict:
-    """Catch a MoR-bound MV up to its table's CURRENT sequence: cut
-    ``change_feed_mor(applied_seq → latest)``, adapt it with
-    ``changes_from_feed``, fold with ``maintain_mv`` — passing the
-    manifest state captured AT FEED-CUT TIME as the source token, so a
-    merge landing mid-fold fails loud instead of stamping fresh — and
-    record the new ``applied_seq``. No-op (zero jobs) when already
-    caught up: the decision is manifest metadata, affordable every
-    micro-batch, like ``auto_compact_mor``'s.
+    """Catch a MoR-bound MV up to its table's CURRENT sequence: cut the
+    span ``applied_seq → latest`` as a z-weighted changeset
+    (:func:`_span_changes`), fold it into the stored partials, stage
+    and publish — stamping the manifest state captured AT CUT TIME as
+    the source token, so a merge landing mid-fold fails loud instead of
+    stamping fresh — and record the new ``applied_seq``. The table
+    state is read only if a min/max/hll group turns risky
+    (:func:`_lazy_base`). No-op (zero jobs) when already caught up: the
+    decision is manifest metadata, affordable every micro-batch, like
+    ``auto_compact_mor``'s.
 
     ``project(feed_df) -> DataFrame`` maps the feed's row images to the
     MV's group + measure columns, KEEPING ``change_type`` (measures are
@@ -1933,7 +1963,7 @@ def maintain_mv_from_mor(
     maintain before compacting (the auto-compact policy hook runs
     AFTER the apply in ``stream_mor_apply``-style loops, so the feed
     is always cut first), or ``refresh_mv``."""
-    from .mor import _read_manifest, change_feed_mor
+    from .mor import _read_manifest
 
     with maintenance_lock(mv_root), job_label(spark, "mv.maintain_from_mor"):
         d = _mv_dir(mv_root, name)
@@ -1962,7 +1992,7 @@ def maintain_mv_from_mor(
             # guard over them — fail loud instead of silently healing.
             # (A rollback of a NEVER-FOLDED sequence is benign: the
             # stored partials never saw it, the feed compose stays
-            # sound, and maintenance proceeds — round-19 ADVICE.)
+            # sound, and maintenance proceeds.)
             raise RuntimeError(
                 f"MV {name}: table {mor_root} mutation counter moved "
                 f"({man.get('mor_mutations')} → "
@@ -1989,25 +2019,10 @@ def maintain_mv_from_mor(
         # token captured at FEED-CUT time: the manifest file IS the
         # MV's fingerprinted source
         token = _fingerprint(man["source_path"])
-        feed = project(change_feed_mor(spark, mor_root, applied, latest))
-        changes = changes_from_feed(
-            feed, [c for c in feed.columns if c != "change_type"]
-        )
-        from .mor import read_mor
-
-        def base_new(_risky_keys):
-            # lazily-built post-state overlay (round-19): only the
-            # RISKY recompute leg reads the table, and most batches
-            # have none — building the read_mor plan eagerly paid its
-            # full py4j/analysis construction on every maintain.
-            return project(
-                read_mor(spark, mor_root).withColumn(
-                    "change_type", F.lit("insert")
-                )
-            ).drop("change_type")
-
         _fold_changes_and_swap(
-            spark, d, man, changes, base_new,
+            spark, d, man,
+            _span_changes(spark, mor_root, applied, latest, project),
+            _lazy_base(spark, mor_root, project),
             pre_swap=lambda: _stamp_fingerprint(man, token),
         )
         man["applied_seq"] = latest
@@ -2124,16 +2139,10 @@ def maintain_join_mv_from_mor(
         d_fact = changes_from_feed(
             feed, [c for c in feed.columns if c != "change_type"]
         )
-        fact_pre = fact_project(
-            read_mor(spark, mor_root, applied).withColumn(
-                "change_type", F.lit("insert")
-            )
-        ).drop("change_type")
-        fact_post = fact_project(
-            read_mor(spark, mor_root).withColumn(
-                "change_type", F.lit("insert")
-            )
-        ).drop("change_type")
+        fact_pre = _project_rows(
+            fact_project, read_mor(spark, mor_root, applied)
+        )
+        fact_post = _project_rows(fact_project, read_mor(spark, mor_root))
         d_view = star_join_delta(
             fact_pre, d_fact, [(dim, None, on) for dim, on in dims]
         )
@@ -2180,17 +2189,18 @@ def answer_aggregate_live(
     derived: dict | None = None,
 ) -> tuple[DataFrame, str | None]:
     """Serve FRESH numbers from a possibly-STALE MoR-bound MV without
-    any maintenance write — the real-time / lambda serve (round 17):
-    compose the STORED partials with the table's unapplied change-feed
-    span LAZILY at query time. Where plain ``answer_aggregate`` makes a
-    stale MV invisible (falling back to a full base aggregation), this
-    plans ``stored partials ⊕ fold(change_feed(applied_seq → latest))``
-    — the same Z-set math ``maintain_mv_from_mor`` publishes, minus the
-    publish — so query cost is O(groups + unapplied span + risky-group
-    base probe) instead of a fact pass, and the MV files are
-    byte-untouched (maintenance stays a separate, batched decision).
-    This is the Druid/Materialize serving contract expressed in Spark
-    plans: summaries absorb history, the delta rides the query.
+    any maintenance write: compose the STORED partials with the table's
+    unapplied span LAZILY at query time (:func:`_live_partials`). Where
+    plain ``answer_aggregate`` makes a stale MV invisible (falling back
+    to a full base aggregation), this plans ``stored partials ⊕
+    z-set(applied_seq → latest)`` — the fold ``maintain_mv_from_mor``
+    publishes, minus the publish — so query cost is O(groups +
+    unapplied span + risky-group base probe) instead of a fact pass,
+    and the MV files are byte-untouched (maintenance stays a separate,
+    batched decision). On a warm schema cache plan construction runs
+    no Spark job; the first build after a merge runs one
+    schema-inference job per new delta component
+    (``plans.mor._component_schema``).
 
     ``project`` maps feed/table rows to the MV's group + measure
     columns exactly as in :func:`maintain_mv_from_mor`. Returns
@@ -2201,8 +2211,6 @@ def answer_aggregate_live(
     mutation counter, which no feed can compensate; the fallback
     aggregates the CURRENT table state directly, so the answer is
     always fresh)."""
-    from .mor import read_mor
-
     d = _mv_dir(mv_root, name)
     with open(os.path.join(d, "mv.json")) as f:
         man = json.load(f)
@@ -2211,6 +2219,29 @@ def answer_aggregate_live(
             f"MV {name} is not bound to a merge-on-read table; "
             "answer_aggregate_live needs bind_mv_to_mor"
         )
+    return _serve_live(
+        spark, d, man, project, group_cols, aggs, where, having, derived
+    )
+
+
+def _serve_live(
+    spark: SparkSession,
+    d: str,
+    man: dict,
+    project,
+    group_cols: Sequence[str],
+    aggs: dict,
+    where,
+    having,
+    derived,
+    pinned: tuple | None = None,
+) -> tuple[DataFrame, str | None]:
+    """One live aggregate over a MoR-bound MV: roll up the partials
+    :func:`_live_partials` resolves, or — when it cannot serve —
+    aggregate the projected table state (current, or ``pinned``'s
+    boundary sequence) with mode ``None``."""
+    from .mor import read_mor
+
     group_cols = list(group_cols)
     aggs = dict(aggs)
     where = _norm_where(where)
@@ -2220,15 +2251,16 @@ def answer_aggregate_live(
         group_cols, where, derived
     )
     partials, mode = _live_partials(
-        spark, d, man, project, need, pred_need, aggs
+        spark, d, man, project, need, pred_need, aggs, pinned
     )
     if partials is None:
-        cur = project(
-            read_mor(spark, man["mor_root"]).withColumn(
-                "change_type", F.lit("insert")
-            )
-        ).drop("change_type")
-        base = _with_derived(cur, derived)
+        as_of = pinned[1] if pinned else None
+        base = _with_derived(
+            _project_rows(
+                project, read_mor(spark, man["mor_root"], as_of)
+            ),
+            derived,
+        )
         for term in where:
             base = base.filter(_where_expr(term))
         return (
@@ -2257,17 +2289,28 @@ def _live_partials(
     need: set,
     pred_need: set,
     aggs: dict,
+    pinned: tuple | None = None,
 ) -> tuple[DataFrame | None, str | None]:
-    """Resolve a MoR-bound MV's PARTIALS at the table's CURRENT state
-    — the shared core of every live serve. Returns ``(partials,
-    mode)``: the stored generation when genuinely fresh (mode
-    ``"mv"``), the lazy ``stored ⊕ fold(unapplied feed span)`` compose
-    when stale but compensatable (mode ``"mv_delta"`` — the exact
-    maintenance math minus the publish, risky extremum deletes riding
-    the plan's recompute leg), or ``(None, None)`` when not servable
-    (request not subsumed, span compacted away, or an out-of-band
-    rewrite — purge/rollback — bumped the mutation counter)."""
-    from .mor import _read_cached, _read_manifest, change_feed_mor, read_mor
+    """Resolve a MoR-bound MV's PARTIALS at the table's CURRENT state,
+    or at a pinned ``(mor_manifest, boundary_seq)`` — the shared core
+    of the plain live serves. On a warm schema cache this runs no
+    Spark job; the first call after a merge runs one schema-inference
+    job per new delta component (``plans.mor._component_schema``).
+    Returns ``(partials, mode)``:
+
+    - the stored generation (mode ``"mv"``) when the MV is fresh or
+      has no unapplied span;
+    - when stale but compensatable (mode ``"mv_delta"``), the lazy
+      fold of the stored partials with the span's z-set
+      (:func:`_span_changes`). A count/sum MV folds as one union and
+      aggregate and never reads the table; a min/max/hll MV recomputes
+      its risky groups from the table state at the boundary, built
+      only then (:func:`_lazy_base`);
+    - ``(None, None)`` when not servable: the request is not subsumed,
+      the span was compacted away, or an out-of-band rewrite (a purge
+      or a rollback of a folded sequence) bumped the mutation
+      counter."""
+    from .mor import _read_cached, _read_manifest
 
     subsumed = (
         need <= set(man["group_cols"])
@@ -2277,15 +2320,19 @@ def _live_partials(
     if not subsumed:
         return None, None
     mor_root = man["mor_root"]
-    if man["fingerprint"] == _fingerprint(man["source_path"]):
-        # genuinely fresh: the stored partials ARE the current state
-        return _read_cached(spark, _data_dir(d, man)), "mv"
-    mor_man = _read_manifest(mor_root)
-    latest = (
-        mor_man["seqs"][-1]["seq"]
-        if mor_man["seqs"]
-        else mor_man.get("base_seq", 0)
-    )
+    if pinned is None:
+        if man["fingerprint"] == _fingerprint(man["source_path"]):
+            return _read_cached(spark, _data_dir(d, man)), "mv"
+        mor_man = _read_manifest(mor_root)
+        latest = (
+            mor_man["seqs"][-1]["seq"]
+            if mor_man["seqs"]
+            else mor_man.get("base_seq", 0)
+        )
+        as_of = None
+    else:
+        mor_man, latest = pinned
+        as_of = latest
     applied = man["applied_seq"]
     moved, benign = _mutation_drift(mor_man, man)
     compensatable = (
@@ -2297,23 +2344,13 @@ def _live_partials(
     if applied == latest:
         # no unapplied span (a benign rollback popped the only pending
         # sequence, or a compaction folded exactly to the MV's floor):
-        # the stored partials ARE the current state even though the
-        # source fingerprint moved
+        # the stored partials ARE the state even though the source
+        # fingerprint moved
         return _read_cached(spark, _data_dir(d, man)), "mv"
-    feed = project(change_feed_mor(spark, mor_root, applied, latest))
-    changes = changes_from_feed(
-        feed, [c for c in feed.columns if c != "change_type"]
-    )
-    base_new = project(
-        read_mor(spark, mor_root).withColumn(
-            "change_type", F.lit("insert")
-        )
-    ).drop("change_type")
     composed = _folded_partials(
-        spark, d, man, changes, base_new,
-        # a QUERY path: no probe job at plan time — the risky leg
-        # rides the plan lazily (its semi-joined base read is the
-        # honest freshness cost when a delete hit an extremum)
+        spark, d, man,
+        _span_changes(spark, mor_root, applied, latest, project),
+        _lazy_base(spark, mor_root, project, as_of),
         precheck_risky=False,
     )
     return composed, "mv_delta"
@@ -2362,11 +2399,9 @@ def answer_join_aggregate_live(
         spark, d, man, fact_project, dims, need, pred_need, aggs,
     )
     if partials is None:
-        fact_now = fact_project(
-            read_mor(spark, man["mor_root"]).withColumn(
-                "change_type", F.lit("insert")
-            )
-        ).drop("change_type")
+        fact_now = _project_rows(
+            fact_project, read_mor(spark, man["mor_root"])
+        )
         base = _with_derived(
             _join_all(fact_now, [(dim, on) for dim, on in dims]),
             derived,
@@ -2466,19 +2501,11 @@ def _live_join_partials(
     d_fact = changes_from_feed(
         feed, [c for c in feed.columns if c != "change_type"]
     )
-    fact_pre = fact_project(
-        read_mor(spark, mor_root, applied).withColumn(
-            "change_type", F.lit("insert")
-        )
-    ).drop("change_type")
+    fact_pre = _project_rows(fact_project, read_mor(spark, mor_root, applied))
     d_view = star_join_delta(
         fact_pre, d_fact, [(dim, None, on) for dim, on in dims]
     )
-    fact_post = fact_project(
-        read_mor(spark, mor_root).withColumn(
-            "change_type", F.lit("insert")
-        )
-    ).drop("change_type")
+    fact_post = _project_rows(fact_project, read_mor(spark, mor_root))
     base_new = pruned_star_base(
         fact_post, [(dim, on) for dim, on in dims], man["group_cols"]
     )
@@ -2612,11 +2639,7 @@ def _native_sets_live_fallback(
             f"MV {name} is not bound to a merge-on-read table; "
             "the live grouping servers need bind_mv_to_mor"
         )
-    cur = project(
-        read_mor(spark, man["mor_root"]).withColumn(
-            "change_type", F.lit("insert")
-        )
-    ).drop("change_type")
+    cur = _project_rows(project, read_mor(spark, man["mor_root"]))
     base = _with_derived(cur, derived)
     for term in where:
         base = base.filter(_where_expr(term))
@@ -2806,11 +2829,7 @@ def _native_join_sets_live_fallback(
     with open(os.path.join(d, "mv.json")) as f:
         man = json.load(f)
     _validate_join_live(man, name, dims)
-    fact_now = fact_project(
-        read_mor(spark, man["mor_root"]).withColumn(
-            "change_type", F.lit("insert")
-        )
-    ).drop("change_type")
+    fact_now = _project_rows(fact_project, read_mor(spark, man["mor_root"]))
     base = _with_derived(
         _join_all(fact_now, [(dim, on) for dim, on in dims]),
         derived or {},
@@ -3134,85 +3153,10 @@ class MvsSnapshot:
         except 'mv_delta' composes to ``boundary_seq`` (not the moving
         latest) and the ``None`` fallback aggregates the TIME-TRAVELED
         table at the boundary — every panel, every mode, one state."""
-        from .mor import change_feed_mor, read_mor
-
-        man = self._mans[name]
-        project = self._projects[name]
-        spark = self._spark
-        group_cols = list(group_cols)
-        aggs = dict(aggs)
-        where = _norm_where(where)
-        having = _norm_having(having, aggs)
-        derived = _norm_derived(derived)
-        need, pred_need = _resolve_group_requirements(
-            group_cols, where, derived
-        )
-        latest = self.boundary_seq
-        mor_man = self._mor_man
-
-        def base_at_boundary() -> DataFrame:
-            cur = project(
-                read_mor(spark, self._mor_root, latest).withColumn(
-                    "change_type", F.lit("insert")
-                )
-            ).drop("change_type")
-            base = _with_derived(cur, derived)
-            for term in where:
-                base = base.filter(_where_expr(term))
-            return _apply_having(
-                base.groupBy(*group_cols).agg(*_base_agg_exprs(aggs)),
-                having,
-            )
-
-        subsumed = (
-            need <= set(man["group_cols"])
-            and pred_need <= set(man["group_cols"])
-            and _measures_servable(man, aggs)
-        )
-        applied = man["applied_seq"]
-        moved, benign = _mutation_drift(mor_man, man)
-        compensatable = (
-            (not moved or benign)
-            and mor_man.get("base_seq", 0) <= applied <= latest
-        )
-        if not subsumed or not compensatable:
-            return base_at_boundary(), None
-        d = _mv_dir(self._mv_root, name)
-        from .mor import _read_cached
-
-        stored = _read_cached(spark, _data_dir(d, man))
-        if applied == latest:
-            return (
-                _apply_having(
-                    _rollup_partials(
-                        stored, man, group_cols, aggs, where, derived
-                    ),
-                    having,
-                ),
-                "mv",
-            )
-        feed = project(
-            change_feed_mor(spark, self._mor_root, applied, latest)
-        )
-        changes = changes_from_feed(
-            feed, [c for c in feed.columns if c != "change_type"]
-        )
-        base_new = project(
-            read_mor(spark, self._mor_root, latest).withColumn(
-                "change_type", F.lit("insert")
-            )
-        ).drop("change_type")
-        composed = _folded_partials(
-            spark, d, man, changes, base_new, precheck_risky=False
-        )
-        return (
-            _apply_having(
-                _rollup_partials(
-                    composed, man, group_cols, aggs, where, derived
-                ),
-                having,
-            ),
-            "mv_delta",
+        return _serve_live(
+            self._spark, _mv_dir(self._mv_root, name), self._mans[name],
+            self._projects[name], group_cols, aggs, where, having,
+            derived, pinned=(self._mor_man, self.boundary_seq),
         )
 
     def aggregate_join(
@@ -3255,11 +3199,9 @@ class MvsSnapshot:
         mor_man = self._mor_man
 
         def fact_at_boundary() -> DataFrame:
-            return fact_project(
-                read_mor(spark, self._mor_root, latest).withColumn(
-                    "change_type", F.lit("insert")
-                )
-            ).drop("change_type")
+            return _project_rows(
+                fact_project, read_mor(spark, self._mor_root, latest)
+            )
 
         def base_at_boundary() -> DataFrame:
             base = _with_derived(
@@ -3310,11 +3252,9 @@ class MvsSnapshot:
         d_fact = changes_from_feed(
             feed, [c for c in feed.columns if c != "change_type"]
         )
-        fact_pre = fact_project(
-            read_mor(spark, self._mor_root, applied).withColumn(
-                "change_type", F.lit("insert")
-            )
-        ).drop("change_type")
+        fact_pre = _project_rows(
+            fact_project, read_mor(spark, self._mor_root, applied)
+        )
         d_view = star_join_delta(
             fact_pre, d_fact, [(dim, None, on) for dim, on in dims]
         )

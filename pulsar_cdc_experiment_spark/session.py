@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import os
 import tempfile
+import warnings
 
 from pyspark.sql import SparkSession
 
@@ -62,12 +63,18 @@ def shuffle_partitions_for_bytes(total_bytes: int, cores: int | None = None) -> 
 
 
 def prepare_session(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable engine conventions to an existing session."""
+    """Apply runtime-settable engine conventions to an existing session.
+    A conf the session refuses does not stop the others: each refusal is
+    reported as one ``RuntimeWarning`` naming the key and the error."""
     for k, v in RUNTIME_CONF.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            pass  # conf not settable on this build — keep going
+        except Exception as e:
+            warnings.warn(
+                f"prepare_session could not set {k}={v!r}: {e}",
+                RuntimeWarning,
+                stacklevel=2,
+            )
     return spark
 
 

@@ -7,6 +7,7 @@ the fact table."""
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import tempfile
@@ -2384,5 +2385,296 @@ def test_serve_policy_workload_economics(spark):
         assert got == want
         # caught up now: every later rate routes 'mv'
         assert policy(expected_requests=10 ** 6)["action"] == "mv"
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
+def _count_jobs(spark, fn, gid):
+    """``(fn(), number of Spark jobs fn ran)``, via a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(gid, gid)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(f"{gid}_done", "")
+    return out, len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+def test_live_count_sum_serve_job_budget(spark):
+    """A count/sum MV bound to a MoR table with a 2-sequence unapplied
+    span: on a warm schema cache building the live answer runs no
+    Spark job, and collecting it runs at most 6. On a cold cache the
+    build runs at most one schema-inference job per new delta
+    component. The span folds as a z-set through one union and
+    aggregate, and the table state a recompute would need is never
+    built, because a count/sum MV has no risky group."""
+    from pulsar_cdc_experiment_spark.plans.mor import (
+        init_mor,
+        merge_into_mor,
+        read_mor,
+    )
+    from pulsar_cdc_experiment_spark.plans.mv import (
+        answer_aggregate_live,
+        bind_mv_to_mor,
+    )
+
+    base = tempfile.mkdtemp(prefix="mv_jobs_")
+    try:
+        root = os.path.join(base, "t")
+        mv_root = os.path.join(base, "mvs")
+        rows = [(k, ["a", "b", "c"][k % 3], (k * 13) % 500)
+                for k in range(300)]
+        schema = "k bigint, g string, cents bigint"
+        init_mor(spark, root, spark.createDataFrame(rows, schema),
+                 keys=["k"], partition_col="g")
+        aggs = {"sum_cents": ("sum", "cents"), "n": ("count", None)}
+        create_mv(
+            spark, mv_root, name="cs",
+            source_path=os.path.join(root, ".mor", "manifest.json"),
+            source=read_mor(spark, root).select("g", "cents"),
+            group_cols=["g"], measures=aggs,
+        )
+        bind_mv_to_mor(mv_root, "cs", root)
+        cs = schema + ", is_delete boolean"
+        merge_into_mor(spark, root, spark.createDataFrame(
+            [(1, "b", 7, False), (2, "a", 0, True), (900, "c", 5, False)],
+            cs,
+        ))
+        merge_into_mor(spark, root, spark.createDataFrame(
+            [(1, "a", 9, False), (4, "b", 11, False)], cs,
+        ))
+
+        def project(df):
+            cols = [F.col("g"), F.col("cents")]
+            if "change_type" in df.columns:
+                cols = [F.col("change_type")] + cols
+            return df.select(*cols)
+
+        def build():
+            return answer_aggregate_live(
+                spark, mv_root, "cs", project, group_cols=["g"], aggs=aggs
+            )
+
+        # cold: neither merge's delta schema has been read back yet
+        _, cold = _count_jobs(spark, build, "__live_build_cold")
+        assert cold <= 2, f"a cold build ran {cold} job(s) for 2 deltas"
+        # warm: the cold build cached each new delta's schema
+        (df, mode), built = _count_jobs(
+            spark, build, "__live_build",
+        )
+        assert mode == "mv_delta"
+        assert built == 0, f"building the live answer ran {built} job(s)"
+        got, ran = _count_jobs(spark, df.collect, "__live_collect")
+        assert ran <= 6, f"the live answer ran {ran} jobs"
+        want = {
+            r["g"]: (r["s"], r["n"])
+            for r in read_mor(spark, root).groupBy("g").agg(
+                F.sum("cents").alias("s"), F.count("*").alias("n")
+            ).collect()
+        }
+        assert {r["g"]: (r["sum_cents"], r["n"]) for r in got} == want
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
+def test_mor_span_fold_fails_loud_on_illegal_change_type(spark):
+    """A projection that rewrites the span's ``change_type`` into a
+    label other than insert/delete must abort the live answer and the
+    maintain fold, not weigh the rows −1; the failed maintain leaves
+    the stored MV and its applied sequence as they were."""
+    from pulsar_cdc_experiment_spark.plans.mor import (
+        init_mor,
+        merge_into_mor,
+        read_mor,
+    )
+    from pulsar_cdc_experiment_spark.plans.mv import (
+        answer_aggregate_live,
+        bind_mv_to_mor,
+        maintain_mv_from_mor,
+    )
+
+    base = tempfile.mkdtemp(prefix="mv_badtype_")
+    try:
+        root = os.path.join(base, "t")
+        mv_root = os.path.join(base, "mvs")
+        schema = "k bigint, g string, cents bigint"
+        rows = [(k, ["a", "b"][k % 2], k) for k in range(40)]
+        init_mor(spark, root, spark.createDataFrame(rows, schema),
+                 keys=["k"], partition_col="g")
+        aggs = {"sum_cents": ("sum", "cents"), "n": ("count", None)}
+        create_mv(
+            spark, mv_root, name="cs",
+            source_path=os.path.join(root, ".mor", "manifest.json"),
+            source=read_mor(spark, root).select("g", "cents"),
+            group_cols=["g"], measures=aggs,
+        )
+        bind_mv_to_mor(mv_root, "cs", root)
+        merge_into_mor(spark, root, spark.createDataFrame(
+            [(1, "a", 7, False), (2, "a", 0, True)],
+            schema + ", is_delete boolean",
+        ))
+
+        def project(df):
+            cols = [F.col("g"), F.col("cents")]
+            if "change_type" in df.columns:
+                cols = [F.upper("change_type").alias("change_type")] + cols
+            return df.select(*cols)
+
+        df, mode = answer_aggregate_live(
+            spark, mv_root, "cs", project, group_cols=["g"], aggs=aggs
+        )
+        assert mode == "mv_delta"
+        with pytest.raises(Exception, match="illegal change_type"):
+            df.collect()
+        d = os.path.join(mv_root, "cs")
+        with open(os.path.join(d, "mv.json")) as f:
+            before = json.load(f)
+        with pytest.raises(Exception, match="illegal change_type"):
+            maintain_mv_from_mor(spark, mv_root, "cs", project)
+        with open(os.path.join(d, "mv.json")) as f:
+            assert json.load(f) == before
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
+def test_zset_span_edge_cases_match_recompute(spark):
+    """The z-set compose stays exact on the spans that make a
+    pre-minus-post feed degenerate. Each case lands as one unapplied
+    span on a table with two bound MVs, a count/sum MV ``cs`` and an
+    MV ``mx`` that adds a ``max``:
+
+    - a byte-identical re-upsert of each group's max row (no-op);
+    - an insert then a delete of one key, in a group nothing else holds;
+    - one key updated in two sequences, moving group in the first;
+    - a benign rollback of an unapplied sequence inside the span;
+    - a merge with ``evolve_schema=True`` whose only update touches the
+      new column, which the MVs do not project.
+
+    For each case and each MV, ``answer_aggregate_live``, a
+    ``read_mvs_snapshot`` panel and ``maintain_mv_from_mor`` must equal
+    an exact aggregate of ``read_mor``."""
+    from pulsar_cdc_experiment_spark.plans.mor import (
+        init_mor,
+        merge_into_mor,
+        read_mor,
+        rollback_last_mor,
+    )
+    from pulsar_cdc_experiment_spark.plans.mv import (
+        answer_aggregate_live,
+        bind_mv_to_mor,
+        maintain_mv_from_mor,
+        read_mvs_snapshot,
+    )
+
+    base = tempfile.mkdtemp(prefix="mv_zset_")
+    try:
+        root = os.path.join(base, "t")
+        mv_root = os.path.join(base, "mvs")
+        schema = "k bigint, g string, cents bigint"
+        rows = [(k, ["a", "b"][k % 2], (k * 13) % 500) for k in range(200)]
+        init_mor(spark, root, spark.createDataFrame(rows, schema),
+                 keys=["k"], partition_col="g")
+        mvs = {
+            "cs": {"sum_cents": ("sum", "cents"), "n": ("count", None)},
+            "mx": {"sum_cents": ("sum", "cents"), "n": ("count", None),
+                   "top": ("max", "cents")},
+        }
+        for name, aggs in mvs.items():
+            create_mv(
+                spark, mv_root, name=name,
+                source_path=os.path.join(root, ".mor", "manifest.json"),
+                source=read_mor(spark, root).select("g", "cents"),
+                group_cols=["g"], measures=aggs,
+            )
+            bind_mv_to_mor(mv_root, name, root)
+
+        def project(df):
+            cols = [F.col("g"), F.col("cents")]
+            if "change_type" in df.columns:
+                cols = [F.col("change_type")] + cols
+            return df.select(*cols)
+
+        def rows_of(df, name):
+            return {
+                r["g"]: tuple(r[o] for o in mvs[name]) for r in df.collect()
+            }
+
+        def merge(rs, evolve=False):
+            cols = "k bigint, g string, cents bigint"
+            if evolve or "note" in read_mor(spark, root).columns:
+                cols += ", note string"
+                rs = [r if len(r) == 5 else r[:3] + (None, r[3])
+                      for r in rs]
+            merge_into_mor(
+                spark, root,
+                spark.createDataFrame(rs, cols + ", is_delete boolean"),
+                evolve_schema=evolve,
+            )
+
+        def check(case):
+            exact = read_mor(spark, root).groupBy("g").agg(
+                F.sum("cents").alias("sum_cents"),
+                F.count("*").alias("n"),
+                F.max("cents").alias("top"),
+            )
+            for name, aggs in mvs.items():
+                want = rows_of(exact, name)
+                df, mode = answer_aggregate_live(
+                    spark, mv_root, name, project,
+                    group_cols=["g"], aggs=aggs,
+                )
+                assert mode == "mv_delta", (case, name, mode)
+                assert rows_of(df, name) == want, (case, name, "live")
+                with read_mvs_snapshot(
+                    spark, mv_root, [name], {name: project}
+                ) as snap:
+                    df, mode = snap.aggregate(
+                        name, group_cols=["g"], aggs=aggs
+                    )
+                    assert mode == "mv_delta", (case, name, mode)
+                    assert rows_of(df, name) == want, (case, name, "snap")
+                rep = maintain_mv_from_mor(spark, mv_root, name, project)
+                assert rep["folded"], (case, name)
+                df, mode = answer_aggregate_live(
+                    spark, mv_root, name, project,
+                    group_cols=["g"], aggs=aggs,
+                )
+                assert mode == "mv", (case, name, mode)
+                assert rows_of(df, name) == want, (case, name, "maintain")
+
+        def max_row(g):
+            return (
+                read_mor(spark, root).filter(F.col("g") == g)
+                .orderBy(F.col("cents").desc(), F.col("k").desc())
+                .limit(1).collect()[0]
+            )
+
+        # no-op: each group's max row re-upserted byte for byte
+        merge([(r["k"], r["g"], r["cents"], False)
+               for r in (max_row("a"), max_row("b"))])
+        check("noop")
+
+        # insert then delete of one key, alone in group c
+        merge([(9001, "c", 499, False)])
+        merge([(9001, "c", 499, True)])
+        check("insert_delete")
+
+        # one key updated in two sequences: the first moves it from
+        # group a to b above b's max, the second lowers it again
+        top_b = max_row("b")["cents"]
+        merge([(10, "b", top_b + 1, False)])
+        merge([(10, "b", 3, False)])
+        check("update_twice")
+
+        # benign rollback: the popped sequence was never folded
+        merge([(9100, "a", 1, False), (11, "a", 0, True)])
+        merge([(9101, "b", 999, False)])
+        rollback_last_mor(root)
+        check("rollback")
+
+        # schema evolution: a new column the MVs do not project
+        merge([(12, "a", (12 * 13) % 500, "x", False),
+               (9200, "b", 5, "y", False)], evolve=True)
+        check("evolve")
     finally:
         shutil.rmtree(base, ignore_errors=True)

@@ -410,3 +410,70 @@ def test_session_window_boundary_merges_at_exact_end(spark):
         .collect()
     )
     assert len(dyn) == 1 and dyn[0]["count"] == 2
+
+
+@given(
+    st.lists(
+        st.tuples(
+            st.sampled_from(["a", "b", "c", "d"]),        # group
+            st.one_of(st.none(), st.integers(-50, 50)),   # value
+            st.booleans(),                                # deleted?
+        ),
+        min_size=1,
+        max_size=30,
+    ),
+    st.lists(
+        st.tuples(
+            st.sampled_from(["a", "b", "c", "e"]),
+            st.one_of(st.none(), st.integers(-50, 50)),
+        ),
+        max_size=12,
+    ),
+)
+@settings(max_examples=max(4, _HEAVY_EXAMPLES // 2 + 1), deadline=None)
+def test_union_fold_matches_full_outer_fold(spark_global, stored, inserts):
+    """``mv_partial_delta_maintain(include_untouched=True)`` on a
+    count/sum/avg spec folds as stored ∪ z-weighted delta → one
+    aggregate. It must equal the full-outer fold (the touched groups'
+    ``include_untouched=False`` result plus every untouched stored row
+    with its sums coalesced to 0) and a recompute from the final rows,
+    over deltas with NULL values and groups whose count nets to zero."""
+    from pulsar_cdc_experiment_spark.operators.materialize import (
+        mv_partial_delta_maintain,
+    )
+
+    def partials(rows):
+        out: dict = {}
+        for g, v in rows:
+            n, s, nv = out.get(g, (0, None, 0))
+            if v is not None:
+                s, nv = (s or 0) + v, nv + 1
+            out[g] = (n + 1, s, nv)
+        return out
+
+    schema = "g string, __cnt long, __sum_v long, __cnt_v long"
+    data = spark_global.createDataFrame(
+        [(g, *p) for g, p in partials([(g, v) for g, v, _ in stored]).items()],
+        schema,
+    )
+    delta_rows = [(g, v, -1) for g, v, gone in stored if gone]
+    delta_rows += [(g, v, 1) for g, v in inserts]
+    delta = spark_global.createDataFrame(
+        delta_rows, "g string, v long, __z int"
+    )
+    spec = {"v": {"sum", "cnt"}}
+
+    def fold(untouched):
+        return mv_partial_delta_maintain(
+            data, None, delta, ["g"], spec, include_untouched=untouched
+        )
+
+    union = {r["g"]: tuple(r)[1:] for r in fold(True).collect()}
+    touched = {g for g, _, _ in delta_rows}
+    full_outer = {r["g"]: tuple(r)[1:] for r in fold(False).collect()}
+    for r in data.collect():
+        if r["g"] not in touched:
+            full_outer[r["g"]] = (r["__cnt"], r["__sum_v"] or 0, r["__cnt_v"])
+    final = [(g, v) for g, v, gone in stored if not gone] + list(inserts)
+    want = {g: (n, s or 0, nv) for g, (n, s, nv) in partials(final).items()}
+    assert union == full_outer == want
