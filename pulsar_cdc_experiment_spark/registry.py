@@ -18,7 +18,13 @@ decorator and the lookup tables that ``__spark_entry__`` exposes.
 
 from __future__ import annotations
 
+import functools
+import glob
+import json
+import os
+from collections import Counter
 from collections.abc import Callable
+from itertools import zip_longest
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -27,107 +33,11 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 
-#: registration order (module import order) — the CANONICAL base the
-#: rotation permutes. Round 19: the interleave used to re-derive its
-#: family buckets from the CURRENT dict order, so calling
-#: load_all_query_modules() twice produced a different ordering than
-#: calling it once — the driver-visible prefix depended on process
-#: call history. Deriving from this list makes the exposed ordering a
-#: pure function of (registration order, salt, registry size):
-#: idempotent, simulatable, and pinned by
-#: tests/test_registry.py::test_rotation_lands_fresh_names.
+#: registration order (module import order) — the canonical base the
+#: driver-facing order is derived from. Deriving from this list rather
+#: than the current dict order keeps load_all_query_modules()
+#: idempotent: calling it twice gives the same order as calling it once.
 _REG_ORDER: list[str] = []
-
-#: deliberate rotation nudge (round-13 verdict #6): the driver samples a
-#: prefix of the registry, and the stratified-rotation offset is derived
-#: from the registry SIZE — if the registry doesn't grow enough between
-#: rounds, the same prefix repeats and the never-driver-sampled tail
-#: (78 names after r13) never gets independent eyes. The salt is bumped
-#: per round (simulated against the committed CORRECTNESS_r*.json union)
-#: so each round's prefix-50 lands ≥10 first-time names. Deterministic
-#: within a round — correctness artifacts stay reproducible.
-#: round 14: salt 4 at the 222-query registry → 25 never-sampled names
-#: in the oracle-backed prefix-50 (simulated against
-#: CORRECTNESS_r01..r13), including 8 of that round's 10 new queries
-#: round 15: salt 7 at the final 233-query registry → 14 never-sampled
-#: names in the oracle-backed prefix-50 (simulated against
-#: CORRECTNESS_r01..r14), including 5 of this round's 11 new queries
-#: (salt 2 gave 18 fresh but only 3 of the new capabilities — driver
-#: eyes on the riskiest new code wins the tie)
-#: round 16: salt 35 at the final 242-query registry → 14 never-sampled
-#: names in the oracle-backed prefix-50 (simulated against
-#: CORRECTNESS_r01..r15), covering mv_join_maintain (the Z-set
-#: star-join maintenance core), all three grouping-set-family serves
-#: (mv_rollup_hierarchy_rewrite, mv_grouping_cube_rewrite,
-#: mv_grouping_sets_rewrite), and the r15 tail's
-#: stream_late_drop_counts; no single salt co-lands more than one of
-#: the four maintenance-family queries (family rotation keeps them
-#: adjacent) — the core fold machinery wins the tie, the streaming
-#: variants stay parity/spotlight/pytest-covered
-#: round 17: salt 205 at the final 250-query registry AFTER the
-#: mv_lifecycle family split (register(..., family=...)) → 14
-#: never-sampled names in the oracle-backed prefix-50 (simulated
-#: against CORRECTNESS_r01..r16), co-landing FIVE of the eight
-#: round-17 queries — prioritized by risk: the verdict-named
-#: mv_join_rollup_hierarchy_rewrite, the mid-stream-compaction
-#: capstone stream_mv_auto_compact, the new serving mode
-#: mv_live_serve, mv_advisor_workload, and mv_join_cube_rewrite
-#: (mv_having_rewrite / mv_approx_distinct_rewrite /
-#: mv_time_hierarchy_rewrite, serving-side variants of driver-green
-#: machinery, stay parity/spotlight-covered) — AND three of the
-#: never-sampled r15/r16 MV tail (mv_disjunctive_rewrite,
-#: stream_join_mv_maintain, stream_mv_maintain): a co-landing the
-#: r16 single-family rotation provably could not reach (no salt
-#: co-landed more than 4 MV-family names; the split gives serving
-#: and lifecycle their own round-robin slots)
-#: round 18: salt 12960 at the final 257-query registry AFTER the
-#: mv_live family split (the live/lambda serving population —
-#: mv_live_serve, the hierarchy/policy/snapshot serves — got its own
-#: round-robin slot, the same move that fixed the r16 lifecycle
-#: starvation) → 13 never-sampled names in the oracle-backed prefix-50
-#: (simulated against CORRECTNESS_r01..r17), landing ALL FOUR of the
-#: r15/r16 heavyweights the r17 verdict named (mv_join_rollup_rewrite,
-#: mv_join_mor_feed, mv_mor_feed_capstone, mv_gdpr_scrub — each
-#: re-verified green by tools/parity.py this round) PLUS three of the
-#: seven round-18 queries (mv_live_hierarchy_serve — the round's
-#: headline deliverable — mv_join_live_serve, and mv_policy_serve);
-#: without the family split no salt in [0, 20000) co-lands all four
-#: heavyweights with any round-18 name
-#: round 19: the interleave is now a pure function of registration
-#: order (see _REG_ORDER — previously the driver-visible prefix
-#: depended on how many times load_all_query_modules had run in the
-#: process, which made past salt simulations only approximately
-#: faithful). Salt 25165 at the FINAL 262-query registry → 19
-#: never-sampled names in the oracle-backed prefix-50 (simulated
-#: against CORRECTNESS_r01..r18 with the REAL ordering,
-#: equality-asserted), landing cdc_dlq_routing (B7 — the ONLY §2
-#: operator with zero driver eyes across 18 rounds), FOUR of the five
-#: r18-verdict-named tail queries (stream_stream_full_outer,
-#: approx_quantiles_bounds, cube_orders, grouping_sets_revenue;
-#: stream_stream_join shares the streaming_q rotation slot with its
-#: full-outer sibling, so no salt co-lands both — the sibling's
-#: identical two-sided-watermark machinery gets the driver eyes),
-#: THREE round-19 queries (mv_join_time_hierarchy_live,
-#: mv_policy_fleet_serve, mv_topk_live — the riskiest new serving
-#: modes), and the never-sampled r17/r18 tail
-#: (mv_time_hierarchy_rewrite, mv_having_rewrite,
-#: mv_join_advisor_workload, merge_dv_change_feed,
-#: merge_dv_describe_history). Tail after a green sample: 26 (< the
-#: verdict's 30). Pinned by
-#: tests/test_registry.py::test_rotation_lands_fresh_names.
-#: round 20: salt 1402 at the unchanged 262-query registry → 14
-#: never-sampled names in the oracle-backed prefix-50 (simulated with
-#: the committed tools/rotation_sim.py — r19 verdict #9 made the
-#: selection re-runnable: `python tools/rotation_sim.py --scan 2000`
-#: reproduces this pick as the max-fresh salt). It lands
-#: mv_snapshot_read, mv_topk_rewrite and mv_join_policy_serve — the
-#: serving paths whose MoR overlay read this round's single-root delta
-#: scan rewrote (driver eyes exactly where the optimization risk is) —
-#: plus stream_stream_join (the r18-verdict-named sibling that shares
-#: the streaming_q slot with its full-outer twin), the never-sampled
-#: merge history/replay pair and the agg_* scalar tail. Tail after a
-#: green sample: 12.
-_ROTATION_SALT = 1402
 
 
 def register(
@@ -141,14 +51,11 @@ def register(
     makes each @register run exactly once per process, so the guard never
     fires on legitimate re-imports.
 
-    ``family`` overrides the rotation family (default: the defining
-    module's basename). Round 17: the mv_q module grew two distinct
-    populations — serving-side rewrites and full lifecycle/maintenance
-    cycles — sharing ONE round-robin slot, so the 7 never-driver-sampled
-    maintenance names could never co-land in a prefix-50 with the
-    serving names (round-16 verdict #5 / NOTES family-split). Splitting
-    them into their own rotation family gives each population its own
-    slot per interleave pass.
+    ``family`` overrides the ordering family (default: the defining
+    module's basename). load_all_query_modules gives each family one
+    slot per round-robin pass, so a module holding distinct populations
+    (mv_q's serving rewrites, lifecycle cycles and live serves) splits
+    them into families to give each its own slot.
     """
 
     def deco(fn: QueryFn) -> QueryFn:
@@ -219,16 +126,37 @@ def rows_only_queries() -> dict[str, str]:
     return dict(ROWS_ONLY_RATIONALE)
 
 
+@functools.cache
+def _sample_counts() -> Counter[str]:
+    """Name → how many committed ``CORRECTNESS_r*.json`` files (the
+    driver's per-round samples, kept at the repo root) drew it. Read
+    once per process, so repeated load_all_query_modules() calls give
+    one order."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    counts: Counter[str] = Counter()
+    for p in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
+        with open(p) as f:
+            counts.update(json.load(f).keys())
+    return counts
+
+
+def _round_robin(buckets: list[list[str]]) -> list[str]:
+    return [n for row in zip_longest(*buckets) for n in row if n is not None]
+
+
 def load_all_query_modules() -> None:
     """Import every module that registers queries (idempotent), then
-    reorder the registry ROUND-ROBIN ACROSS FAMILIES.
+    reorder the registry by family and driver sample history.
 
-    Rationale: a driver that samples a prefix of ``queries()`` (round 1
-    checked the first 50 of 105, all in module order) should still cover
-    every query family — relational, CDC, scalar functions, windows,
-    streaming, UDFs, LLM ops — rather than exhausting the first two
-    modules. Interleaving makes ANY prefix of the registry a stratified
-    sample; full-registry consumers are unaffected.
+    The driver value-checks a prefix of ``queries()`` (the oracle-backed
+    first 50). Within each family, names are ranked by how many committed
+    ``CORRECTNESS_r*.json`` samples drew them, fewest first (registration
+    order breaks ties). The order is then: one pass over every family
+    (so the first names cover every family once), every remaining
+    never-sampled oracle-backed name (so the driver's prefix takes the
+    never-checked tail), then the rest round-robin across families. Once
+    the tail is empty, fewest-samples-first still hands the driver a
+    different prefix each round. Full-registry consumers are unaffected.
     """
     from .queries import (  # noqa: F401
         cdc,
@@ -248,30 +176,16 @@ def load_all_query_modules() -> None:
         windows_q,
     )
 
+    counts = _sample_counts()
     by_family: dict[str, list[str]] = {}
     for name in _REG_ORDER:  # canonical base order — see _REG_ORDER
-        fn = QUERIES[name]
-        by_family.setdefault(getattr(fn, "__family__", "other"), []).append(name)
-    # rotate each family by a registry-size-derived offset: as the
-    # registry grows round-over-round, a prefix-sampling driver sees a
-    # DIFFERENT stratified 50 each round instead of pinning the same
-    # head forever (round-11 verdict #8: the streaming/merge/LLM tail
-    # only ever got builder-side eyes). Deterministic within a round —
-    # correctness artifacts stay reproducible.
-    rot = len(QUERIES) + _ROTATION_SALT
-    buckets = [
-        b[rot % len(b):] + b[: rot % len(b)] for b in by_family.values()
-    ]
-    buckets = buckets[rot % len(buckets):] + buckets[: rot % len(buckets)]
-    interleaved: list[str] = []
-    i = 0
-    while len(interleaved) < len(QUERIES):
-        for b in buckets:
-            if i < len(b):
-                interleaved.append(b[i])
-        i += 1
-    # reorder IN PLACE (move-to-end in interleaved order): rebinding the
-    # global would strand any `from registry import QUERIES` alias on the
-    # stale, un-interleaved dict
-    for name in interleaved:
+        by_family.setdefault(QUERIES[name].__family__, []).append(name)
+    # sorted() is stable: registration order breaks sample-count ties
+    buckets = [sorted(b, key=lambda n: counts[n]) for b in by_family.values()]
+    rest = _round_robin([b[1:] for b in buckets])
+    fresh = [n for n in rest if n in ORACLES and not counts[n]]
+    later = [n for n in rest if n not in fresh]
+    # reorder IN PLACE (move-to-end): rebinding the global would strand
+    # any `from registry import QUERIES` alias on the stale dict
+    for name in [b[0] for b in buckets] + fresh + later:
         QUERIES[name] = QUERIES.pop(name)
