@@ -349,6 +349,29 @@ def star_join_delta(
     return d_cur
 
 
+def _group_join(
+    left: DataFrame, right: DataFrame, on: list, how: str
+) -> DataFrame:
+    """``left.join(right, on, how)`` with NULL-safe equality on the group
+    columns: a NULL group value is one group, as ``groupBy`` makes it.
+    Full outer output carries one coalesced copy of each ``on`` column
+    (the shape of a USING join); semi joins keep ``left``'s columns."""
+    rk = {c: f"__rk_{i}" for i, c in enumerate(on)}
+    rest = [c for c in right.columns if c not in rk]
+    r = right.select(*[F.col(c).alias(rk[c]) for c in on], *rest)
+    cond = F.lit(True)
+    for c in on:
+        cond = cond & F.col(c).eqNullSafe(F.col(rk[c]))
+    j = left.join(r, cond, how)
+    if how == "left_semi":
+        return j
+    return j.select(
+        *[F.coalesce(F.col(c), F.col(rk[c])).alias(c) for c in on],
+        *[c for c in left.columns if c not in rk],
+        *rest,
+    )
+
+
 def minmax_delta_maintain(
     view: DataFrame,
     base_new: DataFrame,
@@ -374,6 +397,7 @@ def minmax_delta_maintain(
     ``sum_v``, ``min_v``, ``max_v``), ``base_new`` the post-batch base
     relation (only risky groups are read from it), ``delta`` the
     z-weighted rows (+1 insert / −1 delete; an update is a −1/+1 pair).
+    Group columns match NULL-safely, so a NULL group is one group.
     ``val`` must be exact arithmetic (bigint cents) — the sum leg
     telescopes. Returns the NEW view rows for every group the batch
     touched (groups netting to zero rows drop out); publishing the merge
@@ -398,7 +422,7 @@ def minmax_delta_maintain(
         F.max(F.when(~pos, F.col(val))).alias("__del_mx"),
         F.max((~pos).cast("int")).alias("__has_del"),
     )
-    j = view.join(d, on, "full_outer")
+    j = _group_join(view, d, on, "full_outer")
     had_view = F.col("n_rows").isNotNull()
     # a VIEW-LESS group carrying any delete is risky too: its fold sees
     # inserts only, so a changeset that both inserts a value and deletes
@@ -422,7 +446,7 @@ def minmax_delta_maintain(
     ).filter(F.col("n_rows") > 0)
     risky_keys = j.filter(risky).select(*on)
     recomputed = (
-        base_new.join(risky_keys, on, "left_semi")
+        _group_join(base_new, risky_keys, on, "left_semi")
         .groupBy(*on)
         .agg(
             F.count("*").cast("long").alias("n_rows"),
@@ -440,7 +464,9 @@ def minmax_delta_maintain(
     if include_untouched:
         return folded.unionByName(recomputed)
     touched = d.select(*on)
-    return folded.join(touched, on, "left_semi").unionByName(recomputed)
+    return _group_join(folded, touched, on, "left_semi").unionByName(
+        recomputed
+    )
 
 
 def mv_partial_delta_maintain(
@@ -503,9 +529,11 @@ def mv_partial_delta_maintain(
     and no join; groups netting to zero rows drop out, and an update
     that moves nothing arrives as a −1/+1 pair that cancels. With an
     extremum or sketch column the delta is aggregated per group and
-    full-outer-joined to the stored rows, whose untouched side folds as
-    an identity (``+ coalesce(NULL, 0)`` on longs; ``least``/
-    ``greatest`` ignore NULLs; the hll branch keeps the stored sketch).
+    full-outer-joined to the stored rows on NULL-safe group equality
+    (``_group_join``, as are the touched and risky semi-joins), whose
+    untouched side folds as an identity (``+ coalesce(NULL, 0)`` on
+    longs; ``least``/``greatest`` ignore NULLs; the hll branch keeps the
+    stored sketch).
 
     Scale: per-batch work = one delta-sized aggregate + a base scan
     restricted to risky groups, independent of how many measure columns
@@ -558,7 +586,7 @@ def mv_partial_delta_maintain(
                 ).alias(f"__hll_del_{c}"),
             ]
     d = delta.groupBy(*on).agg(*d_aggs)
-    j = data.join(d, on, "full_outer")
+    j = _group_join(data, d, on, "full_outer")
     had_view = F.col("__cnt").isNotNull()
     risky_any = F.lit(False)
     for c, kinds in spec.items():
@@ -631,7 +659,9 @@ def mv_partial_delta_maintain(
     touched = d.select(*on)
 
     def only_touched(df: DataFrame) -> DataFrame:
-        return df if include_untouched else df.join(touched, on, "left_semi")
+        if include_untouched:
+            return df
+        return _group_join(df, touched, on, "left_semi")
 
     if not has_minmax:
         # no extremum partials → nothing is ever risky: pure fold
@@ -655,7 +685,7 @@ def mv_partial_delta_maintain(
         if "hll" in kinds:
             r_aggs.append(F.hll_sketch_agg(c).alias(f"__hll_{c}"))
     recomputed = (
-        base_new.join(risky_keys, on, "left_semi")
+        _group_join(base_new, risky_keys, on, "left_semi")
         .groupBy(*on)
         .agg(*r_aggs)
     )

@@ -35,10 +35,16 @@ Why this shape survives 100 TB:
   DRIFT safe: an update that moves a row across partitions rewrites both
   the old and new partition, never leaving a stale twin behind.
 - **Rewrite cost ∝ changeset locality, not table size**: only touched
-  partitions are read fully (partition-pruned scan) and rewritten; the
-  merge itself is ONE key-shuffle join (anti-join of old rows against
-  changeset keys) plus a union of surviving source rows. AQE is free to
-  broadcast a small changeset.
+  partitions are rewritten; the merge itself is ONE key-shuffle join
+  (anti-join of old rows against changeset keys) plus a union of
+  surviving source rows. AQE is free to broadcast a small changeset.
+- **Exact file scoping at no extra job**: the key+partition scan also
+  carries each row's file name, so the matched-key join that counts
+  updates and deletes names exactly the files holding a changeset key.
+  Only those files are read and rewritten; every other file of a
+  touched partition is kept byte-identical by hardlink. Row-level
+  membership is never coarser than a footer key-range test, and it
+  needs no footer reads.
 - **Re-applying the same changeset is a no-op** (update replaces with the
   same values, the insert's key now matches and replaces itself, deletes
   stay deleted) — a failed orchestrator can always just run the merge
@@ -122,150 +128,6 @@ def _part_dirs(
     return out
 
 
-def _file_key_ranges(
-    root: str, live: dict[tuple, str], touched, keys: Sequence[str]
-) -> list[tuple]:
-    """``(value_tuple, file_name, {key_col: (lo, hi)} | None)`` for every
-    data file in the touched partitions, from parquet FOOTER statistics
-    (driver-side, bounded by touched-partition file count — a table
-    format serves the same ranges from manifest column stats without
-    touching storage). ``None`` ranges mean the stats were unusable for
-    some key column; such files conservatively count as intersecting."""
-    import pyarrow.parquet as pq
-
-    out: list[tuple] = []
-    for v in touched:
-        ldir = live.get(v)
-        if ldir is None:
-            continue
-        pdir = os.path.join(root, ldir)
-        for fname in sorted(os.listdir(pdir)):
-            if not fname.startswith("part-") or not fname.endswith(
-                ".parquet"
-            ):
-                continue
-            ranges: dict | None = {}
-            try:
-                md = pq.ParquetFile(os.path.join(pdir, fname)).metadata
-                rg0 = md.row_group(0)
-                idx = {
-                    rg0.column(i).path_in_schema: i
-                    for i in range(md.num_columns)
-                }
-                for c in keys:
-                    los, his = [], []
-                    for rg in range(md.num_row_groups):
-                        st = md.row_group(rg).column(idx[c]).statistics
-                        if st is None or not st.has_min_max:
-                            raise LookupError(c)
-                        los.append(st.min)
-                        his.append(st.max)
-                    ranges[c] = (min(los), max(his))
-            except Exception:
-                ranges = None
-            out.append((v, fname, ranges))
-    return out
-
-
-#: cap on the bin count for the bucketed file-intersection probe. Bins
-#: bound the per-file explode (a file spanning the whole key domain
-#: emits at most this many bin rows), so stats-side expansion is
-#: ≤ files × _PROBE_MAX_BINS while the changeset side stays one row per
-#: key — versus |changeset| × |files| comparisons under the nested loop.
-_PROBE_MAX_BINS = 1024
-
-
-def _file_probe_plan(
-    spark: SparkSession,
-    src: DataFrame,
-    keys: Sequence[str],
-    rows: list[tuple],
-) -> DataFrame:
-    """Build the file-intersection probe as a DataFrame of distinct
-    ``__path`` values: which stats rows (files) can contain at least one
-    changeset key (AND over key columns — if any column's value falls
-    outside the file's range for that column, the file cannot hold that
-    key row).
-
-    Plan shape: when some key column has integer footer stats, the probe
-    is BUCKETED — the key domain [gmin, gmax] is cut into ≤
-    ``_PROBE_MAX_BINS`` bins, each file range explodes into the bins it
-    touches (``F.sequence``), each changeset key lands in exactly one
-    bin, and the join is an EQUI-join on the bin plus the exact range
-    post-filter (same shape as operators/intervals.interval_join_binned;
-    every true pair shares the key's bin, so nothing is lost and nothing
-    duplicates). A 10M-row changeset over 10k touched files costs one
-    hash shuffle on the bin key instead of the 10¹¹-comparison
-    BroadcastNestedLoop the AND-of-ranges condition forces (round-12
-    review). Keys outside [gmin, gmax] cannot intersect any file and are
-    pre-filtered. Falls back to the range join only when NO key column
-    has integer stats (string-keyed tables at file counts where the
-    BNLJ is still file-count-bounded)."""
-    from pyspark.sql import types as T
-
-    ktype = {f.name: f.dataType for f in src.schema.fields}
-    fields = [T.StructField("__path", T.StringType())]
-    for c in keys:
-        fields.append(T.StructField(f"__lo_{c}", ktype[c]))
-        fields.append(T.StructField(f"__hi_{c}", ktype[c]))
-    from ..sources.tables import local_rows
-
-    stats = local_rows(spark, rows, T.StructType(fields))
-    cond = F.lit(True)
-    for c in keys:
-        cond = (
-            cond
-            & (F.col(c) >= F.col(f"__lo_{c}"))
-            & (F.col(c) <= F.col(f"__hi_{c}"))
-        )
-
-    bin_col = None
-    for ci, c in enumerate(keys):
-        lo_i, hi_i = 1 + 2 * ci, 2 + 2 * ci
-        if all(
-            isinstance(r[lo_i], int)
-            and isinstance(r[hi_i], int)
-            and not isinstance(r[lo_i], bool)
-            and not isinstance(r[hi_i], bool)
-            for r in rows
-        ):
-            bin_col, blo_i, bhi_i = c, lo_i, hi_i
-            break
-
-    probe_src = src.select(*keys)
-    if bin_col is None:
-        return probe_src.join(stats, on=cond).select("__path").distinct()
-
-    gmin = min(r[blo_i] for r in rows)
-    gmax = max(r[bhi_i] for r in rows)
-    width = max(1, -(-(gmax - gmin + 1) // _PROBE_MAX_BINS))
-    stats_b = stats.withColumn(
-        "__bin",
-        F.explode(
-            F.sequence(
-                F.floor(
-                    (F.col(f"__lo_{bin_col}") - F.lit(gmin)) / F.lit(width)
-                ),
-                F.floor(
-                    (F.col(f"__hi_{bin_col}") - F.lit(gmin)) / F.lit(width)
-                ),
-            )
-        ),
-    )
-    probe_b = probe_src.filter(
-        (F.col(bin_col) >= F.lit(gmin)) & (F.col(bin_col) <= F.lit(gmax))
-    ).withColumn(
-        "__bin",
-        F.floor((F.col(bin_col) - F.lit(gmin)) / F.lit(width)).cast("long"),
-    )
-    return (
-        probe_b.join(stats_b, on="__bin")
-        .filter(cond)
-        .select("__path")
-        .distinct()
-    )
-
-
 #: separator for the exact tuple-membership term of the composite
 #: touched-set predicate (a C0 control char no sane partition value
 #: carries; values containing it fall back to the OR-of-ANDs shape)
@@ -319,34 +181,6 @@ def touched_prune_predicate(cols, tuples: list[tuple]):
     return pred & joined.isin(*[_TUPLE_SEP.join(t) for t in tuples])
 
 
-def _intersecting_files(
-    spark: SparkSession,
-    src: DataFrame,
-    keys: Sequence[str],
-    entries: list[tuple],
-    live: dict[tuple, str],
-) -> tuple[list[str], dict[tuple, list[str]]]:
-    """Split the touched partitions' files into (rewrite set, kept set)
-    via the bucketed probe plan (``_file_probe_plan``); output is bounded
-    by file count (sanctioned bounded model state)."""
-    hit: set[str] = set()
-    rows = []
-    for v, fname, ranges in entries:
-        rel = f"{live[v]}/{fname}"
-        if ranges is None:
-            hit.add(rel)
-        else:
-            rows.append((rel, *[b for c in keys for b in ranges[c]]))
-    if rows:
-        probe = _file_probe_plan(spark, src, keys, rows).collect()
-        hit |= {r["__path"] for r in probe}
-    kept: dict[tuple, list[str]] = {}
-    for v, fname, _r in entries:
-        if f"{live[v]}/{fname}" not in hit:
-            kept.setdefault(v, []).append(fname)
-    return sorted(hit), kept
-
-
 def merge_into(
     spark: SparkSession,
     root: str,
@@ -379,22 +213,25 @@ def merge_into(
     ``source`` must carry every target data column plus every partition
     column plus boolean ``delete_col``. Columns are matched by NAME. Source
     columns the target lacks are an ERROR unless ``evolve_schema=True``,
-    which widens the rewritten partitions (surviving old rows take NULL
-    in the new columns — the union-by-name convention the streaming
+    which widens the rewritten files (surviving old rows take NULL in
+    the new columns — the union-by-name convention the streaming
     materializer uses); the report then carries ``"schema_evolved"``.
-    Untouched partitions keep their old files, so post-evolution reads
-    of the whole table must merge footers (``mergeSchema``) or use a
-    catalog schema — the same contract as any evolving parquet layout,
-    and why this function's own target read merges footers.
+    Untouched partitions, and the files file scoping keeps, stay at the
+    old width, so post-evolution reads of the whole table must merge
+    footers (``mergeSchema``) or use a catalog schema — the same
+    contract as any evolving parquet layout, and why this function's
+    own target read and :func:`read_version` merge footers.
 
     ``file_scope=True`` (default) narrows the rewrite INSIDE each
-    touched partition to the data files whose footer key range can
-    contain a changeset key; every other file is kept byte-identical
-    (hardlinked into the staged swap). Rewrite cost then tracks
-    intersecting files, not touched-partition bytes — on a key-clustered
-    layout (range/Z-order within the partition) that is a small
-    fraction, the same file-skipping a table format drives from manifest
-    stats. The report gains ``"files_rewritten"`` / ``"files_kept"``.
+    touched partition to the data files that hold a matched key, as the
+    stats action's matched-key join finds them (row membership, not
+    footer ranges, and no extra Spark job); every other file is kept
+    byte-identical (hardlinked into the staged swap). Rewrite cost then
+    tracks the files the changeset's keys live in, not touched-partition
+    bytes. The report gains ``"files_rewritten"`` / ``"files_kept"``.
+    ``file_scope=False`` rewrites each touched partition whole.
+    ``file_scope_min_mb`` has no effect; it is kept so existing callers
+    still bind.
 
     ``keep_history=True`` preserves each replaced/deleted partition's
     pre-merge copy under ``root/.merge_history/v<NNNNNN>/`` with a
@@ -422,7 +259,6 @@ def merge_into(
             target_mb=target_mb,
             evolve_schema=evolve_schema,
             file_scope=file_scope,
-            file_scope_min_mb=file_scope_min_mb,
             keep_history=keep_history,
         )
 
@@ -438,7 +274,6 @@ def _merge_into_unlocked(
     target_mb: int,
     evolve_schema: bool,
     file_scope: bool,
-    file_scope_min_mb: int,
     keep_history: bool,
 ) -> dict:
     keys = list(keys)
@@ -535,6 +370,7 @@ def _merge_into_unlocked(
             F.struct(
                 *[F.col(c).cast("string").alias(c) for c in pcols]
             ).alias("__tp"),
+            F.col("_metadata.file_name").alias("__file"),
         )
         src_totals = per_key.agg(
             F.max("__c").alias("max_dup"),
@@ -553,7 +389,12 @@ def _merge_into_unlocked(
             .agg(
                 F.sum((~F.col("__del")).cast("long")).alias("n_updated"),
                 F.sum(F.col("__del").cast("long")).alias("n_deleted"),
-                F.collect_set("__tp").alias("tgt_parts"),
+                # (leaf, file) of every matched target row: the touched
+                # leaves, and exactly the files file scoping rewrites
+                # (bounded by file count)
+                F.collect_set(F.struct("__tp", "__file")).alias(
+                    "tgt_files"
+                ),
             )
         )
         stats = src_totals.crossJoin(matched_totals).collect()[0]
@@ -574,9 +415,12 @@ def _merge_into_unlocked(
                 "partition is not supported"
             )
         # struct values come back as Rows; bookkeeping keys are tuples
+        matched_files = {
+            (tuple(r["__tp"]), r["__file"]) for r in stats["tgt_files"]
+        }
         touched = sorted(
             {tuple(r) for r in stats["src_parts"]}
-            | {tuple(r) for r in stats["tgt_parts"]}
+            | {v for v, _f in matched_files}
         )
         untouched = sorted(set(live) - set(touched))
 
@@ -596,95 +440,87 @@ def _merge_into_unlocked(
                 "schema_evolved": [],
             }
 
-        # -- file-level scoping: footer key ranges decide which files
-        # inside the touched partitions can possibly hold a changeset
-        # key; the rest are kept byte-identical. Any failure to build
-        # the probe falls back to whole-partition rewrite (slower,
-        # never incorrect).
+        # -- file-level scoping: the stats join above already names every
+        # target file that holds a changeset key. Inside the touched
+        # partitions only those files are rewritten; every other file
+        # is kept byte-identical.
         kept: dict[tuple, list[str]] = {}
-        scoped: list[str] | None = None
-        full_bytes = sum(
-            dir_bytes(os.path.join(root, live[v])) for v in touched
-            if v in live
-        )
-        # byte floor: the probe is a (tiny) Spark job locally, so it only
-        # runs when the prospective rewrite is big enough for skipped
-        # files to beat the probe cost — a <64 MB rewrite is below one
-        # task's noise floor. (On a table format the stats live in the
-        # manifest and the probe is free; the floor is a LOCAL cost-model
-        # artifact, measured as +0.5 s per merge on the sf0.1 bench.)
-        if file_scope and full_bytes >= file_scope_min_mb * 1024 * 1024:
-            try:
-                entries = _file_key_ranges(root, live, touched, keys)
-                scoped, kept = _intersecting_files(
-                    spark, src, keys, entries, live
+        scoped: list[str] = []
+        if file_scope:
+            listed = set()
+            for v in touched:
+                if v not in live:
+                    continue
+                for fname in sorted(os.listdir(os.path.join(root, live[v]))):
+                    # Spark's reader skips these names; so does the swap
+                    if fname.startswith(("_", ".")):
+                        continue
+                    listed.add((v, fname))
+                    if (v, fname) in matched_files:
+                        scoped.append(f"{live[v]}/{fname}")
+                    else:
+                        kept.setdefault(v, []).append(fname)
+            stray = sorted(matched_files - listed)
+            if stray:
+                # keeping a file that holds a matched key would leave a
+                # stale twin of that key beside its merged row
+                raise RuntimeError(
+                    f"matched target file(s) {stray[:3]} are not under "
+                    f"their partition dirs in {root}; refusing to scope "
+                    "the rewrite"
                 )
-            except Exception:
-                scoped, kept = None, {}
 
-        # -- the merge plan: partition-pruned (or file-scoped) read of
-        # the touched data, ONE key-shuffle anti-join dropping every old
-        # copy of a changeset key (including drifted copies in other
-        # touched partitions), union of surviving source rows. No manual
-        # broadcast — AQE decides from the changeset's actual size.
-        if scoped is not None:
-            if scoped:
-                # path-scoped read: basePath keeps the partition columns;
-                # inference stays off so their values remain dir-name
-                # spellings (same contract as the target read above)
-                spark.conf.set(inf_conf, "false")
-                try:
-                    old = (
-                        spark.read.option("mergeSchema", "true")
-                        .option("basePath", root)
-                        .parquet(*[os.path.join(root, p) for p in scoped])
-                    )
-                finally:
-                    spark.conf.set(inf_conf, prev_inf)
-                old = old.select(
-                    *[c for c in out_cols if c in old.columns]
-                )
-                merged = old.join(
-                    src.select(*keys), keys, "left_anti"
-                ).unionByName(
-                    src.filter(~F.col(delete_col)).select(*out_cols),
-                    allowMissingColumns=True,
+        # -- the merge plan: a read of the touched data (the scoped files,
+        # or the touched partitions whole), ONE key-shuffle anti-join
+        # dropping every old copy of a changeset key (including drifted
+        # copies in other touched partitions), union of surviving source
+        # rows. No manual broadcast — AQE decides from the changeset's
+        # actual size.
+        if file_scope and not scoped:
+            # no touched file holds a changeset key: only new rows land
+            merged = src.filter(~F.col(delete_col)).select(*out_cols)
+        else:
+            if file_scope:
+                # path-scoped read under the target's schema: no footer
+                # inference, and basePath keeps the partition columns as
+                # the string dir-name spellings the schema declares
+                old = (
+                    spark.read.schema(target.schema)
+                    .option("basePath", root)
+                    .parquet(*[os.path.join(root, p) for p in scoped])
                 )
             else:
-                # pure-insert changeset whose keys miss every file range:
-                # nothing old to rewrite, only new rows land
-                merged = src.filter(~F.col(delete_col)).select(*out_cols)
-        else:
-            # flat touched-tuple predicate: literal isin terms prune
-            # directories statically; composite exactness comes from the
-            # joined-tuple membership term (touched_prune_predicate —
-            # the OR-of-ANDs shape this replaces stack-overflows past a
-            # few hundred touched leaves)
-            prune = touched_prune_predicate(
-                [F.col(c) for c in pcols], sorted(touched)
-            )
-            old = target.filter(prune).select(
+                # flat touched-tuple predicate: literal isin terms prune
+                # directories statically; composite exactness comes from
+                # the joined-tuple membership term (touched_prune_predicate
+                # — the OR-of-ANDs shape stack-overflows past a few
+                # hundred touched leaves)
+                old = target.filter(
+                    touched_prune_predicate(
+                        [F.col(c) for c in pcols], sorted(touched)
+                    )
+                )
+            merged = old.select(
                 *[c for c in out_cols if c in target.columns]
-            )
-            merged = old.join(
-                src.select(*keys), keys, "left_anti"
-            ).unionByName(
+            ).join(src.select(*keys), keys, "left_anti").unionByName(
                 src.filter(~F.col(delete_col)).select(*out_cols),
                 # surviving old rows take NULL in evolution-added columns
                 allowMissingColumns=True,
             )
 
         # -- size the rewrite: k files per touched partition from the
-        # bytes actually being rewritten — the intersecting files when
-        # scoped, the touched partitions' full bytes otherwise (at
-        # 100 TB the table format's file-size targets drive this
-        # instead)
-        if scoped is not None:
+        # bytes actually being rewritten — the scoped files, or the
+        # touched partitions' full bytes (at 100 TB the table format's
+        # file-size targets drive this instead)
+        if file_scope:
             touched_bytes = sum(
                 os.path.getsize(os.path.join(root, p)) for p in scoped
             )
         else:
-            touched_bytes = full_bytes
+            touched_bytes = sum(
+                dir_bytes(os.path.join(root, live[v])) for v in touched
+                if v in live
+            )
         # files per touched partition: the byte-derived 256 MB target,
         # floored by available parallelism so a small touched set still
         # rewrites with every core (at 100 TB the byte target dominates;
@@ -843,7 +679,7 @@ def _merge_into_unlocked(
             "n_noop_deletes": n_noop_deletes,
             "schema_evolved": extra,
         }
-        if scoped is not None:
+        if file_scope:
             report["files_rewritten"] = len(scoped)
             report["files_kept"] = n_kept
         if hist is not None:
@@ -1097,11 +933,19 @@ def read_version(spark, root: str, as_of: int):
         # cache key carries the LEAF SET: two reconstructions over the
         # same base with different leaf selections (e.g. change_feed's
         # pre and post sides both touching the live root) must not
-        # thrash one slot and re-infer per construction
+        # thrash one slot and re-infer per construction. Footers are
+        # merged: after schema evolution, files of both widths sit side
+        # by side, across leaves and (file scoping keeps files) within
+        # one leaf, and one footer would name only one width.
         schema = _cached_schema(
             f"{base}::as_of::{'|'.join(os.path.relpath(p, base) for p in paths)}",
             tuple(state),
-            lambda r=reader, ps=paths: r.parquet(*ps).schema,
+            lambda b=base, ps=paths: (
+                spark.read.option("basePath", b)
+                .option("mergeSchema", "true")
+                .parquet(*ps)
+                .schema
+            ),
         )
         parts.append(reader.schema(schema).parquet(*paths))
     if not parts:

@@ -873,3 +873,70 @@ def test_viewless_group_with_delete_is_risky(spark):
         ).collect()
     }
     assert got3 == {"gN": (1, 5)}, got3
+
+
+def test_extremum_fold_keeps_null_groups_whole(spark):
+    """A NULL group value is one group: its stored row and its delta
+    fold into one output row under both ``include_untouched`` modes,
+    and a delete that reaches the NULL group's extremum recomputes it
+    from the base. Groups are the composite (g, h), so each key column
+    carries a NULL in some group."""
+    from collections import Counter
+
+    from pulsar_cdc_experiment_spark.operators.materialize import (
+        minmax_delta_maintain,
+        mv_partial_delta_maintain,
+    )
+
+    # stored groups: (NULL, x) over v {3, 7}; (a, NULL) over v {5}
+    base_old = [(None, "x", 3), (None, "x", 7), ("a", None, 5)]
+    bschema = "g string, h string, v long"
+    data = spark.createDataFrame(base_old, bschema).groupBy("g", "h").agg(
+        F.count("*").cast("long").alias("__cnt"),
+        F.sum("v").cast("long").alias("__sum_v"),
+        F.max("v").alias("__max_v"),
+    )
+    view = spark.createDataFrame(base_old, bschema).groupBy("g", "h").agg(
+        F.count("*").cast("long").alias("n_rows"),
+        F.sum("v").cast("long").alias("sum_v"),
+        F.min("v").alias("min_v"),
+        F.max("v").alias("max_v"),
+    )
+    insert = [(None, "x", 1, 1)]
+    delete_max = [(None, "x", 7, -1)]
+    cases = {
+        "insert": (insert, base_old + [(None, "x", 1)]),
+        "delete_max": (delete_max, base_old[:1] + base_old[2:]),
+    }
+    for name, (delta_rows, base_rows) in cases.items():
+        delta = spark.createDataFrame(delta_rows, bschema + ", __z long")
+        base_new = spark.createDataFrame(base_rows, bschema)
+        sums = {}
+        for g, h, v in base_rows:
+            c, s, mn, mx = sums.get((g, h), (0, 0, v, v))
+            sums[(g, h)] = (c + 1, s + v, min(mn, v), max(mx, v))
+        touched = {(r[0], r[1]) for r in delta_rows}
+        for untouched in (True, False):
+            keep = [t for t in sums if untouched or t in touched]
+            want_p = Counter(
+                (*t, sums[t][0], sums[t][1], sums[t][3]) for t in keep
+            )
+            got_p = Counter(
+                tuple(r)
+                for r in mv_partial_delta_maintain(
+                    data, base_new, delta, ["g", "h"],
+                    {"v": {"sum", "max"}},
+                    include_untouched=untouched,
+                ).select("g", "h", "__cnt", "__sum_v", "__max_v").collect()
+            )
+            assert got_p == want_p, (name, untouched, got_p)
+            want_m = Counter((*t, *sums[t]) for t in keep)
+            got_m = Counter(
+                tuple(r)
+                for r in minmax_delta_maintain(
+                    view, base_new, delta, ["g", "h"], "v",
+                    include_untouched=untouched,
+                ).select("g", "h", "n_rows", "sum_v", "min_v", "max_v")
+                .collect()
+            )
+            assert got_m == want_m, (name, untouched, got_m)

@@ -709,6 +709,40 @@ def test_change_feed_emits_evolved_column_only_update(spark):
     shutil.rmtree(root, ignore_errors=True)
 
 
+def test_read_version_merges_evolved_footers(spark):
+    """After an evolving merge, files of both widths sit side by side:
+    the evolved leaf is not the first one listed, and file scoping keeps
+    the evolved leaf's other file at the old width. The live read and
+    the change feed must still carry the evolved column."""
+    from pulsar_cdc_experiment_spark.plans.merge import (
+        change_feed,
+        read_version,
+    )
+
+    root = tempfile.mkdtemp(prefix="merge_rv_evo_")
+    _mk_table(spark, root, _base_rows())
+    # k=2 lives in p=c, the last leaf; only its row gains a tier
+    chg = spark.createDataFrame(
+        [(2, 2.0, "c", "gold", False)],
+        "k bigint, v double, p string, tier string, is_delete boolean",
+    )
+    merge_into(
+        spark, root, chg, keys=["k"], partition_col="p",
+        keep_history=True, evolve_schema=True,
+    )
+    live = read_version(spark, root, 1)
+    assert "tier" in live.columns
+    assert {
+        (r["k"], r["tier"]) for r in live.collect() if r["tier"]
+    } == {(2, "gold")}
+    ev = {
+        (r["k"], r["change_type"], r["tier"])
+        for r in change_feed(spark, root, 0, 1).collect()
+    }
+    assert ev == {(2, "update_pre", None), (2, "update_post", "gold")}
+    shutil.rmtree(root, ignore_errors=True)
+
+
 def test_touched_prune_predicate_exact_and_overflow_safe(spark):
     """touched_prune_predicate (round-13): selects EXACTLY the touched
     tuples (not the per-level cartesian product), survives a tuple count

@@ -1,8 +1,8 @@
-"""plans/merge file-level scoping + version retention (rounds 10-12):
+"""plans/merge file-level scoping + version retention:
 
-- file_scope: inside a touched partition, only files whose footer key
-  range can hold a changeset key are rewritten; the rest survive
-  byte-identical under their own names (hardlinked through the swap)
+- file_scope: inside a touched partition, only files holding a matched
+  changeset key are rewritten; the rest survive byte-identical under
+  their own names (hardlinked through the swap)
 - keep_history / rollback_last_merge / vacuum_merge_history: the
   .merge_history keep-N retention + Delta-RESTORE-style undo
 """
@@ -304,68 +304,122 @@ def test_read_version_rejects_future_and_vacuumed_gap(spark):
     shutil.rmtree(root, ignore_errors=True)
 
 
-def test_file_probe_plan_bucketed_no_nested_loop(spark):
-    """_file_probe_plan (round-13): integer-keyed file stats take the
-    bin-bucketed EQUI-join path — no BroadcastNestedLoopJoin anywhere in
-    the probe plan (the round-12 review's 10M-keys × 10k-files
-    10^11-comparison trap) — and the hit set is exactly the naive
-    range-intersection answer. String-keyed stats keep the bounded
-    fallback range join."""
-    from pulsar_cdc_experiment_spark.plans.merge import _file_probe_plan
+def _mk_interleaved_table(spark, root, leaves, per_leaf=8):
+    """Two files per leaf whose key ranges interleave: the even keys of
+    every leaf in one append, the odd keys in a second. Each append is
+    one task, so a leaf's even file shares its NAME with every other
+    leaf's even file (same for odd): only the (leaf, name) pair is
+    unique."""
+    cols = [f"c{i}" for i in range(len(leaves[0]))]
+    schema = "k bigint, v double, " + ", ".join(f"{c} string" for c in cols)
+    for parity in (0, 1):
+        rows = [
+            (k, float(k), *leaf)
+            for li, leaf in enumerate(leaves)
+            for k in range(li * per_leaf, (li + 1) * per_leaf)
+            if k % 2 == parity
+        ]
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+            "append"
+        ).partitionBy(*cols).parquet(root)
+    return cols
 
-    # 40 files with tight, partially overlapping int ranges
-    rows = [(f"p=a/f{i}", i * 10, i * 10 + 14) for i in range(40)]
-    src = spark.createDataFrame(
-        [(k,) for k in (5, 63, 199, 777, 2_000_000)], "k bigint"
+
+def _rows(spark, root):
+    return sorted(tuple(r) for r in spark.read.parquet(root).collect())
+
+
+def test_file_scope_exact_membership_keeps_interleaved_file(spark):
+    """Key ranges of the two files of one partition interleave (even and
+    odd keys over the same span), so a footer-range test must rewrite
+    both. Row membership rewrites only the file holding the key; the
+    other survives byte-identical."""
+    root = tempfile.mkdtemp(prefix="mscope_exact_")
+    _mk_interleaved_table(spark, root, [("a",)])
+    before = _files(root, "c0=a")
+    assert len(before) == 2
+    st0 = set(_rows(spark, root))
+    rep = merge_into(
+        spark, root,
+        spark.createDataFrame(
+            [(4, 400.0, "a", False)],
+            "k bigint, v double, c0 string, is_delete boolean",
+        ),
+        keys=["k"], partition_col="c0", file_scope_min_mb=0,
     )
-    plan_df = _file_probe_plan(spark, src, ["k"], rows)
-    plan = plan_df._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoop" not in plan, plan
-    got = {r["__path"] for r in plan_df.collect()}
-    want = {
-        path for path, lo, hi in rows
-        if any(lo <= k <= hi for k in (5, 63, 199, 777, 2_000_000))
+    assert rep["files_rewritten"] == 1 and rep["files_kept"] == 1, rep
+    after = _files(root, "c0=a")
+    assert len(set(before) & set(after)) == 1
+    assert set(_rows(spark, root)) == (st0 - {(4, 4.0, "a")}) | {
+        (4, 400.0, "a")
     }
-    assert got == want
+    shutil.rmtree(root, ignore_errors=True)
 
-    # degenerate domain (all files share one key value) — width floor
-    one = [(f"f{i}", 7, 7) for i in range(3)]
-    hit1 = {
-        r["__path"]
-        for r in _file_probe_plan(
-            spark, spark.createDataFrame([(7,), (8,)], "k bigint"),
-            ["k"], one,
-        ).collect()
+
+def _merge_jobs(spark, scope: bool) -> int:
+    root = tempfile.mkdtemp(prefix=f"mscope_jobs{int(scope)}_")
+    _mk_ranged_table(spark, root)
+    chg = _chg(spark, [(4, 7.0, "a", False), (15, 0.0, "b", True)])
+    tracker = spark.sparkContext.statusTracker()
+    group = f"mscope_jobs_{int(scope)}"
+    spark.sparkContext.setJobGroup(group, "audit")
+    rep = merge_into(
+        spark, root, chg, keys=["k"], partition_col="p",
+        file_scope=scope, file_scope_min_mb=0,
+    )
+    spark.sparkContext.setJobGroup(f"{group}_done", "")
+    assert rep["n_updated"] == 1 and rep["n_deleted"] == 1
+    n = len(tracker.getJobIdsForGroup(group))
+    shutil.rmtree(root, ignore_errors=True)
+    return n
+
+
+def test_file_scope_costs_no_extra_jobs(spark):
+    """File scoping rides the stats action's matched-key join: a scoped
+    merge submits no more Spark jobs than a partition-scoped one."""
+    jobs_off = _merge_jobs(spark, False)
+    jobs_on = _merge_jobs(spark, True)
+    assert jobs_on <= jobs_off, (jobs_on, jobs_off)
+
+
+def test_file_scope_maps_escaped_composite_leaves(spark):
+    """Composite layout whose partition values need escaping (``%``) or
+    carry a space: the (leaf, file name) pairs of the matched rows map
+    back to their live dirs. An update in one leaf and a drift across
+    both levels rewrite exactly the two files holding those keys — the
+    same-named files of the other leaf are kept — and leave no stale
+    twin."""
+    root = tempfile.mkdtemp(prefix="mscope_esc_")
+    l1, l2 = ("x y", "5%"), ("z%", "w v")
+    cols = _mk_interleaved_table(spark, root, [l1, l2])
+    d1, d2 = "c0=x y/c1=5%25", "c0=z%25/c1=w v"
+    assert os.path.isdir(os.path.join(root, d1))
+    assert os.path.isdir(os.path.join(root, d2))
+    before1, before2 = _files(root, d1), _files(root, d2)
+    st0 = set(_rows(spark, root))
+    # k=2 is in l1's even file; k=11 is in l2's odd file and moves to l1
+    chg = spark.createDataFrame(
+        [(2, 200.0, *l1, False), (11, 110.0, *l1, False)],
+        "k bigint, v double, c0 string, c1 string, is_delete boolean",
+    )
+    rep = merge_into(
+        spark, root, chg, keys=["k"], partition_col=cols,
+        file_scope_min_mb=0,
+    )
+    assert sorted(map(tuple, rep["touched"])) == [l1, l2]
+    assert rep["files_rewritten"] == 2 and rep["files_kept"] == 2, rep
+    odd1 = [f for f in before1 if f in _files(root, d1)]
+    even2 = [f for f in before2 if f in _files(root, d2)]
+    assert len(odd1) == 1 and len(even2) == 1
+    # the kept files are l1's odd and l2's even: their names are the
+    # names of the two rewritten files, swapped between the leaves
+    assert {odd1[0][0], even2[0][0]} == {f for f, _ in before1}
+    want = (st0 - {(2, 2.0, *l1), (11, 11.0, *l2)}) | {
+        (2, 200.0, *l1), (11, 110.0, *l1)
     }
-    assert hit1 == {"f0", "f1", "f2"}
-
-    # string key: falls back to the range join, same answer
-    srows = [("fa", "a", "f"), ("fb", "g", "m"), ("fc", "n", "z")]
-    ssrc = spark.createDataFrame([("c",), ("x",)], "k string")
-    sgot = {
-        r["__path"]
-        for r in _file_probe_plan(spark, ssrc, ["k"], srows).collect()
-    }
-    assert sgot == {"fa", "fc"}
-
-
-def test_file_probe_composite_key_bins_on_first_int_column(spark):
-    """Composite keys: the bin column is the FIRST key with integer
-    stats; the exact AND-of-ranges post-filter still applies to every
-    key column, so a file matching on k but not on k2 is NOT hit."""
-    from pulsar_cdc_experiment_spark.plans.merge import _file_probe_plan
-
-    rows = [
-        ("f0", 0, 9, 0, 4),      # k in [0,9], k2 in [0,4]
-        ("f1", 0, 9, 5, 9),      # k in [0,9], k2 in [5,9]
-        ("f2", 10, 19, 0, 9),
-    ]
-    src = spark.createDataFrame([(3, 7), (12, 2)], "k bigint, k2 bigint")
-    got = {
-        r["__path"]
-        for r in _file_probe_plan(spark, src, ["k", "k2"], rows).collect()
-    }
-    assert got == {"f1", "f2"}
+    assert set(_rows(spark, root)) == want
+    assert len(_rows(spark, root)) == len(want)
+    shutil.rmtree(root, ignore_errors=True)
 
 
 def test_purge_keys_erases_live_history_and_feed(spark):

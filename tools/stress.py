@@ -398,15 +398,16 @@ def main() -> None:
             _sh.rmtree(root, ignore_errors=True)
 
     def merge_file_scoped(n_rows):
-        """Round-12: FILE-level scoping measured. ONE partition holding
-        16 range-laid-out files (the layout a range/Z-order maintenance
-        pass produces); the changeset's keys all live inside one file's
-        range. file_scope=True rewrites the 1 intersecting file and
-        hardlinks the other 15 through the swap; file_scope=False
-        rewrites the partition's full 16 — the wall ratio is the
-        'rewrite cost ∝ intersecting files, not touched-partition
-        bytes' evidence in SCALE.md. Ideal asymptote 16x, shrunk
-        locally by the fixed discovery scan + footer probe."""
+        """FILE-level scoping measured. ONE partition holding 16
+        range-laid-out files (the layout a range/Z-order maintenance
+        pass produces); the changeset's keys all live inside one file.
+        file_scope=True rewrites exactly the files that hold a matched
+        key — the merge's own matched-key join names them, with no
+        footer probe — and hardlinks the rest through the swap;
+        file_scope=False rewrites the partition's full 16. The wall
+        ratio is the 'rewrite cost ∝ files holding changeset keys, not
+        touched-partition bytes' evidence in SCALE.md. Ideal asymptote
+        16x, shrunk locally by the fixed discovery scan."""
         import shutil as _sh
         import tempfile as _tf
 
@@ -658,74 +659,6 @@ def main() -> None:
             )
         finally:
             _sh.rmtree(os.path.dirname(root), ignore_errors=True)
-
-    def probe_bucketed(n_keys):
-        """Round-13: the merge file-intersection probe at adversarial
-        changeset × file counts. The stats side is synthetic (what
-        _file_key_ranges would emit for 10k touched files with tight
-        overlapping ranges); the changeset is n_keys integer keys. The
-        BUCKETED probe (_file_probe_plan) pays one hash shuffle on the
-        bin key; the pre-round-13 AND-of-ranges join is replayed inline
-        at a SMALLER size (it is the 10^11-comparison nested loop — at
-        the bucketed leg's full size it would not finish) and both are
-        normalized to keys/s so the asymptote gap is readable."""
-        from pulsar_cdc_experiment_spark.plans.merge import _file_probe_plan
-
-        n_files = 10_000
-        span = n_keys  # key domain = changeset domain
-        fw = max(1, span // n_files)
-        rows = [
-            (f"p/f{i}", i * fw, min(span, i * fw + 2 * fw))
-            for i in range(n_files)
-        ]
-        src = spark.range(n_keys).select((F.col("id") * 7 % span).alias("k"))
-        t0 = time.perf_counter()
-        nb = _file_probe_plan(spark, src, ["k"], rows).count()
-        bucketed_sec = time.perf_counter() - t0
-        assert nb > n_files * 0.9, nb  # every file range holds some key
-
-        # naive replay at 1/20 the keys and 1/5 the files (BNLJ cost is
-        # the product; full size is ~10^11 comparisons)
-        from pyspark.sql import types as T
-
-        small_files = rows[:: 5]
-        small_keys = spark.range(n_keys // 20).select(
-            (F.col("id") * 7 % span).alias("k")
-        )
-        stats = spark.createDataFrame(
-            small_files,
-            T.StructType([
-                T.StructField("__path", T.StringType()),
-                T.StructField("__lo_k", T.LongType()),
-                T.StructField("__hi_k", T.LongType()),
-            ]),
-        )
-        t0 = time.perf_counter()
-        small_keys.join(
-            stats,
-            (F.col("k") >= F.col("__lo_k")) & (F.col("k") <= F.col("__hi_k")),
-        ).select("__path").distinct().count()
-        naive_sec = time.perf_counter() - t0
-        results["probe_bucketed_vs_bnlj"] = {
-            "keys": n_keys,
-            "files": n_files,
-            "bucketed_sec": round(bucketed_sec, 2),
-            "bucketed_keys_per_sec": int(n_keys / bucketed_sec),
-            "naive_keys": n_keys // 20,
-            "naive_files": len(small_files),
-            "naive_sec": round(naive_sec, 2),
-            "naive_keys_per_sec": int((n_keys // 20) / naive_sec),
-            "throughput_ratio": round(
-                (n_keys / bucketed_sec) / ((n_keys // 20) / naive_sec), 1
-            ),
-        }
-        print(
-            json.dumps(
-                {"op": "probe_bucketed_vs_bnlj",
-                 **results["probe_bucketed_vs_bnlj"]}
-            ),
-            flush=True,
-        )
 
     def touched_pruning_wide(n_leaves):
         """Round-13 (r12 verdict #4 data point): Catalyst ANALYSIS cost
@@ -1071,8 +1004,6 @@ def main() -> None:
             _sh.rmtree(os.path.dirname(root), ignore_errors=True)
 
     s = args.scale
-    if args.only is not None and "probe_bucketed_vs_bnlj" in args.only:
-        probe_bucketed(int(10e6 * s))
     if args.only is not None and any(
         o.startswith("touched_pruning") for o in args.only
     ):
