@@ -68,6 +68,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.tables import _SCHEMA_CACHE, _cached_schema, listing_state
 from .layout import (
     MERGE_ASIDE as ASIDE,
 )
@@ -222,6 +223,17 @@ def merge_into(
     contract as any evolving parquet layout, and why this function's
     own target read and :func:`read_version` merge footers.
 
+    The target read's merged-footer schema is cached per visible file
+    listing (relpath, name, mtime and size of every data file; the
+    ``sources.tables`` schema cache under a ``merge::{root}`` key), so
+    only the first merge into a table, or one after any other writer
+    changed a file, runs the inference job. After publish the merge
+    seeds that slot with the new listing when it did not widen the
+    table and wrote files whose data columns equal the target's, names
+    and types; an evolving merge, a type-widening one, or one that
+    wrote no row leaves the slot, and the next merge infers. The slot
+    holds the schema only, never data.
+
     ``file_scope=True`` (default) narrows the rewrite INSIDE each
     touched partition to the data files that hold a matched key, as the
     stats action's matched-key join finds them (row membership, not
@@ -245,8 +257,7 @@ def merge_into(
     runs under :class:`plans.layout.maintenance_lock`, so a MERGE
     concurrent with another MERGE or a partition-scoped OPTIMIZE on the
     same root fails LOUD instead of sweeping the other's in-flight
-    staging/aside dirs (round-10 review: the lock existed but merge
-    never took it).
+    staging/aside dirs.
     """
     with maintenance_lock(root), job_label(spark, "merge.cow"):
         return _merge_into_unlocked(
@@ -293,21 +304,29 @@ def _merge_into_unlocked(
             "(null/empty partition values); merge_into does not support "
             "the hive default partition — repartition those rows first"
         )
-    # mergeSchema: a previously evolved table carries files of mixed
-    # width — the target schema is the union (a table format answers
-    # this from its catalog instead of footers). Partition type
-    # inference is disabled for THIS read only: merge bookkeeping keys
-    # partitions by their hive dir-name spelling (strings), and letting
-    # discovery re-type `p=0` as int would make touched-set values
-    # incomparable with the source's. Inference runs eagerly at read
-    # time, so restoring the conf immediately after is safe.
-    inf_conf = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    prev_inf = spark.conf.get(inf_conf, "true")
-    spark.conf.set(inf_conf, "false")
-    try:
-        target = spark.read.option("mergeSchema", "true").parquet(root)
-    finally:
-        spark.conf.set(inf_conf, prev_inf)
+    # The target schema is the union of the data files' footers
+    # (mergeSchema: a previously evolved table carries files of mixed
+    # width), kept in the schema cache per visible file listing, so a
+    # merge into a table no other writer changed since the last merge
+    # runs no inference job. Partition type inference is off for the
+    # inference read only: merge bookkeeping keys partitions by their
+    # hive dir-name spelling (strings), and letting discovery re-type
+    # `p=0` as int would make touched-set values incomparable with the
+    # source's. With the schema given, partition columns read as those
+    # same strings.
+    slot = f"merge::{root}"
+
+    def infer():
+        inf_conf = "spark.sql.sources.partitionColumnTypeInference.enabled"
+        prev_inf = spark.conf.get(inf_conf, "true")
+        spark.conf.set(inf_conf, "false")
+        try:
+            return spark.read.option("mergeSchema", "true").parquet(root).schema
+        finally:
+            spark.conf.set(inf_conf, prev_inf)
+
+    schema = _cached_schema(slot, listing_state(root), infer)
+    target = spark.read.schema(schema).parquet(root)
     data_cols = [c for c in target.columns if c not in pcols]
     missing = [
         c
@@ -333,12 +352,12 @@ def _merge_into_unlocked(
     for c in pcols:
         src = src.withColumn(c, F.col(c).cast("string"))
     src = src.select(*out_cols, F.col(delete_col).cast("boolean"))
-    # Materialize AND lineage-truncate the changeset (round-19, guide
-    # §3.3/§5): the stats collect and the staging write each re-analyzed
-    # the caller's full changeset lineage (often windowed ranked plans)
-    # under the previous persist(); the checkpoint pays the same one
-    # materialization and every later action plans against a bare
-    # ExistingRDD scan. O(changeset) rows, verb context (jobs fine).
+    # Materialize AND lineage-truncate the changeset: without it the
+    # stats collect and the staging write each re-analyze the caller's
+    # full changeset lineage (often windowed ranked plans); the
+    # checkpoint pays one materialization and every later action plans
+    # against a bare ExistingRDD scan. O(changeset) rows, verb context
+    # (jobs fine).
     src = src.localCheckpoint(eager=True)
     try:
         # -- guard + stats + touched discovery: one bounded-output
@@ -361,7 +380,7 @@ def _merge_into_unlocked(
             F.max(delete_col).alias("__del"),
             # NULL *or* empty-string IN ANY LEVEL: both land in the hive
             # default partition dir, whose name round-trips as a literal
-            # string and silently breaks the swap bookkeeping (round-9)
+            # string and silently breaks the swap bookkeeping
             F.max(null_part.cast("int")).alias("__np"),
             F.first(F.struct(*pcols)).alias("__sp"),
         )
@@ -445,7 +464,7 @@ def _merge_into_unlocked(
         # partitions only those files are rewritten; every other file
         # is kept byte-identical.
         kept: dict[tuple, list[str]] = {}
-        scoped: list[str] = []
+        scoped: list[tuple[tuple, str]] = []
         if file_scope:
             listed = set()
             for v in touched:
@@ -457,7 +476,7 @@ def _merge_into_unlocked(
                         continue
                     listed.add((v, fname))
                     if (v, fname) in matched_files:
-                        scoped.append(f"{live[v]}/{fname}")
+                        scoped.append((v, fname))
                     else:
                         kept.setdefault(v, []).append(fname)
             stray = sorted(matched_files - listed)
@@ -480,26 +499,21 @@ def _merge_into_unlocked(
             # no touched file holds a changeset key: only new rows land
             merged = src.filter(~F.col(delete_col)).select(*out_cols)
         else:
+            # flat touched-tuple predicate over the target read, whose
+            # file listing is already taken: literal isin terms prune
+            # directories statically; composite exactness comes from the
+            # joined-tuple membership term (touched_prune_predicate — the
+            # OR-of-ANDs shape stack-overflows past a few hundred touched
+            # leaves). File scoping adds the file name as one more level:
+            # its isin prunes files by name (a metadata filter, no
+            # listing job however many files are scoped), and the joined
+            # term keeps names repeated across leaves exact.
+            level_cols = [F.col(c) for c in pcols]
+            tuples = touched
             if file_scope:
-                # path-scoped read under the target's schema: no footer
-                # inference, and basePath keeps the partition columns as
-                # the string dir-name spellings the schema declares
-                old = (
-                    spark.read.schema(target.schema)
-                    .option("basePath", root)
-                    .parquet(*[os.path.join(root, p) for p in scoped])
-                )
-            else:
-                # flat touched-tuple predicate: literal isin terms prune
-                # directories statically; composite exactness comes from
-                # the joined-tuple membership term (touched_prune_predicate
-                # — the OR-of-ANDs shape stack-overflows past a few
-                # hundred touched leaves)
-                old = target.filter(
-                    touched_prune_predicate(
-                        [F.col(c) for c in pcols], sorted(touched)
-                    )
-                )
+                level_cols.append(F.col("_metadata.file_name"))
+                tuples = [(*v, f) for v, f in scoped]
+            old = target.filter(touched_prune_predicate(level_cols, tuples))
             merged = old.select(
                 *[c for c in out_cols if c in target.columns]
             ).join(src.select(*keys), keys, "left_anti").unionByName(
@@ -514,7 +528,8 @@ def _merge_into_unlocked(
         # file-size targets drive this instead)
         if file_scope:
             touched_bytes = sum(
-                os.path.getsize(os.path.join(root, p)) for p in scoped
+                os.path.getsize(os.path.join(root, live[v], f))
+                for v, f in scoped
             )
         else:
             touched_bytes = sum(
@@ -575,6 +590,9 @@ def _merge_into_unlocked(
         # -- publish: swap staged partitions in, remove touched partitions
         # the merge emptied (hidden-dir rename discipline throughout)
         staged = _part_dirs(staging, partition_col)
+        # a merge that wrote no row leaves only old files, whose footer
+        # union may be narrower than the target schema
+        wrote = bool(staged)
         deleted_parts = []
         consumed = set()
         n_kept = sum(len(fs) for fs in kept.values())
@@ -638,10 +656,9 @@ def _merge_into_unlocked(
                 # which recover_partition_swaps unconditionally DISCARDS.
                 # An ASIDE rename here would make a crash between the
                 # rename and the rmtree resurrect every deleted row on
-                # the next recovery sweep (round-10 review: the
-                # layout.py docstring claimed this fix before it
-                # existed; test_merge_crash_window_keeps_partition_deleted
-                # now pins it).
+                # the next recovery sweep
+                # (test_merge_crash_window_keeps_partition_deleted pins
+                # it).
                 tomb = os.path.join(
                     root, head, STAGING + "deleted_" + leaf
                 )
@@ -652,8 +669,8 @@ def _merge_into_unlocked(
                     shutil.rmtree(tomb, ignore_errors=True)
                 deleted_parts.append(v)
         # fail loud BEFORE deleting staging if any staged dir was never
-        # consumed — removing it would silently discard merged rows (the
-        # round-9-review '' data-loss mode; any future spelling mismatch
+        # consumed — removing it would silently discard merged rows (an
+        # ''-valued partition did that once; any spelling mismatch
         # between touched values and staged dir names lands here too)
         orphans = sorted(set(staged.values()) - consumed)
         if orphans:
@@ -664,11 +681,21 @@ def _merge_into_unlocked(
                 f"{staging})"
             )
         shutil.rmtree(staging, ignore_errors=True)
+        # seed the schema slot with the post-merge listing when inference
+        # would give back the target schema: the written files carry
+        # exactly the target's data columns and every other file was
+        # already part of the target
+        def data_fields(st):
+            return [(f.name, f.dataType) for f in st if f.name not in pcols]
+
+        if not extra and wrote and data_fields(merged.schema) == data_fields(
+            schema
+        ):
+            _SCHEMA_CACHE[slot] = (listing_state(root), schema)
 
         # _rep(): the documented report spelling (plain value for a
-        # single-level layout, value list for composite) — round-11
-        # review: the main return shipped raw tuples, which JSON
-        # round-trip as nested lists and broke every single-column caller
+        # single-level layout, value list for composite); raw tuples
+        # would JSON round-trip as nested lists
         report = {
             "touched": [_rep(v) for v in touched],
             "untouched": [_rep(v) for v in untouched],
@@ -910,25 +937,14 @@ def read_version(spark, root: str, as_of: int):
         if entry is not None:
             by_base.setdefault(entry[0], []).append(entry[1])
     parts = []
-    from ..sources.tables import _cached_schema
-
     for base, paths in sorted(by_base.items()):
         paths = sorted(paths)
         # schema-cached per (base, leaf set, file state): re-reading the
         # same retained version plans zero jobs (the fixture-reuse gate),
         # same discipline as sources.tables.read_dir
-        state = []
-        for p in paths:
-            for dirpath, dirnames, filenames in os.walk(p):
-                dirnames.sort()
-                for fn in sorted(filenames):
-                    if fn.startswith((".", "_")):
-                        continue
-                    fst = os.stat(os.path.join(dirpath, fn))
-                    state.append(
-                        (os.path.relpath(dirpath, base), fn,
-                         fst.st_mtime_ns, fst.st_size)
-                    )
+        state = tuple(
+            (os.path.relpath(p, base), listing_state(p)) for p in paths
+        )
         reader = spark.read.option("basePath", base)
         # cache key carries the LEAF SET: two reconstructions over the
         # same base with different leaf selections (e.g. change_feed's
@@ -939,7 +955,7 @@ def read_version(spark, root: str, as_of: int):
         # one leaf, and one footer would name only one width.
         schema = _cached_schema(
             f"{base}::as_of::{'|'.join(os.path.relpath(p, base) for p in paths)}",
-            tuple(state),
+            state,
             lambda b=base, ps=paths: (
                 spark.read.option("basePath", b)
                 .option("mergeSchema", "true")

@@ -43,7 +43,7 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # failing). Keyed per PATH with replace-on-change — keying on the state
 # itself would retain one dead entry (holding an entire directory
 # listing) per rewrite of a repeatedly-rebuilt fixture dir, unbounded
-# over a bench sweep (round-9 review).
+# over a bench sweep.
 _SCHEMA_CACHE: dict[str, tuple[object, T.StructType]] = {}
 
 
@@ -94,6 +94,37 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def _visible(name: str) -> bool:
+    # mirror Spark's shouldFilterOutPathName: '.'-prefixed and
+    # '_'-prefixed entries are metadata EXCEPT '_'-names carrying '=' —
+    # those are partition directories for '_'-prefixed partition columns
+    # (write_ivf_index's __ivf=N layout), and pruning them would make the
+    # listing content-blind for exactly the layouts it exists to keep
+    # fresh
+    if name.startswith("."):
+        return False
+    return not name.startswith("_") or "=" in name
+
+
+def listing_state(path: str) -> tuple:
+    """Freshness state of a directory's visible data files: the sorted
+    (relpath, name, mtime_ns, size) of every file Spark would list under
+    ``path``. The exact tuple is the state — folding it through a hash
+    would admit a collision serving a stale schema after an in-place
+    rewrite, for zero savings."""
+    entries = []
+    for dirpath, dirnames, filenames in os.walk(path):
+        # sorted traversal: the state must not depend on listdir order
+        dirnames[:] = sorted(d for d in dirnames if _visible(d))
+        for fn in sorted(filenames):
+            if not _visible(fn):
+                continue
+            fst = os.stat(os.path.join(dirpath, fn))
+            entries.append((os.path.relpath(dirpath, path), fn,
+                            fst.st_mtime_ns, fst.st_size))
+    return tuple(entries)
+
+
 def read_dir(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:
     """Schema-cached read of an arbitrary columnar directory (the fixture
     layouts the layout/ingest queries write). Same discipline as
@@ -101,40 +132,16 @@ def read_dir(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:
     explicitly so re-reading a session-cached fixture plans zero jobs
     (the fixture-reuse gate in tests/test_scale_plans.py).
 
-    The cache key folds in a recursive file-listing digest — (relpath,
-    mtime_ns, size) of every data file — not just the directory's own
-    stat: rewriting a data file IN PLACE changes no directory entry, so
-    a dir-stat key would serve a stale schema (r7 ADVICE). Local
-    fixture dirs are small, so the walk is microseconds; a 100 TB
-    deployment gets this freshness from its catalog instead."""
+    The cache key folds in the recursive file listing
+    (:func:`listing_state`) — (relpath, name, mtime_ns, size) of every
+    data file — not just the directory's own stat: rewriting a data file
+    IN PLACE changes no directory entry, so a dir-stat key would serve a
+    stale schema. Local fixture dirs are small, so the walk is
+    microseconds; a 100 TB deployment gets this freshness from its
+    catalog instead."""
     st = os.stat(path)
     if os.path.isdir(path):
-        def visible(name: str) -> bool:
-            # mirror Spark's shouldFilterOutPathName: '.'-prefixed and
-            # '_'-prefixed entries are metadata EXCEPT '_'-names carrying
-            # '=' — those are partition directories for '_'-prefixed
-            # partition columns (write_ivf_index's __ivf=N layout), and
-            # pruning them would make the digest content-blind for
-            # exactly the layouts it exists to keep fresh (round-8
-            # review)
-            if name.startswith("."):
-                return False
-            return not name.startswith("_") or "=" in name
-
-        entries = []
-        for dirpath, dirnames, filenames in os.walk(path):
-            # sorted traversal: the digest must not depend on listdir order
-            dirnames[:] = sorted(d for d in dirnames if visible(d))
-            for fn in sorted(filenames):
-                if not visible(fn):
-                    continue
-                fst = os.stat(os.path.join(dirpath, fn))
-                entries.append((os.path.relpath(dirpath, path), fn,
-                                fst.st_mtime_ns, fst.st_size))
-        # the exact entry tuple IS the freshness state — folding it
-        # through hash() would admit a 64-bit collision serving a stale
-        # schema after an in-place rewrite, for zero savings (r8 ADVICE)
-        state: object = (tuple(entries), st.st_size)
+        state: object = (listing_state(path), st.st_size)
     else:
         state = (st.st_mtime_ns, st.st_size)
     schema = _cached_schema(

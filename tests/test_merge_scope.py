@@ -15,6 +15,7 @@ import shutil
 import tempfile
 
 import pytest
+from pyspark.sql import functions as F
 
 from pulsar_cdc_experiment_spark.plans.merge import (
     merge_history,
@@ -23,6 +24,7 @@ from pulsar_cdc_experiment_spark.plans.merge import (
     rollback_last_merge,
     vacuum_merge_history,
 )
+from pulsar_cdc_experiment_spark.sources.tables import read_dir
 
 
 def _mk_ranged_table(spark, root):
@@ -356,30 +358,169 @@ def test_file_scope_exact_membership_keeps_interleaved_file(spark):
     shutil.rmtree(root, ignore_errors=True)
 
 
-def _merge_jobs(spark, scope: bool) -> int:
-    root = tempfile.mkdtemp(prefix=f"mscope_jobs{int(scope)}_")
-    _mk_ranged_table(spark, root)
-    chg = _chg(spark, [(4, 7.0, "a", False), (15, 0.0, "b", True)])
+def _jobs(spark, tag: str, fn):
+    """(result of ``fn()``, number of Spark jobs it submitted)."""
     tracker = spark.sparkContext.statusTracker()
-    group = f"mscope_jobs_{int(scope)}"
-    spark.sparkContext.setJobGroup(group, "audit")
-    rep = merge_into(
-        spark, root, chg, keys=["k"], partition_col="p",
-        file_scope=scope, file_scope_min_mb=0,
+    spark.sparkContext.setJobGroup(tag, "audit")
+    try:
+        out = fn()
+    finally:
+        spark.sparkContext.setJobGroup(f"{tag}_done", "")
+    return out, len(tracker.getJobIdsForGroup(tag))
+
+
+def _merge_jobs(spark, scope: bool, n_files: int = 0) -> int:
+    """Jobs of one merge into a fresh table: the 3-files-per-partition
+    ranged table, or (``n_files``) one partition of ``n_files`` files
+    with one updated key in each."""
+    root = tempfile.mkdtemp(prefix=f"mscope_jobs{int(scope)}_")
+    if n_files:
+        spark.range(0, 10 * n_files, 1, n_files).select(
+            "id", F.col("id").cast("double"), F.lit("a")
+        ).toDF("k", "v", "p").write.mode("overwrite").partitionBy("p").parquet(
+            root
+        )
+        assert len(_files(root, "p=a")) == n_files
+        chg = _chg(spark, [(10 * i, 7.0, "a", False) for i in range(n_files)])
+        want = (n_files, 0)
+    else:
+        _mk_ranged_table(spark, root)
+        chg = _chg(spark, [(4, 7.0, "a", False), (15, 0.0, "b", True)])
+        want = (1, 1)
+    rep, n = _jobs(
+        spark, f"mscope_jobs_{int(scope)}_{n_files}",
+        lambda: merge_into(
+            spark, root, chg, keys=["k"], partition_col="p",
+            file_scope=scope, file_scope_min_mb=0,
+        ),
     )
-    spark.sparkContext.setJobGroup(f"{group}_done", "")
-    assert rep["n_updated"] == 1 and rep["n_deleted"] == 1
-    n = len(tracker.getJobIdsForGroup(group))
+    assert (rep["n_updated"], rep["n_deleted"]) == want
+    if scope and n_files:
+        assert rep["files_rewritten"] == n_files
     shutil.rmtree(root, ignore_errors=True)
     return n
 
 
 def test_file_scope_costs_no_extra_jobs(spark):
     """File scoping rides the stats action's matched-key join: a scoped
-    merge submits no more Spark jobs than a partition-scoped one."""
-    jobs_off = _merge_jobs(spark, False)
-    jobs_on = _merge_jobs(spark, True)
-    assert jobs_on <= jobs_off, (jobs_on, jobs_off)
+    merge submits no more Spark jobs than a partition-scoped one, also
+    when it scopes more files than Spark lists without a job (32)."""
+    for n_files in (0, 40):
+        jobs_off = _merge_jobs(spark, False, n_files)
+        jobs_on = _merge_jobs(spark, True, n_files)
+        assert jobs_on <= jobs_off, (n_files, jobs_on, jobs_off)
+
+
+def _tiered(spark, rows):
+    return spark.createDataFrame(
+        rows, "k bigint, v double, tier string, p string, is_delete boolean"
+    )
+
+
+def _merge_k(spark, root, chg, tag: str, **kw):
+    return _jobs(
+        spark, tag,
+        lambda: merge_into(
+            spark, root, chg, keys=["k"], partition_col="p", **kw
+        ),
+    )
+
+
+def test_merge_schema_slot_saves_the_inference_job(spark):
+    """A merge seeds the target-schema slot with the table it leaves, so
+    the next merge into the unchanged table skips the footer-inference
+    job: one job fewer for the same changeset."""
+    root = tempfile.mkdtemp(prefix="mslot_warm_")
+    _mk_ranged_table(spark, root)
+    chg = _chg(spark, [(4, 7.0, "a", False)])
+    rep1, cold = _merge_k(spark, root, chg, "mslot_warm_1")
+    rep2, warm = _merge_k(spark, root, chg, "mslot_warm_2")
+    assert rep1["n_updated"] == rep2["n_updated"] == 1
+    assert warm == cold - 1, (cold, warm)
+    assert (4, 7.0, "a") in _state(spark, root)
+    shutil.rmtree(root, ignore_errors=True)
+
+
+def test_merge_schema_slot_reinfers_after_another_writer(spark):
+    """A file another writer adds between merges changes the listing the
+    slot is keyed on: the next merge infers again, and a wider file's
+    column is part of the target (the source may carry it without
+    ``evolve_schema``)."""
+    root = tempfile.mkdtemp(prefix="mslot_other_")
+    _mk_ranged_table(spark, root)
+    chg = _chg(spark, [(4, 7.0, "a", False)])
+    _merge_k(spark, root, chg, "mslot_other_1")
+    _r, warm = _merge_k(spark, root, chg, "mslot_other_2")
+    spark.createDataFrame([(100, 1.0, "a")], "k bigint, v double, p string") \
+        .coalesce(1).write.mode("append").partitionBy("p").parquet(root)
+    _r, after_same = _merge_k(spark, root, chg, "mslot_other_3")
+    assert after_same == warm + 1, (warm, after_same)
+    spark.createDataFrame(
+        [(200, 2.0, "gold", "b")], "k bigint, v double, tier string, p string"
+    ).coalesce(1).write.mode("append").partitionBy("p").parquet(root)
+    rep, _n = _merge_k(
+        spark, root,
+        _tiered(spark, [(15, 1.5, "silver", "b", False),
+                        (300, 3.0, None, "a", False)]),
+        "mslot_other_4",
+    )
+    assert rep["schema_evolved"] == []
+    assert (rep["n_updated"], rep["n_inserted"]) == (1, 1)
+    table = spark.read.option("mergeSchema", "true").parquet(root)
+    got = {r["k"]: r["tier"] for r in table.collect()}
+    assert got[15] == "silver" and got[200] == "gold" and got[300] is None
+    assert got[4] is None and len(got) == 33
+    shutil.rmtree(root, ignore_errors=True)
+
+
+def test_merge_schema_slot_keeps_the_evolved_column(spark):
+    """An evolving merge leaves the slot; the plain merge after it infers
+    the widened schema and seeds it, and the merges after that keep the
+    evolved column from the slot: their report and a ``read_dir`` of the
+    table agree."""
+    root = tempfile.mkdtemp(prefix="mslot_evolve_")
+    _mk_ranged_table(spark, root)
+    # whole-partition rewrite of both partitions: every file is wide, so
+    # read_dir's single-footer inference sees the column too
+    rep, _n = _merge_k(
+        spark, root,
+        _tiered(spark, [(4, 4.5, "gold", "a", False),
+                        (15, 1.5, "silver", "b", False)]),
+        "mslot_evolve_1", evolve_schema=True, file_scope=False,
+    )
+    assert rep["schema_evolved"] == ["tier"]
+    rep, cold = _merge_k(
+        spark, root, _tiered(spark, [(14, 1.4, "silver", "a", False)]),
+        "mslot_evolve_2",
+    )
+    assert rep["schema_evolved"] == [] and rep["n_updated"] == 1
+    rep, warm = _merge_k(
+        spark, root, _tiered(spark, [(6, 0.6, "bronze", "a", False)]),
+        "mslot_evolve_3",
+    )
+    assert rep["schema_evolved"] == [] and rep["n_updated"] == 1
+    assert warm == cold - 1, (cold, warm)
+    rep, _n = _merge_k(
+        spark, root,
+        _tiered(spark, [(8, 0.8, None, "a", False),
+                        (13, 0.0, None, "b", True),
+                        (1000, 10.0, "gold", "b", False)]),
+        "mslot_evolve_4",
+    )
+    assert rep["schema_evolved"] == [] and rep["touched"] == ["a", "b"]
+    assert (rep["n_updated"], rep["n_deleted"], rep["n_inserted"]) == (
+        1, 1, 1
+    )
+    table = read_dir(spark, root)
+    assert table.columns == ["k", "v", "tier", "p"]
+    got = {r["k"]: (r["v"], r["tier"], r["p"]) for r in table.collect()}
+    assert len(got) == 30 - rep["n_deleted"] + rep["n_inserted"]
+    assert 13 not in got
+    assert got[4] == (4.5, "gold", "a") and got[15] == (1.5, "silver", "b")
+    assert got[14] == (1.4, "silver", "a") and got[6] == (0.6, "bronze", "a")
+    assert got[8] == (0.8, None, "a") and got[1000] == (10.0, "gold", "b")
+    assert got[2] == (2.0, None, "a") and got[21] == (21.0, None, "b")
+    shutil.rmtree(root, ignore_errors=True)
 
 
 def test_file_scope_maps_escaped_composite_leaves(spark):
@@ -542,16 +683,15 @@ def _purge_jobs(spark, n_leaves: int, tag: str) -> int:
             spark, root, chg, keys=["k"], partition_col="p",
             keep_history=True,
         )
-    tracker = spark.sparkContext.statusTracker()
-    spark.sparkContext.setJobGroup(f"purge_jobs_{tag}", "audit")
-    rep = purge_keys(
-        spark, root,
-        spark.createDataFrame([(999_999,)], "k bigint"),
-        keys=["k"], partition_col="p",
+    rep, n = _jobs(
+        spark, f"purge_jobs_{tag}",
+        lambda: purge_keys(
+            spark, root,
+            spark.createDataFrame([(999_999,)], "k bigint"),
+            keys=["k"], partition_col="p",
+        ),
     )
-    spark.sparkContext.setJobGroup(f"purge_jobs_{tag}_done", "")
     assert rep["versions_scrubbed"] == []
-    n = len(tracker.getJobIdsForGroup(f"purge_jobs_{tag}"))
     shutil.rmtree(root, ignore_errors=True)
     return n
 

@@ -1,10 +1,20 @@
-"""``prepare_session`` reports every conf a session refuses."""
+"""Session conventions: ``prepare_session`` reports every conf a session
+refuses; ``get_spark`` sessions build plans without per-call call-site
+capture."""
 
 from __future__ import annotations
 
+import gc
+import os
+import tempfile
 import warnings
 
+from py4j.java_gateway import GatewayClient
+
+from pulsar_cdc_experiment_spark.pipeline import CdcPipeline
 from pulsar_cdc_experiment_spark.session import RUNTIME_CONF, prepare_session
+
+from .fixtures_cdc import sample_json_lines
 
 
 class _Conf:
@@ -46,3 +56,37 @@ def test_prepare_session_is_silent_when_every_conf_sets():
         prepare_session(spark)
     assert not [w for w in caught if w.category is RuntimeWarning]
     assert spark.conf.values == RUNTIME_CONF
+
+
+def test_get_spark_turns_off_call_site_capture(spark):
+    assert (
+        spark.conf.get("spark.python.sql.dataFrameDebugging.enabled")
+        == "false"
+    )
+
+
+def test_enriched_json_plan_round_trip_budget(spark, monkeypatch):
+    """Building the enrichment plan of a small feed stays within 500 py4j
+    round trips; with call-site capture on it makes about 1,800."""
+    feed = tempfile.mkdtemp(prefix="cdc_rt_feed_")
+    with open(os.path.join(feed, "000.jsonl"), "w") as f:
+        f.write("\n".join(sample_json_lines()))
+    pipe = CdcPipeline({"source": {"path": feed}})
+    calls = []
+    send = GatewayClient.send_command
+
+    def counted(self, *args, **kwargs):
+        calls.append(1)
+        return send(self, *args, **kwargs)
+
+    # collect earlier tests' garbage first and hold the cycle collector
+    # off while counting: freeing an old py4j proxy sends a command too
+    gc.collect()
+    gc.disable()
+    monkeypatch.setattr(GatewayClient, "send_command", counted)
+    try:
+        pipe.enriched_json(spark, streaming=False)
+    finally:
+        monkeypatch.undo()
+        gc.enable()
+    assert 0 < len(calls) <= 500, len(calls)
