@@ -355,7 +355,8 @@ def _group_join(
     """``left.join(right, on, how)`` with NULL-safe equality on the group
     columns: a NULL group value is one group, as ``groupBy`` makes it.
     Full outer output carries one coalesced copy of each ``on`` column
-    (the shape of a USING join); semi joins keep ``left``'s columns."""
+    (the shape of a USING join); semi and anti joins keep ``left``'s
+    columns."""
     rk = {c: f"__rk_{i}" for i, c in enumerate(on)}
     rest = [c for c in right.columns if c not in rk]
     r = right.select(*[F.col(c).alias(rk[c]) for c in on], *rest)
@@ -363,7 +364,7 @@ def _group_join(
     for c in on:
         cond = cond & F.col(c).eqNullSafe(F.col(rk[c]))
     j = left.join(r, cond, how)
-    if how == "left_semi":
+    if how in ("left_semi", "left_anti"):
         return j
     return j.select(
         *[F.coalesce(F.col(c), F.col(rk[c])).alias(c) for c in on],

@@ -556,6 +556,7 @@ def scrub_mv_groups(
                 f"scrub columns must be a non-empty subset of the MV's "
                 f"group columns {man['group_cols']}; got {cols}"
             )
+        from ..operators.materialize import _group_join
         from .mor import _read_cached
 
         if "mor_root" in man:
@@ -590,8 +591,10 @@ def scrub_mv_groups(
         _sweep_mv(d, man)
         data = _read_cached(spark, _data_dir(d, man))
         keys = group_rows.distinct()
-        n = data.join(keys, cols, "left_semi").count()
-        out = data.join(keys, cols, "left_anti")
+        # NULL-safe: a scrub row with a NULL group value reaches the
+        # MV's NULL group (a USING join would never match it)
+        n = _group_join(data, keys, cols, "left_semi").count()
+        out = _group_join(data, keys, cols, "left_anti")
         # source_token = the state captured when the fact-side purge
         # finished (for MoR sources, the post-purge manifest): a second
         # mutation landing mid-scrub must not be stamped over — checked
@@ -1164,84 +1167,47 @@ def _pick_plain_mv(
     return _best_candidate(candidates) if candidates else None
 
 
-def answer_rollup_aggregate(
-    spark: SparkSession,
-    mv_root: str,
-    source: DataFrame,
-    source_path: str,
-    *,
-    group_cols: Sequence[str],
-    aggs: dict,
-    where: Sequence | None = None,
-    derived: dict | None = None,
-) -> tuple[DataFrame, str | None]:
-    """Plan ``source.rollup(group_cols).agg(aggs)`` — the hierarchy of
-    grouping sets ``(c₁..cₙ), (c₁..cₙ₋₁), …, ()`` with NULL markers in
-    the rolled-away columns, Spark/ANSI ROLLUP semantics — served
-    ENTIRELY from a materialized view when one subsumes the FINEST set
-    (subsuming the finest set subsumes every coarser one by
-    construction, so the decision is all-or-nothing: one candidate
-    check, n+1 KB-scale serves unioned). Falls back to the base's
-    native ``rollup`` otherwise. Returns ``(df, mv_name | None)``.
-
-    The grand-total row and every intermediate level derive from the
-    SAME stored partials (sum of sums, min of mins, non-null-count
-    folds for avg), so a wrong partial shifts every level consistently
-    — and the whole cube costs n+1 reads of a KB summary instead of
-    one pass over the 100 TB fact with n+1-way row replication (what a
-    native ROLLUP execution does). NULL markers assume non-null group
-    values (the ANSI ROLLUP ambiguity; Spark's GROUPING__ID exists for
-    data-borne NULLs — MV group columns are dimension keys in
-    practice)."""
-    group_cols = list(group_cols)
-    sets = [group_cols[:i] for i in range(len(group_cols), -1, -1)]
-    return _answer_sets(
-        spark, mv_root, source, source_path,
-        group_cols=group_cols, sets=sets, aggs=aggs, where=where,
-        derived=derived, native="rollup",
-    )
+#: Above this many grouping sets the per-set union's PLANNING cost
+#: outgrows the native Expand (a 7-column cube is 128 union branches),
+#: so every grouping server answers natively before any MV lookup.
+_MAX_SERVED_SETS = 64
 
 
-def answer_cube_aggregate(
-    spark: SparkSession,
-    mv_root: str,
-    source: DataFrame,
-    source_path: str,
-    *,
-    group_cols: Sequence[str],
-    aggs: dict,
-    where: Sequence | None = None,
-    derived: dict | None = None,
-) -> tuple[DataFrame, str | None]:
-    """Plan ``source.cube(group_cols).agg(aggs)`` — ALL 2ⁿ grouping
-    sets — served entirely from a materialized view when one subsumes
-    the full column set (every subset is then subsumed by
-    construction). Same mechanics and caveats as
-    :func:`answer_rollup_aggregate`; the native fallback is the base's
-    ``cube``. A 2ⁿ-way union of KB-scale summary reads replaces a fact
-    pass with 2ⁿ-way Expand row replication — the cube's exponential
-    blow-up lands on the SMALL relation."""
-    group_cols = list(group_cols)
-    if len(group_cols) > 6:
-        # 2ⁿ union branches explode PLANNING cost past ~64 sets; a
-        # cube this wide is better served by the native Expand even
-        # when an MV subsumes it
-        base = _with_derived(source, _norm_derived(derived))
-        for term in _norm_where(where):
-            base = base.filter(_where_expr(term))
-        return base.cube(*group_cols).agg(*_base_agg_exprs(aggs)), None
+def rollup_sets(cols: Sequence[str]) -> list[list[str]]:
+    """``ROLLUP(cols)`` as grouping sets: the prefixes, finest first —
+    ``(c₁..cₙ), (c₁..cₙ₋₁), …, ()``."""
+    cols = list(cols)
+    return [cols[:i] for i in range(len(cols), -1, -1)]
+
+
+def cube_sets(cols: Sequence[str]) -> list[list[str]]:
+    """``CUBE(cols)`` as grouping sets: all 2ⁿ subsets, finest first
+    (the routing probe), then by decreasing arity."""
+    cols = list(cols)
     sets = [
-        [c for i, c in enumerate(group_cols) if not (mask >> i) & 1]
-        for mask in range(2 ** len(group_cols))
+        [c for i, c in enumerate(cols) if not (mask >> i) & 1]
+        for mask in range(2 ** len(cols))
     ]
-    # deterministic order: finest first (the routing probe), then by
-    # decreasing arity
-    sets = sorted(sets, key=lambda s: (-len(s), s))
-    return _answer_sets(
-        spark, mv_root, source, source_path,
-        group_cols=group_cols, sets=sets, aggs=aggs, where=where,
-        derived=derived, native="cube",
-    )
+    return sorted(sets, key=lambda s: (-len(s), s))
+
+
+def _finest_set(sets) -> tuple[list, list]:
+    """Normalize ``sets`` and derive the GROUP BY columns: their ordered
+    union, the finest set, which subsumes every requested one."""
+    sets = [list(s) for s in sets]
+    return list(dict.fromkeys(c for s in sets for c in s)), sets
+
+
+def _base_sets(
+    base: DataFrame, group_cols: list, sets: list, aggs: dict,
+    where: list, derived: dict,
+) -> DataFrame:
+    """The grouping servers' fallback: one native ``groupingSets`` pass
+    over the derived, filtered base (|sets|-way Expand replication)."""
+    base = _with_derived(base, derived)
+    for term in where:
+        base = base.filter(_where_expr(term))
+    return base.groupingSets(sets, *group_cols).agg(*_base_agg_exprs(aggs))
 
 
 def answer_grouping_sets(
@@ -1250,89 +1216,50 @@ def answer_grouping_sets(
     source: DataFrame,
     source_path: str,
     *,
-    group_cols: Sequence[str],
     sets: Sequence[Sequence[str]],
     aggs: dict,
     where: Sequence | None = None,
     derived: dict | None = None,
 ) -> tuple[DataFrame, str | None]:
-    """Plan ``GROUP BY GROUPING SETS (sets)`` — arbitrary requested
-    sets over ``group_cols``, ANSI NULL markers in each set's
-    rolled-away columns — served from a materialized view when one
-    subsumes the UNION of all set columns (then every individual set
-    is subsumed). The third sibling of
-    :func:`answer_rollup_aggregate` / :func:`answer_cube_aggregate`:
-    rollup and cube are the prefix-chain and power-set special cases.
-    Falls back to the base's native ``groupingSets`` (one pass,
-    |sets|-way Expand replication). Every set must be a subset of
-    ``group_cols``; sets are served in the given order."""
-    group_cols = list(group_cols)
-    sets = [list(s) for s in sets]
-    for s in sets:
-        bad = [c for c in s if c not in group_cols]
-        if bad:
-            raise ValueError(
-                f"grouping set {s} has column(s) {bad} outside "
-                f"group_cols {group_cols}"
-            )
-    return _answer_sets(
-        spark, mv_root, source, source_path,
-        group_cols=group_cols, sets=sets, aggs=aggs, where=where,
-        derived=derived, native="groupingSets",
-    )
+    """Plan ``GROUP BY GROUPING SETS (sets)`` over ``source`` — ANSI
+    NULL markers in each set's rolled-away columns, sets served in the
+    given order; ``rollup_sets(cols)`` / ``cube_sets(cols)`` spell
+    ROLLUP and CUBE. The output's group columns are the sets' ordered
+    union; ``where`` / ``derived`` as in :func:`answer_aggregate`.
 
-
-def _answer_sets(
-    spark: SparkSession,
-    mv_root: str,
-    source: DataFrame,
-    source_path: str,
-    *,
-    group_cols: list,
-    sets: list,
-    aggs: dict,
-    where,
-    native: str,
-    derived: dict | None = None,
-) -> tuple[DataFrame, str | None]:
-    """Shared rollup/cube/grouping-sets server: resolve the winning MV
-    ONCE for the FINEST possible set (all of ``group_cols`` — subsuming
-    it subsumes every requested set by construction) and serve every
-    set from that PINNED manifest; else fall back to the base's native
-    rollup/cube/groupingSets (one pass, Expand replication). Pinning
-    (round-16 advice) makes planning O(sets) with a single MV listing
-    and a single fingerprint check, and guarantees every level is
-    computed from the SAME stored partials — never a mix of MV- and
-    base-served levels from different source states."""
+    Served ENTIRELY from a materialized view when one subsumes the
+    FINEST possible set (that union) — that subsumes every requested
+    set, so the decision is all-or-nothing. The winning
+    manifest is resolved ONCE and pinned for every set: one MV listing,
+    one fingerprint check, and every level rolls up from the SAME
+    stored partials (sum of sums, min of mins, avg as sum-partial over
+    non-null-count partial) — never a mix of MV- and base-served levels
+    from different source states. Each level reads a KB-scale summary
+    instead of a fact pass with |sets|-way Expand replication. NULL
+    markers assume non-null group values (the ANSI ambiguity
+    GROUPING__ID resolves). Falls back to the base's native
+    ``groupingSets`` — also, before any MV lookup, for more than
+    ``_MAX_SERVED_SETS`` sets. Returns ``(df, mv_name | None)``."""
+    group_cols, sets = _finest_set(sets)
+    aggs = dict(aggs)
     where = _norm_where(where)
     derived = _norm_derived(derived)
-    need, pred_need = _resolve_group_requirements(
-        group_cols, where, derived
-    )
-    man = _pick_plain_mv(mv_root, source_path, need, pred_need, aggs)
+    man = None
+    if len(sets) <= _MAX_SERVED_SETS:
+        need, pred_need = _resolve_group_requirements(
+            group_cols, where, derived
+        )
+        man = _pick_plain_mv(mv_root, source_path, need, pred_need, aggs)
     if man is None:
-        base = _with_derived(source, derived)
-        for term in where:
-            base = base.filter(_where_expr(term))
-        return _native_sets(base, native, sets, group_cols, aggs), None
+        return _base_sets(
+            source, group_cols, sets, aggs, where, derived
+        ), None
     return (
         _serve_sets_pinned(
             spark, mv_root, man, group_cols, sets, aggs, where, derived
         ),
         man["name"],
     )
-
-
-def _native_sets(
-    base: DataFrame, native: str, sets: list, group_cols: list, aggs: dict
-) -> DataFrame:
-    """Base fallback for the grouping-construct servers: one pass over
-    the (filtered) base with native Expand replication."""
-    if native == "groupingSets":
-        return base.groupingSets(sets, *group_cols).agg(
-            *_base_agg_exprs(aggs)
-        )
-    return getattr(base, native)(*group_cols).agg(*_base_agg_exprs(aggs))
 
 
 def _serve_sets_pinned(
@@ -1370,10 +1297,10 @@ def _serve_sets_from_partials(
 ) -> DataFrame:
     """The grouping-construct union over an ARBITRARY partials
     DataFrame — the stored generation (pinned serve) or the live
-    ``stored ⊕ unapplied-feed`` compose (round-18 lambda hierarchies).
-    Taking the partials as a plan guarantees every level rolls up from
-    the IDENTICAL source state: one manifest pin and (for the live
-    path) ONE unapplied-span cut per REQUEST — levels can never mix a
+    ``stored ⊕ unapplied-feed`` compose (live hierarchies). Taking the
+    partials as a plan guarantees every level rolls up from the
+    IDENTICAL source state: one manifest pin and (for the live path)
+    ONE unapplied-span cut per REQUEST — levels can never mix a
     pre-merge grand total with post-merge leaves."""
     finest = _rollup_partials(
         partials, man, group_cols, aggs, where, derived
@@ -1424,33 +1351,38 @@ def pruned_star_base(
     by the optimizer, so without this the risky recompute re-pays the
     FULL star join even for one risky group.
 
-    Per side, sound superset filters: each dim is semi-joined on
-    whatever subset of the group columns it carries (a dim row whose
-    group components match no risky tuple can contribute no risky
-    joined row); the fact is semi-joined on its own group-column subset
-    and then on each pruned dim's join keys (an inner-join fact row
-    whose dim partner was pruned cannot survive). The exactness
-    semi-join on the FULL group tuple still runs downstream in
-    ``mv_partial_delta_maintain``. Net: the recompute collapses to a
-    filtered scan + joins against risky-sized dim slices — at 100 TB
-    the difference between "one group recomputes" and "the star join
-    re-runs". ``dims``: ``[(dim_df, on_cols), ...]`` in join order."""
+    Per side, sound superset filters, every group-column semi-join
+    NULL-safe (a NULL group value is one group, as in the fold): each
+    dim is semi-joined on whatever subset of the group columns it
+    carries (a dim row whose group components match no risky tuple
+    can contribute no risky joined row); the fact is semi-joined on its
+    own group-column subset and then on each pruned dim's join keys (an
+    inner-join fact row whose dim partner was pruned cannot survive).
+    The exactness semi-join on the FULL group tuple still runs
+    downstream in ``mv_partial_delta_maintain``. Net: the recompute
+    collapses to a filtered scan + joins against risky-sized dim slices
+    — at 100 TB the difference between "one group recomputes" and "the
+    star join re-runs". ``dims``: ``[(dim_df, on_cols), ...]`` in join
+    order."""
+    from ..operators.materialize import _group_join
+
     group_cols = list(group_cols)
 
     def build(risky_keys: DataFrame) -> DataFrame:
         f = fact
         gf = [c for c in group_cols if c in fact.columns]
         if gf:
-            f = f.join(
-                risky_keys.select(*gf).distinct(), gf, "left_semi"
+            f = _group_join(
+                f, risky_keys.select(*gf).distinct(), gf, "left_semi"
             )
         pruned = []
         for dim, on in dims:
             on = list(on)
             gd = [c for c in group_cols if c in dim.columns]
             d2 = (
-                dim.join(
-                    risky_keys.select(*gd).distinct(), gd, "left_semi"
+                _group_join(
+                    dim, risky_keys.select(*gd).distinct(), gd,
+                    "left_semi",
                 )
                 if gd
                 else dim
@@ -1617,72 +1549,6 @@ def _pick_join_mv(
     return _best_candidate(candidates) if candidates else None
 
 
-def answer_join_rollup_aggregate(
-    spark: SparkSession,
-    mv_root: str,
-    fact: DataFrame,
-    fact_path: str,
-    dims: Sequence[tuple],
-    *,
-    group_cols: Sequence[str],
-    aggs: dict,
-    where: Sequence | None = None,
-    derived: dict | None = None,
-) -> tuple[DataFrame, str | None]:
-    """Plan ``(fact ⋈ dims).rollup(group_cols).agg(aggs)`` served
-    ENTIRELY from a subsuming fresh join MV when one exists (round 17
-    — the BI-dashboard hierarchy shape, e.g. TPC-H Q5's revenue by
-    nation→region: every level of the hierarchy reads the KB summary,
-    never re-running the star join; a native rollup over the base
-    replicates every JOINED fact row n+1 ways). Falls back to the base
-    join's native ``rollup``. Same all-or-nothing decision as
-    :func:`answer_rollup_aggregate`: subsuming the finest set subsumes
-    every coarser one, and the pinned manifest serves all levels from
-    the same stored partials."""
-    group_cols = list(group_cols)
-    sets = [group_cols[:i] for i in range(len(group_cols), -1, -1)]
-    return _answer_join_sets(
-        spark, mv_root, fact, fact_path, dims,
-        group_cols=group_cols, sets=sets, aggs=aggs, where=where,
-        native="rollup", derived=derived,
-    )
-
-
-def answer_join_cube_aggregate(
-    spark: SparkSession,
-    mv_root: str,
-    fact: DataFrame,
-    fact_path: str,
-    dims: Sequence[tuple],
-    *,
-    group_cols: Sequence[str],
-    aggs: dict,
-    where: Sequence | None = None,
-    derived: dict | None = None,
-) -> tuple[DataFrame, str | None]:
-    """Plan ``(fact ⋈ dims).cube(group_cols).agg(aggs)`` served from a
-    subsuming fresh join MV — all 2ⁿ grouping sets as KB summary reads
-    instead of a star join with 2ⁿ-way Expand replication. Same ≤6
-    column planning-cost cap as :func:`answer_cube_aggregate` (wider
-    cubes take the native Expand even when an MV subsumes them)."""
-    group_cols = list(group_cols)
-    if len(group_cols) > 6:
-        base = _with_derived(_join_all(fact, dims), _norm_derived(derived))
-        for term in _norm_where(where):
-            base = base.filter(_where_expr(term))
-        return base.cube(*group_cols).agg(*_base_agg_exprs(aggs)), None
-    sets = [
-        [c for i, c in enumerate(group_cols) if not (mask >> i) & 1]
-        for mask in range(2 ** len(group_cols))
-    ]
-    sets = sorted(sets, key=lambda s: (-len(s), s))
-    return _answer_join_sets(
-        spark, mv_root, fact, fact_path, dims,
-        group_cols=group_cols, sets=sets, aggs=aggs, where=where,
-        native="cube", derived=derived,
-    )
-
-
 def answer_join_grouping_sets(
     spark: SparkSession,
     mv_root: str,
@@ -1690,64 +1556,36 @@ def answer_join_grouping_sets(
     fact_path: str,
     dims: Sequence[tuple],
     *,
-    group_cols: Sequence[str],
     sets: Sequence[Sequence[str]],
     aggs: dict,
     where: Sequence | None = None,
     derived: dict | None = None,
 ) -> tuple[DataFrame, str | None]:
-    """Plan ``GROUP BY GROUPING SETS (sets)`` over a star join served
-    from a subsuming fresh join MV — arbitrary requested sets, ANSI
-    NULL markers, served in the given order. Every set must be a
-    subset of ``group_cols``."""
-    group_cols = list(group_cols)
-    sets = [list(s) for s in sets]
-    for s in sets:
-        bad = [c for c in s if c not in group_cols]
-        if bad:
-            raise ValueError(
-                f"grouping set {s} has column(s) {bad} outside "
-                f"group_cols {group_cols}"
-            )
-    return _answer_join_sets(
-        spark, mv_root, fact, fact_path, dims,
-        group_cols=group_cols, sets=sets, aggs=aggs, where=where,
-        native="groupingSets", derived=derived,
-    )
-
-
-def _answer_join_sets(
-    spark: SparkSession,
-    mv_root: str,
-    fact: DataFrame,
-    fact_path: str,
-    dims: Sequence[tuple],
-    *,
-    group_cols: list,
-    sets: list,
-    aggs: dict,
-    where,
-    native: str,
-    derived: dict | None = None,
-) -> tuple[DataFrame, str | None]:
-    """Join-MV sibling of :func:`_answer_sets`: pick the winning join
-    MV once (same topology, finest-set subsumption, every fingerprint
-    fresh), serve every grouping set from the pinned manifest via the
-    SAME set-server the plain path uses (serving only reads the
-    summary); fall back to the base star join's native construct."""
+    """:func:`answer_grouping_sets` over the STAR JOIN ``fact ⋈ dims``
+    (``dims``: ``[(dim_df, dim_path, on_cols), ...]``): every set is
+    served from ONE pinned join MV with the same topology, finest-set
+    subsumption and EVERY source fingerprint fresh
+    (:func:`_pick_join_mv`) — the BI-dashboard hierarchy shape, e.g.
+    TPC-H Q5's revenue by nation→region, where the join never re-runs
+    and a native construct would replicate every JOINED fact row
+    |sets| ways. Falls back to the base star join's native
+    ``groupingSets``."""
+    group_cols, sets = _finest_set(sets)
+    aggs = dict(aggs)
     where = _norm_where(where)
     derived = _norm_derived(derived)
-    need, pred_need = _resolve_group_requirements(
-        group_cols, where, derived
-    )
-    man = _pick_join_mv(
-        mv_root, fact_path, dims, need, pred_need, dict(aggs)
-    )
+    man = None
+    if len(sets) <= _MAX_SERVED_SETS:
+        need, pred_need = _resolve_group_requirements(
+            group_cols, where, derived
+        )
+        man = _pick_join_mv(
+            mv_root, fact_path, dims, need, pred_need, aggs
+        )
     if man is None:
-        base = _with_derived(_join_all(fact, dims), derived)
-        for term in where:
-            base = base.filter(_where_expr(term))
-        return _native_sets(base, native, sets, group_cols, aggs), None
+        return _base_sets(
+            _join_all(fact, dims), group_cols, sets, aggs, where, derived
+        ), None
     return (
         _serve_sets_pinned(
             spark, mv_root, man, group_cols, sets, aggs, where, derived
@@ -2516,78 +2354,13 @@ def _live_join_partials(
 
 
 # ---------------------------------------------------------------------------
-# Live grouping constructs (round 18): ROLLUP / CUBE / GROUPING SETS
-# served from a STALE MoR-bound MV via the lambda compose — the
-# real-time-dashboard-hierarchy shape. One manifest pin + ONE
-# unapplied-span cut per REQUEST feeds every level, so a hierarchy can
-# never mix a pre-merge grand total with post-merge leaves (the same
-# pinning discipline _serve_sets_pinned applies to the fresh path).
+# Live grouping sets: hierarchies served from a STALE MoR-bound MV via
+# the lambda compose — the real-time-dashboard-hierarchy shape. One
+# manifest pin + ONE unapplied-span cut per REQUEST feeds every level,
+# so a hierarchy can never mix a pre-merge grand total with post-merge
+# leaves (the pinning discipline _serve_sets_pinned applies to the
+# fresh path).
 # ---------------------------------------------------------------------------
-
-
-def answer_rollup_aggregate_live(
-    spark: SparkSession,
-    mv_root: str,
-    name: str,
-    project,
-    *,
-    group_cols: Sequence[str],
-    aggs: dict,
-    where: Sequence | None = None,
-    derived: dict | None = None,
-    checkpoint_compose: bool = True,
-) -> tuple[DataFrame, str | None]:
-    """ROLLUP served live from a possibly-stale MoR-bound MV: the
-    prefix-chain grouping sets, every level rolled up from the SAME
-    :func:`_live_partials` compose (stored partials ⊕ unapplied feed
-    span, lazily). Mode contract as :func:`answer_aggregate_live`;
-    the ``None`` fallback is the CURRENT table's native ``rollup``.
-    ``checkpoint_compose=False`` opts out of the compose's lazy
-    localCheckpoint (recomputable lineage, per-level re-scan cost —
-    see :func:`_answer_sets_live`)."""
-    group_cols = list(group_cols)
-    sets = [group_cols[:i] for i in range(len(group_cols), -1, -1)]
-    return _answer_sets_live(
-        spark, mv_root, name, project,
-        group_cols=group_cols, sets=sets, aggs=aggs, where=where,
-        derived=derived, native="rollup",
-        checkpoint_compose=checkpoint_compose,
-    )
-
-
-def answer_cube_aggregate_live(
-    spark: SparkSession,
-    mv_root: str,
-    name: str,
-    project,
-    *,
-    group_cols: Sequence[str],
-    aggs: dict,
-    where: Sequence | None = None,
-    derived: dict | None = None,
-    checkpoint_compose: bool = True,
-) -> tuple[DataFrame, str | None]:
-    """CUBE served live from a possibly-stale MoR-bound MV — all 2ⁿ
-    sets from ONE live compose. Same >6-column planning guard as the
-    pinned server (2ⁿ union branches explode planning cost; a cube
-    that wide goes to the native Expand over the current state)."""
-    group_cols = list(group_cols)
-    if len(group_cols) > 6:
-        return _native_sets_live_fallback(
-            spark, mv_root, name, project, "cube", [], group_cols,
-            aggs, _norm_where(where), _norm_derived(derived),
-        ), None
-    sets = [
-        [c for i, c in enumerate(group_cols) if not (mask >> i) & 1]
-        for mask in range(2 ** len(group_cols))
-    ]
-    sets = sorted(sets, key=lambda s: (-len(s), s))
-    return _answer_sets_live(
-        spark, mv_root, name, project,
-        group_cols=group_cols, sets=sets, aggs=aggs, where=where,
-        derived=derived, native="cube",
-        checkpoint_compose=checkpoint_compose,
-    )
 
 
 def answer_grouping_sets_live(
@@ -2596,77 +2369,22 @@ def answer_grouping_sets_live(
     name: str,
     project,
     *,
-    group_cols: Sequence[str],
     sets: Sequence[Sequence[str]],
     aggs: dict,
     where: Sequence | None = None,
     derived: dict | None = None,
-    checkpoint_compose: bool = True,
 ) -> tuple[DataFrame, str | None]:
-    """Arbitrary GROUPING SETS served live from a possibly-stale
-    MoR-bound MV — the third sibling; rollup and cube are the
-    prefix-chain and power-set special cases."""
-    group_cols = list(group_cols)
-    sets = [list(s) for s in sets]
-    for s in sets:
-        bad = [c for c in s if c not in group_cols]
-        if bad:
-            raise ValueError(
-                f"grouping set {s} has column(s) {bad} outside "
-                f"group_cols {group_cols}"
-            )
-    return _answer_sets_live(
-        spark, mv_root, name, project,
-        group_cols=group_cols, sets=sets, aggs=aggs, where=where,
-        derived=derived, native="groupingSets",
-        checkpoint_compose=checkpoint_compose,
-    )
-
-
-def _native_sets_live_fallback(
-    spark, mv_root, name, project, native, sets, group_cols, aggs,
-    where, derived,
-) -> DataFrame:
-    """The live servers' mode-None leg: native Expand over the
-    CURRENT MoR state (always fresh, never the summary)."""
+    """GROUPING SETS served live from a possibly-stale MoR-bound MV:
+    every set rolls up from ONE :func:`_live_partials` resolution
+    (fresh → the stored generation; stale but compensatable → one lazy
+    compose of stored partials ⊕ the unapplied span). Sets as in
+    :func:`answer_grouping_sets`; mode contract as
+    :func:`answer_aggregate_live`. Not servable, or more than
+    ``_MAX_SERVED_SETS`` sets → native ``groupingSets`` over the
+    CURRENT table state, mode ``None``."""
     from .mor import read_mor
 
-    d = _mv_dir(mv_root, name)
-    with open(os.path.join(d, "mv.json")) as f:
-        man = json.load(f)
-    if "mor_root" not in man:
-        raise ValueError(
-            f"MV {name} is not bound to a merge-on-read table; "
-            "the live grouping servers need bind_mv_to_mor"
-        )
-    cur = _project_rows(project, read_mor(spark, man["mor_root"]))
-    base = _with_derived(cur, derived)
-    for term in where:
-        base = base.filter(_where_expr(term))
-    return _native_sets(base, native, sets, group_cols, aggs)
-
-
-def _answer_sets_live(
-    spark: SparkSession,
-    mv_root: str,
-    name: str,
-    project,
-    *,
-    group_cols: list,
-    sets: list,
-    aggs: dict,
-    where,
-    derived,
-    native: str,
-    checkpoint_compose: bool = True,
-) -> tuple[DataFrame, str | None]:
-    """Shared live rollup/cube/grouping-sets server: resolve the
-    partials ONCE via :func:`_live_partials` (fresh → stored
-    generation; stale-but-compensatable → ONE lazy compose of stored ⊕
-    unapplied span) and union every requested set from that single
-    plan — the live analog of the pinned server's one-manifest
-    discipline. Not servable → native Expand over the current state,
-    mode ``None``."""
+    group_cols, sets = _finest_set(sets)
     d = _mv_dir(mv_root, name)
     with open(os.path.join(d, "mv.json")) as f:
         man = json.load(f)
@@ -2678,109 +2396,44 @@ def _answer_sets_live(
     aggs = dict(aggs)
     where = _norm_where(where)
     derived = _norm_derived(derived)
-    need, pred_need = _resolve_group_requirements(
-        group_cols, where, derived
-    )
-    partials, mode = _live_partials(
-        spark, d, man, project, need, pred_need, aggs
-    )
+    partials, mode = None, None
+    if len(sets) <= _MAX_SERVED_SETS:
+        need, pred_need = _resolve_group_requirements(
+            group_cols, where, derived
+        )
+        partials, mode = _live_partials(
+            spark, d, man, project, need, pred_need, aggs
+        )
     if partials is None:
-        return _native_sets_live_fallback(
-            spark, mv_root, name, project, native, sets, group_cols,
-            aggs, where, derived,
-        ), None
-    if mode == "mv_delta" and len(sets) > 1 and checkpoint_compose:
+        cur = _project_rows(project, read_mor(spark, man["mor_root"]))
+        return _base_sets(cur, group_cols, sets, aggs, where, derived), None
+    if mode == "mv_delta" and len(sets) > 1:
         # ONE compose execution per request, physically: each union
         # level is a separate plan branch, and without this the change
         # feed's pre/post semi-joins re-SCAN the base once per level
         # (measured at 200M rows: a 3-level live rollup cost 6 base
         # probes and lost to the native Expand). A LAZY local
         # checkpoint persists the composed O(groups) partials on first
-        # materialization and every other level reads the blocks.
-        # NOTE (round 19): even with eager=False this is NOT job-free
-        # at plan construction — Dataset.localCheckpoint goes through
-        # queryExecution.toRdd, and under AQE that executes the
-        # compose's shuffle map stages immediately (the request's own
-        # work scheduled early and reused, not an extra pass).
+        # materialization and every other level reads the blocks. Even
+        # with eager=False this is NOT job-free at plan construction:
+        # Dataset.localCheckpoint goes through queryExecution.toRdd,
+        # and under AQE that executes the compose's shuffle map stages
+        # immediately (the request's own work scheduled early and
+        # reused, not an extra pass).
         #
-        # Failure/lifecycle trade (round-19 ADVICE): localCheckpoint
-        # stores NON-REPLICATED executor-local blocks and TRUNCATES
-        # lineage — an executor loss mid-request fails the dashboard
-        # query (no recompute path; the caller retries the request,
-        # which re-binds fresh blocks), and the blocks are reclaimed
-        # only when the driver GCs the DataFrame, so a long-lived
-        # session holding many served frames accumulates executor
-        # storage. Sessions that prefer recomputability/eager cleanup
-        # pass checkpoint_compose=False and pay the per-level re-scan.
+        # The trade: localCheckpoint stores NON-REPLICATED
+        # executor-local blocks and TRUNCATES lineage — an executor
+        # loss mid-request fails the dashboard query (no recompute
+        # path; the caller retries the request, which re-binds fresh
+        # blocks), and the blocks are reclaimed only when the driver
+        # GCs the DataFrame, so a long-lived session holding many
+        # served frames accumulates executor storage.
         partials = partials.localCheckpoint(eager=False)
     return (
         _serve_sets_from_partials(
             partials, man, group_cols, sets, aggs, where, derived
         ),
         mode,
-    )
-
-
-def answer_join_rollup_aggregate_live(
-    spark: SparkSession,
-    mv_root: str,
-    name: str,
-    fact_project,
-    dims: Sequence[tuple],
-    *,
-    group_cols: Sequence[str],
-    aggs: dict,
-    where: Sequence | None = None,
-    derived: dict | None = None,
-    checkpoint_compose: bool = True,
-) -> tuple[DataFrame, str | None]:
-    """ROLLUP over a STAR JOIN served live from a possibly-stale
-    MoR-bound join MV: every hierarchy level from ONE
-    :func:`_live_join_partials` compose (stored partials ⊕ the
-    unapplied fact span's join-view delta). The dashboard-hierarchy-
-    on-fresh-data shape; dims must be static (a moved dim falls
-    back)."""
-    group_cols = list(group_cols)
-    sets = [group_cols[:i] for i in range(len(group_cols), -1, -1)]
-    return _answer_join_sets_live(
-        spark, mv_root, name, fact_project, dims,
-        group_cols=group_cols, sets=sets, aggs=aggs, where=where,
-        native="rollup", derived=derived,
-        checkpoint_compose=checkpoint_compose,
-    )
-
-
-def answer_join_cube_aggregate_live(
-    spark: SparkSession,
-    mv_root: str,
-    name: str,
-    fact_project,
-    dims: Sequence[tuple],
-    *,
-    group_cols: Sequence[str],
-    aggs: dict,
-    where: Sequence | None = None,
-    derived: dict | None = None,
-    checkpoint_compose: bool = True,
-) -> tuple[DataFrame, str | None]:
-    """CUBE over a star join served live from a possibly-stale join
-    MV; >6 columns go native (planning-cost guard, as everywhere)."""
-    group_cols = list(group_cols)
-    if len(group_cols) > 6:
-        return _native_join_sets_live_fallback(
-            spark, mv_root, name, fact_project, dims, "cube", [],
-            group_cols, aggs, _norm_where(where), _norm_derived(derived),
-        ), None
-    sets = [
-        [c for i, c in enumerate(group_cols) if not (mask >> i) & 1]
-        for mask in range(2 ** len(group_cols))
-    ]
-    sets = sorted(sets, key=lambda s: (-len(s), s))
-    return _answer_join_sets_live(
-        spark, mv_root, name, fact_project, dims,
-        group_cols=group_cols, sets=sets, aggs=aggs, where=where,
-        native="cube", derived=derived,
-        checkpoint_compose=checkpoint_compose,
     )
 
 
@@ -2791,71 +2444,20 @@ def answer_join_grouping_sets_live(
     fact_project,
     dims: Sequence[tuple],
     *,
-    group_cols: Sequence[str],
     sets: Sequence[Sequence[str]],
     aggs: dict,
     where: Sequence | None = None,
     derived: dict | None = None,
-    checkpoint_compose: bool = True,
 ) -> tuple[DataFrame, str | None]:
-    """Arbitrary GROUPING SETS over a star join served live from a
-    possibly-stale join MV."""
-    group_cols = list(group_cols)
-    sets = [list(s) for s in sets]
-    for s in sets:
-        bad = [c for c in s if c not in group_cols]
-        if bad:
-            raise ValueError(
-                f"grouping set {s} has column(s) {bad} outside "
-                f"group_cols {group_cols}"
-            )
-    return _answer_join_sets_live(
-        spark, mv_root, name, fact_project, dims,
-        group_cols=group_cols, sets=sets, aggs=aggs, where=where,
-        native="groupingSets", derived=derived,
-        checkpoint_compose=checkpoint_compose,
-    )
-
-
-def _native_join_sets_live_fallback(
-    spark, mv_root, name, fact_project, dims, native, sets,
-    group_cols, aggs, where, derived=None,
-) -> DataFrame:
-    """Mode-None leg for the join live grouping servers: native
-    Expand over the CURRENT star join."""
+    """GROUPING SETS over a STAR JOIN served live from a possibly-stale
+    MoR-bound join MV: every set from ONE :func:`_live_join_partials`
+    compose (stored partials ⊕ the unapplied fact span's join-view
+    delta). ``dims``: ``[(dim_df, on_cols), ...]``, static (a moved dim
+    falls back). Otherwise as :func:`answer_grouping_sets_live`; the
+    ``None`` fallback runs over the CURRENT star join."""
     from .mor import read_mor
 
-    d = _mv_dir(mv_root, name)
-    with open(os.path.join(d, "mv.json")) as f:
-        man = json.load(f)
-    _validate_join_live(man, name, dims)
-    fact_now = _project_rows(fact_project, read_mor(spark, man["mor_root"]))
-    base = _with_derived(
-        _join_all(fact_now, [(dim, on) for dim, on in dims]),
-        derived or {},
-    )
-    for term in where:
-        base = base.filter(_where_expr(term))
-    return _native_sets(base, native, sets, group_cols, aggs)
-
-
-def _answer_join_sets_live(
-    spark: SparkSession,
-    mv_root: str,
-    name: str,
-    fact_project,
-    dims: Sequence[tuple],
-    *,
-    group_cols: list,
-    sets: list,
-    aggs: dict,
-    where,
-    native: str,
-    derived: dict | None = None,
-    checkpoint_compose: bool = True,
-) -> tuple[DataFrame, str | None]:
-    """Shared live join rollup/cube/grouping-sets server — ONE
-    :func:`_live_join_partials` resolution feeds every set."""
+    group_cols, sets = _finest_set(sets)
     d = _mv_dir(mv_root, name)
     with open(os.path.join(d, "mv.json")) as f:
         man = json.load(f)
@@ -2863,24 +2465,27 @@ def _answer_join_sets_live(
     aggs = dict(aggs)
     where = _norm_where(where)
     derived = _norm_derived(derived)
-    need, pred_need = _resolve_group_requirements(
-        group_cols, where, derived
-    )
-    partials, mode = _live_join_partials(
-        spark, d, man, fact_project, dims, need, pred_need, aggs,
-    )
+    partials, mode = None, None
+    if len(sets) <= _MAX_SERVED_SETS:
+        need, pred_need = _resolve_group_requirements(
+            group_cols, where, derived
+        )
+        partials, mode = _live_join_partials(
+            spark, d, man, fact_project, dims, need, pred_need, aggs,
+        )
     if partials is None:
-        return _native_join_sets_live_fallback(
-            spark, mv_root, name, fact_project, dims, native, sets,
-            group_cols, aggs, where, derived,
+        fact_now = _project_rows(
+            fact_project, read_mor(spark, man["mor_root"])
+        )
+        return _base_sets(
+            _join_all(fact_now, dims), group_cols, sets, aggs, where,
+            derived,
         ), None
-    if mode == "mv_delta" and len(sets) > 1 and checkpoint_compose:
-        # one physical compose per request (see _answer_sets_live,
-        # including the executor-loss / block-retention trade the
-        # checkpoint_compose opt-out exists for):
-        # the join compose is even heavier per re-execution — the
-        # star_join_delta and the time-travel pre-state probe would
-        # re-run once per level
+    if mode == "mv_delta" and len(sets) > 1:
+        # one physical compose per request, with the same executor-loss
+        # trade (see answer_grouping_sets_live): the join compose is
+        # even heavier per re-execution — the star_join_delta and the
+        # time-travel pre-state probe would re-run once per level
         partials = partials.localCheckpoint(eager=False)
     return (
         _serve_sets_from_partials(

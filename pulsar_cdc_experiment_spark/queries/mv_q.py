@@ -901,7 +901,7 @@ def mv_join_rollup_rewrite(spark, sf_dir):
 )
 def mv_rollup_hierarchy_rewrite(spark, sf_dir):
     """ROLLUP served from MV partials (round 16,
-    plans/mv.answer_rollup_aggregate): leg 1 asks for
+    plans/mv.answer_grouping_sets over rollup_sets): leg 1 asks for
     ``ROLLUP(l_returnflag, l_linestatus)`` — every grouping set
     (fine, mid, grand total) is a rollup of the registered
     (l_returnflag, l_linestatus) MV, so the planner answers the WHOLE
@@ -913,7 +913,7 @@ def mv_rollup_hierarchy_rewrite(spark, sf_dir):
     level — an avg-of-avgs bug shifts the intermediate rows. The
     oracle recomputes both hierarchies with ANSI GROUP BY ROLLUP and
     hardcodes the routing."""
-    from ..plans.mv import answer_rollup_aggregate
+    from ..plans.mv import answer_grouping_sets, rollup_sets
 
     root = mv_lineitem_fixture(spark, sf_dir)
     src = table(spark, sf_dir, "lineitem").select(
@@ -927,13 +927,13 @@ def mv_rollup_hierarchy_rewrite(spark, sf_dir):
         "max_cents": ("max", "cents"),
         "avg_cents": ("avg", "cents"),
     }
-    leg1, used1 = answer_rollup_aggregate(
+    leg1, used1 = answer_grouping_sets(
         spark, root, src, src_path,
-        group_cols=["l_returnflag", "l_linestatus"], aggs=aggs,
+        sets=rollup_sets(["l_returnflag", "l_linestatus"]), aggs=aggs,
     )
-    leg2, used2 = answer_rollup_aggregate(
+    leg2, used2 = answer_grouping_sets(
         spark, root, src, src_path,
-        group_cols=["l_linenumber"], aggs=aggs,
+        sets=rollup_sets(["l_linenumber"]), aggs=aggs,
     )
     measures = ["n", "sum_cents", "min_cents", "max_cents", "avg_cents"]
     return leg1.select(
@@ -979,7 +979,7 @@ def mv_rollup_hierarchy_rewrite(spark, sf_dir):
 )
 def mv_grouping_cube_rewrite(spark, sf_dir):
     """CUBE served from MV partials (round 16,
-    plans/mv.answer_cube_aggregate): leg 1 asks for
+    plans/mv.answer_grouping_sets over cube_sets): leg 1 asks for
     ``CUBE(l_returnflag, l_linestatus)`` UNDER A PREDICATE on an MV
     group column — all 2ⁿ grouping sets are subsumed by the registered
     MV, so the planner answers the whole cube from the stored partials
@@ -988,7 +988,7 @@ def mv_grouping_cube_rewrite(spark, sf_dir):
     cubes over l_linenumber, which no MV subsumes, and must fall back
     to the base's native cube. The oracle recomputes both cubes with
     ANSI GROUP BY CUBE and hardcodes the routing."""
-    from ..plans.mv import answer_cube_aggregate
+    from ..plans.mv import answer_grouping_sets, cube_sets
 
     root = mv_lineitem_fixture(spark, sf_dir)
     src = table(spark, sf_dir, "lineitem").select(
@@ -1000,14 +1000,14 @@ def mv_grouping_cube_rewrite(spark, sf_dir):
         "sum_cents": ("sum", "cents"),
         "max_cents": ("max", "cents"),
     }
-    leg1, used1 = answer_cube_aggregate(
+    leg1, used1 = answer_grouping_sets(
         spark, root, src, src_path,
-        group_cols=["l_returnflag", "l_linestatus"], aggs=aggs,
+        sets=cube_sets(["l_returnflag", "l_linestatus"]), aggs=aggs,
         where=[("l_returnflag", "!=", "N")],
     )
-    leg2, used2 = answer_cube_aggregate(
+    leg2, used2 = answer_grouping_sets(
         spark, root, src, src_path,
-        group_cols=["l_linenumber", "l_linestatus"], aggs=aggs,
+        sets=cube_sets(["l_linenumber", "l_linestatus"]), aggs=aggs,
     )
     measures = ["n", "sum_cents", "max_cents"]
     return leg1.select(
@@ -1050,8 +1050,8 @@ def mv_grouping_cube_rewrite(spark, sf_dir):
 )
 def mv_grouping_sets_rewrite(spark, sf_dir):
     """Arbitrary GROUPING SETS served from MV partials (round 16,
-    plans/mv.answer_grouping_sets — the third sibling: rollup and cube
-    are its prefix-chain and power-set special cases): leg 1 asks for
+    plans/mv.answer_grouping_sets — rollup and cube are its
+    prefix-chain and power-set special cases): leg 1 asks for
     ``GROUPING SETS ((l_returnflag), (l_linestatus))`` — the
     two-independent-breakdowns report shape — and both sets are
     subsumed by the registered MV, so each is served from the stored
@@ -1070,15 +1070,11 @@ def mv_grouping_sets_rewrite(spark, sf_dir):
     aggs = {"n": ("count", None), "sum_cents": ("sum", "cents")}
     leg1, used1 = answer_grouping_sets(
         spark, root, src, src_path,
-        group_cols=["l_returnflag", "l_linestatus"],
-        sets=[["l_returnflag"], ["l_linestatus"]],
-        aggs=aggs,
+        sets=[["l_returnflag"], ["l_linestatus"]], aggs=aggs,
     )
     leg2, used2 = answer_grouping_sets(
         spark, root, src, src_path,
-        group_cols=["l_linenumber", "l_linestatus"],
-        sets=[["l_linenumber"], ["l_linestatus"]],
-        aggs=aggs,
+        sets=[["l_linenumber"], ["l_linestatus"]], aggs=aggs,
     )
     return leg1.select(
         F.lit("mv" if used1 == "li_flag_status" else "base").alias(
@@ -2135,7 +2131,7 @@ def mv_disjunctive_rewrite(spark, sf_dir):
 )
 def mv_join_rollup_hierarchy_rewrite(spark, sf_dir):
     """ROLLUP over a STAR JOIN served from a join MV (round 17,
-    plans/mv.answer_join_rollup_aggregate — the composition the
+    plans/mv.answer_join_grouping_sets — the composition the
     round-16 verdict named top-next): leg 1 asks for
     ``ROLLUP(n_name, o_orderpriority)`` over orders ⋈ customer ⋈
     nation — the TPC-H-Q5-style BI hierarchy — and every level (fine,
@@ -2149,7 +2145,7 @@ def mv_join_rollup_hierarchy_rewrite(spark, sf_dir):
     ROLLUP over the same join and hardcodes the required routing. At
     100 TB leg 1 replaces a fact-shuffling star join with n+1-way
     Expand replication by a few KB reads."""
-    from ..plans.mv import answer_join_rollup_aggregate
+    from ..plans.mv import answer_join_grouping_sets, rollup_sets
 
     root = mv_join_fixture(spark, sf_dir)
     fact = table(spark, sf_dir, "orders").select(
@@ -2174,13 +2170,13 @@ def mv_join_rollup_hierarchy_rewrite(spark, sf_dir):
         "n": ("count", None), "sum_cents": ("sum", "cents"),
         "min_cents": ("min", "cents"), "max_cents": ("max", "cents"),
     }
-    leg1, used1 = answer_join_rollup_aggregate(
+    leg1, used1 = answer_join_grouping_sets(
         spark, root, fact, fact_path, dims,
-        group_cols=["n_name", "o_orderpriority"], aggs=aggs,
+        sets=rollup_sets(["n_name", "o_orderpriority"]), aggs=aggs,
     )
-    leg2, used2 = answer_join_rollup_aggregate(
+    leg2, used2 = answer_join_grouping_sets(
         spark, root, fact, fact_path, dims,
-        group_cols=["o_custkey"], aggs=aggs,
+        sets=rollup_sets(["o_custkey"]), aggs=aggs,
     )
     measures = ["n", "sum_cents", "min_cents", "max_cents"]
     return leg1.select(
@@ -2228,7 +2224,8 @@ def mv_join_rollup_hierarchy_rewrite(spark, sf_dir):
 )
 def mv_join_cube_rewrite(spark, sf_dir):
     """CUBE over a star join served from a join MV UNDER A PREDICATE
-    (round 17, plans/mv.answer_join_cube_aggregate): leg 1 cubes
+    (round 17, plans/mv.answer_join_grouping_sets over cube_sets):
+    leg 1 cubes
     (n_name, o_orderpriority) with a filter on an MV group column —
     all 2ⁿ grouping sets are subsumed, so the whole cube is 2ⁿ
     KB-summary reads from one pinned manifest with the filter applied
@@ -2236,7 +2233,7 @@ def mv_join_cube_rewrite(spark, sf_dir):
     ways). Leg 2 cubes over o_custkey, not an MV group column — base
     fallback through the full star join. Oracle: ANSI GROUP BY CUBE
     over the same join, routing hardcoded."""
-    from ..plans.mv import answer_join_cube_aggregate
+    from ..plans.mv import answer_join_grouping_sets, cube_sets
 
     root = mv_join_fixture(spark, sf_dir)
     fact = table(spark, sf_dir, "orders").select(
@@ -2261,14 +2258,14 @@ def mv_join_cube_rewrite(spark, sf_dir):
         "n": ("count", None), "sum_cents": ("sum", "cents"),
         "max_cents": ("max", "cents"),
     }
-    leg1, used1 = answer_join_cube_aggregate(
+    leg1, used1 = answer_join_grouping_sets(
         spark, root, fact, fact_path, dims,
-        group_cols=["n_name", "o_orderpriority"], aggs=aggs,
+        sets=cube_sets(["n_name", "o_orderpriority"]), aggs=aggs,
         where=[("n_name", "!=", "FRANCE")],
     )
-    leg2, used2 = answer_join_cube_aggregate(
+    leg2, used2 = answer_join_grouping_sets(
         spark, root, fact, fact_path, dims,
-        group_cols=["o_custkey", "o_orderpriority"], aggs=aggs,
+        sets=cube_sets(["o_custkey", "o_orderpriority"]), aggs=aggs,
     )
     measures = ["n", "sum_cents", "max_cents"]
     return leg1.select(
@@ -2904,11 +2901,11 @@ def mv_time_hierarchy_rewrite(spark, sf_dir):
     )
     src_path = os.path.join(sf_dir, "orders.parquet")
     aggs = {"n": ("count", None), "sum_cents": ("sum", "cents")}
-    from ..plans.mv import answer_rollup_aggregate
+    from ..plans.mv import answer_grouping_sets, rollup_sets
 
-    leg1, used1 = answer_rollup_aggregate(
+    leg1, used1 = answer_grouping_sets(
         spark, root, src, src_path,
-        group_cols=["yr", "mo"], aggs=aggs,
+        sets=rollup_sets(["yr", "mo"]), aggs=aggs,
         where=[("yr", ">=", 1995)],
         derived={"yr": ("year", "o_orderdate"),
                  "mo": ("month", "o_orderdate")},
@@ -3187,7 +3184,7 @@ def mv_live_serve(spark, sf_dir):
 )
 def mv_live_hierarchy_serve(spark, sf_dir):
     """The REAL-TIME DASHBOARD HIERARCHY (round 18,
-    plans/mv.answer_rollup_aggregate_live): a full ROLLUP —
+    plans/mv.answer_grouping_sets_live): a full ROLLUP —
     (priority, status), (priority), grand total — served from a
     summary the fixture left genuinely STALE (one unapplied merge:
     risky max delete + updates + clone inserts; the plain rewrite
@@ -3201,7 +3198,7 @@ def mv_live_hierarchy_serve(spark, sf_dir):
     including the risky group's max at every rollup level. At 100 TB:
     O(levels × (groups + unapplied span)) per dashboard refresh, the
     fact scanned only by the semi-join-pruned risky leg."""
-    from ..plans.mv import answer_rollup_aggregate_live
+    from ..plans.mv import answer_grouping_sets_live, rollup_sets
 
     root = mv_live_fixture(spark, sf_dir)
     mv_root = os.path.join(root, "mvs")
@@ -3215,9 +3212,9 @@ def mv_live_hierarchy_serve(spark, sf_dir):
             cols = [F.col("change_type")] + cols
         return df.select(*cols)
 
-    df, mode = answer_rollup_aggregate_live(
+    df, mode = answer_grouping_sets_live(
         spark, mv_root, "live_by_pri_stat", project,
-        group_cols=["o_orderpriority", "o_orderstatus"],
+        sets=rollup_sets(["o_orderpriority", "o_orderstatus"]),
         aggs={
             "n": ("count", None), "sum_cents": ("sum", "cents"),
             "max_cents": ("max", "cents"),
@@ -3485,10 +3482,11 @@ _JOIN_LIVE_FACT_NEW_SQL = """
 """
 
 
-def _join_live_serve_df(spark, sf_dir, server, group_cols):
+def _join_live_serve_df(spark, sf_dir, server, out_cols, **spec):
     """Shared body for the join live-serve queries: resolve the
     fixture, run the given answer_join_*_live server over the stale
-    summary, stamp the mode."""
+    summary with the grouping ``spec`` (``group_cols=`` or ``sets=``),
+    stamp the mode and select the group columns ``out_cols``."""
     from ..plans.mor import _read_cached
 
     root = mv_join_live_fixture(spark, sf_dir)
@@ -3508,15 +3506,15 @@ def _join_live_serve_df(spark, sf_dir, server, group_cols):
     df, mode = server(
         spark, mv_root, "live_seg_pri", fact_project,
         [(dim, ["o_custkey"])],
-        group_cols=group_cols,
         aggs={
             "n": ("count", None), "sum_cents": ("sum", "cents"),
             "max_cents": ("max", "cents"),
         },
+        **spec,
     )
     return df.select(
         F.lit(mode if mode else "base").alias("served_from"),
-        *group_cols, "n", "sum_cents", "max_cents",
+        *out_cols, "n", "sum_cents", "max_cents",
     )
 
 
@@ -3550,7 +3548,8 @@ def mv_join_live_serve(spark, sf_dir):
     from ..plans.mv import answer_join_aggregate_live
 
     return _join_live_serve_df(
-        spark, sf_dir, answer_join_aggregate_live, ["c_mktsegment"]
+        spark, sf_dir, answer_join_aggregate_live, ["c_mktsegment"],
+        group_cols=["c_mktsegment"],
     )
 
 
@@ -3570,7 +3569,7 @@ def mv_join_live_serve(spark, sf_dir):
 )
 def mv_join_live_hierarchy_serve(spark, sf_dir):
     """The STAR-JOIN dashboard hierarchy on FRESH data (round 18,
-    plans/mv.answer_join_rollup_aggregate_live): a full ROLLUP —
+    plans/mv.answer_join_grouping_sets_live): a full ROLLUP —
     (segment, priority), (segment), grand total — served from a STALE
     MoR-bound join MV, every level rolled up from ONE composed
     stored-partials ⊕ unapplied-join-view-delta plan (one manifest
@@ -3581,11 +3580,12 @@ def mv_join_live_hierarchy_serve(spark, sf_dir):
     included. This composes the two round-17 capstones — join-MV
     grouping constructs and lambda serving — exactly as the round-17
     verdict's Next #1 prescribed."""
-    from ..plans.mv import answer_join_rollup_aggregate_live
+    from ..plans.mv import answer_join_grouping_sets_live, rollup_sets
 
+    cols = ["c_mktsegment", "o_orderpriority"]
     return _join_live_serve_df(
-        spark, sf_dir, answer_join_rollup_aggregate_live,
-        ["c_mktsegment", "o_orderpriority"],
+        spark, sf_dir, answer_join_grouping_sets_live, cols,
+        sets=rollup_sets(cols),
     )
 
 
@@ -4005,7 +4005,8 @@ def mv_join_time_hierarchy_rewrite(spark, sf_dir):
     materialization, never per request."""
     from ..plans.mv import (
         answer_join_aggregate,
-        answer_join_rollup_aggregate,
+        answer_join_grouping_sets,
+        rollup_sets,
     )
 
     root = mv_join_date_fixture(spark, sf_dir)
@@ -4029,9 +4030,9 @@ def mv_join_time_hierarchy_rewrite(spark, sf_dir):
     ]
     fact_path = os.path.join(sf_dir, "orders.parquet")
     aggs = {"n": ("count", None), "sum_cents": ("sum", "cents")}
-    leg1, used1 = answer_join_rollup_aggregate(
+    leg1, used1 = answer_join_grouping_sets(
         spark, root, fact, fact_path, dims,
-        group_cols=["yr", "n_name"], aggs=aggs,
+        sets=rollup_sets(["yr", "n_name"]), aggs=aggs,
         where=[("yr", ">=", 1995)],
         derived={"yr": ("year", "o_orderdate")},
     )
@@ -4118,7 +4119,7 @@ def mv_join_time_hierarchy_live(spark, sf_dir):
     hierarchy closed-form from the raw tables, the risky max at each
     level included."""
     from ..plans.mor import _read_cached
-    from ..plans.mv import answer_join_rollup_aggregate_live
+    from ..plans.mv import answer_join_grouping_sets_live, rollup_sets
 
     root = mv_join_live_fixture(spark, sf_dir)
     mv_root = os.path.join(root, "mvs")
@@ -4133,10 +4134,10 @@ def mv_join_time_hierarchy_live(spark, sf_dir):
             cols = [F.col("change_type")] + cols
         return df.select(*cols)
 
-    df, mode = answer_join_rollup_aggregate_live(
+    df, mode = answer_join_grouping_sets_live(
         spark, mv_root, "live_date_seg", fact_project,
         [(dim, ["o_custkey"])],
-        group_cols=["yr", "c_mktsegment"],
+        sets=rollup_sets(["yr", "c_mktsegment"]),
         aggs={
             "n": ("count", None), "sum_cents": ("sum", "cents"),
             "max_cents": ("max", "cents"),

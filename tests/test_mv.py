@@ -11,6 +11,7 @@ import json
 import os
 import shutil
 import tempfile
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -375,7 +376,8 @@ def test_coarsest_subsuming_mv_wins(mv_env):
 def test_scrub_mv_groups_subset_and_guards(spark):
     """scrub_mv_groups: scrubbing by a SUBSET of the group columns drops
     every matching row (one identifier column is the common GDPR
-    shape), innocent rows survive byte-for-byte, the scrub
+    shape), a scrub row with a NULL group value reaches the MV's NULL
+    group, innocent rows survive byte-for-byte, the scrub
     re-fingerprints so the MV serves again, and non-group scrub columns
     fail loud."""
     from pulsar_cdc_experiment_spark.plans.mv import scrub_mv_groups
@@ -385,7 +387,7 @@ def test_scrub_mv_groups_subset_and_guards(spark):
     rows = [
         (u, d, float(u * 10 + di))
         for u in range(6) for di, d in enumerate(("x", "y"))
-    ]
+    ] + [(5, None, 55.0)]  # a NULL group value the scrub must reach
     spark.createDataFrame(
         rows, "user bigint, dim string, v double"
     ).write.parquet(src_path)
@@ -401,8 +403,9 @@ def test_scrub_mv_groups_subset_and_guards(spark):
             spark, mv_root, "m",
             spark.createDataFrame([(1.0,)], "v double"),
         )
-    # fact-side erasure of users 2 and 4, then the summary scrub
-    post = [r for r in rows if r[0] not in (2, 4)]
+    # fact-side erasure of users 2 and 4 and of (5, NULL), then the
+    # summary scrubs
+    post = [r for r in rows if r[0] not in (2, 4) and r[1] is not None]
     spark.createDataFrame(
         post, "user bigint, dim string, v double"
     ).write.mode("overwrite").parquet(src_path)
@@ -411,6 +414,11 @@ def test_scrub_mv_groups_subset_and_guards(spark):
         spark.createDataFrame([(2,), (4,)], "user bigint"),
     )
     assert rep == {"groups_scrubbed": 4}  # 2 users x 2 dims
+    rep = scrub_mv_groups(
+        spark, mv_root, "m",
+        spark.createDataFrame([(5, None)], "user bigint, dim string"),
+    )
+    assert rep == {"groups_scrubbed": 1}  # the (5, NULL) group
     src1 = spark.read.parquet(src_path)
     served, used = answer_aggregate(
         spark, mv_root, src1, src_path,
@@ -1611,11 +1619,12 @@ def test_live_hierarchy_serves_every_level_from_one_compose(spark):
         read_mor,
     )
     from pulsar_cdc_experiment_spark.plans.mv import (
-        answer_cube_aggregate_live,
+        answer_grouping_sets,
         answer_grouping_sets_live,
-        answer_rollup_aggregate_live,
         bind_mv_to_mor,
+        cube_sets,
         mv_data_dir,
+        rollup_sets,
     )
 
     base = _tf.mkdtemp(prefix="mv_lh_")
@@ -1676,11 +1685,50 @@ def test_live_hierarchy_serves_every_level_from_one_compose(spark):
             return rows_of(d)
 
         # fresh: every construct serves mode 'mv', values == native
-        df, mode = answer_rollup_aggregate_live(
+        df, mode = answer_grouping_sets_live(
             spark, mv_root, "hv", project,
-            group_cols=["g", "h"], aggs=aggs,
+            sets=rollup_sets(["g", "h"]), aggs=aggs,
         )
         assert mode == "mv" and rows_of(df) == native("rollup")
+
+        # the set-count guard: a 7-column cube (128 sets) answers
+        # natively before any MV lookup, though hv subsumes every key
+        # (the five derived keys re-key its stored g/h values)
+        wide_derived = {
+            f"{c}{i}": ("substr", c, i, 1)
+            for c, i in (("g", 1), ("h", 1), ("g", 2), ("h", 2), ("h", 3))
+        }
+        wide = ["g", "h", *wide_derived]
+
+        def wide_rows(df):
+            return Counter(
+                tuple(r[c] for c in [*wide, *aggs]) for r in df.collect()
+            )
+
+        src_now = cur().select("g", "h", "cents")
+        wide_native = wide_rows(
+            src_now.select(
+                "*",
+                *[F.substring(c, i, n).alias(out)
+                  for out, (_, c, i, n) in wide_derived.items()],
+            ).cube(*wide).agg(
+                F.sum("cents").alias("sum_cents"),
+                F.count("*").alias("n"),
+                F.max("cents").alias("mx"),
+            )
+        )
+        df, used = answer_grouping_sets(
+            spark, mv_root, src_now, manifest,
+            sets=cube_sets(wide), aggs=aggs,
+            derived=wide_derived,
+        )
+        assert used is None and wide_rows(df) == wide_native
+        df, mode = answer_grouping_sets_live(
+            spark, mv_root, "hv", project,
+            sets=cube_sets(wide), aggs=aggs,
+            derived=wide_derived,
+        )
+        assert mode is None and wide_rows(df) == wide_native
 
         # a merge lands — including deleting (a, x)'s MAX contributor
         # (risky leg) — with NO catch-up
@@ -1699,30 +1747,30 @@ def test_live_hierarchy_serves_every_level_from_one_compose(spark):
             "is_delete boolean",
         ))
 
-        df, mode = answer_rollup_aggregate_live(
+        df, mode = answer_grouping_sets_live(
             spark, mv_root, "hv", project,
-            group_cols=["g", "h"], aggs=aggs,
+            sets=rollup_sets(["g", "h"]), aggs=aggs,
         )
         assert mode == "mv_delta" and rows_of(df) == native("rollup")
 
-        df, mode = answer_cube_aggregate_live(
+        df, mode = answer_grouping_sets_live(
             spark, mv_root, "hv", project,
-            group_cols=["g", "h"], aggs=aggs,
+            sets=cube_sets(["g", "h"]), aggs=aggs,
         )
         assert mode == "mv_delta" and rows_of(df) == native("cube")
 
         gsets = [["g", "h"], ["h"], []]
         df, mode = answer_grouping_sets_live(
             spark, mv_root, "hv", project,
-            group_cols=["g", "h"], sets=gsets, aggs=aggs,
+            sets=gsets, aggs=aggs,
         )
         assert mode == "mv_delta"
         assert rows_of(df) == native("groupingSets", sets=gsets)
 
         # filtered hierarchy with a derived key over a group column
-        df, mode = answer_rollup_aggregate_live(
+        df, mode = answer_grouping_sets_live(
             spark, mv_root, "hv", project,
-            group_cols=["g", "hh"], aggs=aggs,
+            sets=rollup_sets(["g", "hh"]), aggs=aggs,
             where=[("g", "=", "a")],
             derived={"hh": ("substr", "h", 1, 1)},
         )
@@ -1753,11 +1801,16 @@ def test_live_hierarchy_serves_every_level_from_one_compose(spark):
         purge_keys_mor(
             spark, root, spark.createDataFrame([(9001,)], "k bigint")
         )
-        df, mode = answer_cube_aggregate_live(
+        df, mode = answer_grouping_sets_live(
             spark, mv_root, "hv", project,
-            group_cols=["g", "h"], aggs=aggs,
+            sets=cube_sets(["g", "h"]), aggs=aggs,
         )
         assert mode is None and rows_of(df) == native("cube")
+        df, mode = answer_grouping_sets_live(
+            spark, mv_root, "hv", project,
+            sets=rollup_sets(["g", "h"]), aggs=aggs,
+        )
+        assert mode is None and rows_of(df) == native("rollup")
     finally:
         shutil.rmtree(base, ignore_errors=True)
 

@@ -44,16 +44,22 @@ AGGS = {
 }
 
 
-@pytest.fixture()
-def join_env(spark):
+def _none_first(row):
+    """Sort key for rows that may hold NULLs: NULL sorts first."""
+    return tuple((x is not None, x) for x in row)
+
+
+DIM_ROWS = [
+    (1, "a"), (2, "a"), (3, "b"), (4, "b"), (5, "c"), (6, "c"),
+    (7, "a"), (8, "a"),  # 7/8 have no fact rows yet
+]
+
+
+def _join_env(spark, dim_rows):
     base = tempfile.mkdtemp(prefix="mvj_")
     fact_path = os.path.join(base, "fact")
     dim_path = os.path.join(base, "dim")
     fact_rows = [(k, (k * 13) % 97) for k in range(1, 7)]  # fk, v
-    dim_rows = [
-        (1, "a"), (2, "a"), (3, "b"), (4, "b"), (5, "c"), (6, "c"),
-        (7, "a"), (8, "a"),  # 7/8 have no fact rows yet
-    ]
     spark.createDataFrame(
         fact_rows, "fk bigint, v bigint"
     ).write.parquet(fact_path)
@@ -67,8 +73,25 @@ def join_env(spark):
         spark, mv_root, name="jm", fact=fact, fact_path=fact_path,
         dims=[(dim, dim_path, ["fk"])], group_cols=["g"], measures=AGGS,
     )
-    yield spark, base, mv_root, fact_path, dim_path, fact_rows, dim_rows
-    shutil.rmtree(base, ignore_errors=True)
+    return spark, base, mv_root, fact_path, dim_path, fact_rows, dim_rows
+
+
+@pytest.fixture()
+def join_env(spark):
+    env = _join_env(spark, DIM_ROWS)
+    yield env
+    shutil.rmtree(env[1], ignore_errors=True)
+
+
+@pytest.fixture()
+def null_group_join_env(spark):
+    """join_env with dim group ``g`` NULL for fk 3 and 4 (a NULL
+    group value is one group, as ``groupBy`` makes it)."""
+    env = _join_env(
+        spark, [(k, None if k in (3, 4) else g) for k, g in DIM_ROWS]
+    )
+    yield env
+    shutil.rmtree(env[1], ignore_errors=True)
 
 
 def test_join_mv_serves_topology_and_staleness(join_env):
@@ -194,11 +217,26 @@ def test_pruned_star_base_equals_plain(join_env):
     pruned build. Covers fact-borne AND dim-borne group columns
     (pruning on g pushes to the dim; the fact prunes via the pruned
     dim's keys)."""
+    _assert_pruned_equals_plain(join_env)
+
+
+def test_pruned_star_base_keeps_null_groups(null_group_join_env):
+    """The same equality when the deleted extremum is the NULL group's
+    (dim g NULL for fk 3 and 4): the pruned build's per-side
+    semi-joins must match the risky NULL group, or the recompute leg
+    gets no rows and the group vanishes from the MV."""
+    got = _assert_pruned_equals_plain(null_group_join_env)
+    assert any(row[0] is None for row in got), got
+
+
+def _assert_pruned_equals_plain(env):
+    """Delete group b's max (fk 4; group NULL in the NULL-group env)
+    through maintain_join_mv with a pruned_star_base base, then compare
+    the stored partials with refresh_mv over the full post-change join.
+    Returns the maintained partials."""
     from pulsar_cdc_experiment_spark.plans.mv import pruned_star_base
 
-    spark, base, mv_root, fact_path, dim_path, fact_rows, dim_rows = (
-        join_env
-    )
+    spark, base, mv_root, fact_path, dim_path, fact_rows, dim_rows = env
     fact_pre = spark.createDataFrame(fact_rows, "fk bigint, v bigint")
     dim_pre = spark.createDataFrame(dim_rows, "fk bigint, g string")
     v = {k: (k * 13) % 97 for k in range(1, 7)}
@@ -228,15 +266,16 @@ def test_pruned_star_base_equals_plain(join_env):
     )
     got = sorted(map(tuple, spark.read.parquet(
         mv_data_dir(mv_root, "jm")
-    ).collect()))
+    ).collect()), key=_none_first)
     # plain reference: full post-change join, same fold
     from pulsar_cdc_experiment_spark.plans.mv import refresh_mv
 
     refresh_mv(spark, mv_root, "jm", fact_new.join(dim_new, ["fk"]))
     want = sorted(map(tuple, spark.read.parquet(
         mv_data_dir(mv_root, "jm")
-    ).collect()))
+    ).collect()), key=_none_first)
     assert got == want
+    return got
 
 
 def test_maintain_join_mv_fail_loud_preconditions(join_env):
@@ -481,18 +520,18 @@ def test_bind_and_maintain_mv_from_mor(spark):
 
 
 def test_join_grouping_constructs_served_pinned(spark):
-    """Round-17: ROLLUP / CUBE / GROUPING SETS over a star join served
-    ENTIRELY from a join MV's partials (answer_join_rollup_aggregate &
-    siblings) — every level equals the base join's native construct;
-    non-subsumed requests and a moved dim fall back to the base. The
-    winning manifest is pinned once per request (the round-16 advice):
-    serving plans only ever scan the MV data generation."""
+    """ROLLUP / CUBE / GROUPING SETS over a star join served ENTIRELY
+    from a join MV's partials (answer_join_grouping_sets over
+    rollup_sets / cube_sets / explicit sets) — every level equals the
+    base join's native construct; non-subsumed requests and a moved
+    dim fall back to the base. The winning manifest is pinned once per
+    request: serving plans only ever scan the MV data generation."""
     import tempfile as _tf
 
     from pulsar_cdc_experiment_spark.plans.mv import (
-        answer_join_cube_aggregate,
         answer_join_grouping_sets,
-        answer_join_rollup_aggregate,
+        cube_sets,
+        rollup_sets,
     )
 
     base = _tf.mkdtemp(prefix="mvjg_")
@@ -535,9 +574,9 @@ def test_join_grouping_constructs_served_pinned(spark):
             F.min("v").alias("mn"), F.max("v").alias("mx"),
         ]
         # ROLLUP — all levels served from the MV, values == native
-        df, used = answer_join_rollup_aggregate(
+        df, used = answer_join_grouping_sets(
             spark, mv_root, fact, fact_path, dims,
-            group_cols=["g", "pbit"], aggs=AGGS,
+            sets=rollup_sets(["g", "pbit"]), aggs=AGGS,
         )
         assert used == "jg"
         assert rows(df) == rows(joined.rollup("g", "pbit").agg(*meas))
@@ -545,10 +584,10 @@ def test_join_grouping_constructs_served_pinned(spark):
         assert files and all("/mvs/jg/data-" in f for f in files), files
 
         # CUBE under a predicate on an MV group column
-        df, used = answer_join_cube_aggregate(
+        df, used = answer_join_grouping_sets(
             spark, mv_root, fact, fact_path, dims,
-            group_cols=["g", "pbit"], aggs=AGGS,
-            where=[("g", "!=", "a")],
+            sets=cube_sets(["g", "pbit"]),
+            aggs=AGGS, where=[("g", "!=", "a")],
         )
         assert used == "jg"
         assert rows(df) == rows(
@@ -558,7 +597,7 @@ def test_join_grouping_constructs_served_pinned(spark):
         # arbitrary GROUPING SETS
         df, used = answer_join_grouping_sets(
             spark, mv_root, fact, fact_path, dims,
-            group_cols=["g", "pbit"], sets=[["g"], ["pbit"]], aggs=AGGS,
+            sets=[["g"], ["pbit"]], aggs=AGGS,
         )
         assert used == "jg"
         assert rows(df) == rows(
@@ -566,9 +605,9 @@ def test_join_grouping_constructs_served_pinned(spark):
         )
 
         # non-subsumed rollup (fk not an MV group col) falls back
-        df, used = answer_join_rollup_aggregate(
+        df, used = answer_join_grouping_sets(
             spark, mv_root, fact, fact_path, dims,
-            group_cols=["fk"], aggs=AGGS,
+            sets=rollup_sets(["fk"]), aggs=AGGS,
         )
         assert used is None
         nkey = lambda t: tuple(  # noqa: E731
@@ -588,10 +627,10 @@ def test_join_grouping_constructs_served_pinned(spark):
             [(99, "zz")], "fk bigint, g string"
         ).coalesce(1).write.mode("append").parquet(dim_path)
         dim2 = spark.read.parquet(dim_path)
-        df, used = answer_join_rollup_aggregate(
+        df, used = answer_join_grouping_sets(
             spark, mv_root, fact, fact_path,
             [(dim2, dim_path, ["fk"])],
-            group_cols=["g", "pbit"], aggs=AGGS,
+            sets=rollup_sets(["g", "pbit"]), aggs=AGGS,
         )
         assert used is None
         assert rows(df) == rows(
@@ -609,7 +648,8 @@ def test_hll_measure_composes_with_join_mv_rollup(spark):
     import tempfile as _tf
 
     from pulsar_cdc_experiment_spark.plans.mv import (
-        answer_join_rollup_aggregate,
+        answer_join_grouping_sets,
+        rollup_sets,
     )
 
     base = _tf.mkdtemp(prefix="mvjh_")
@@ -633,10 +673,10 @@ def test_hll_measure_composes_with_join_mv_rollup(spark):
             measures={"du": ("approx_distinct", "u"),
                       "n": ("count", None)},
         )
-        df, used = answer_join_rollup_aggregate(
+        df, used = answer_join_grouping_sets(
             spark, mv_root, fact, fact_path,
             [(dim, dim_path, ["fk"])],
-            group_cols=["g"],
+            sets=rollup_sets(["g"]),
             aggs={"du": ("approx_distinct", "u"),
                   "n": ("count", None)},
         )
@@ -833,7 +873,8 @@ def test_join_live_hierarchy_serves_from_one_compose(spark):
         read_mor,
     )
     from pulsar_cdc_experiment_spark.plans.mv import (
-        answer_join_rollup_aggregate_live,
+        answer_join_grouping_sets_live,
+        rollup_sets,
     )
 
     base = _tf.mkdtemp(prefix="mvj_lh_")
@@ -897,9 +938,9 @@ def test_join_live_hierarchy_serves_from_one_compose(spark):
             }
 
         def serve(d):
-            df, mode = answer_join_rollup_aggregate_live(
+            df, mode = answer_join_grouping_sets_live(
                 spark, mv_root, "jlh", fact_project, [(d, ["fk"])],
-                group_cols=["g", "pri"], aggs=aggs,
+                sets=rollup_sets(["g", "pri"]), aggs=aggs,
             )
             return {
                 (r["g"], r["pri"]): (r["sum_cents"], r["n"], r["mx"])
@@ -1214,8 +1255,9 @@ def test_derived_group_keys_reach_the_join_family(spark):
     )
     from pulsar_cdc_experiment_spark.plans.mv import (
         answer_join_aggregate,
-        answer_join_rollup_aggregate,
-        answer_join_rollup_aggregate_live,
+        answer_join_grouping_sets,
+        answer_join_grouping_sets_live,
+        rollup_sets,
     )
 
     base = _tf.mkdtemp(prefix="mvj_drv_")
@@ -1293,9 +1335,10 @@ def test_derived_group_keys_reach_the_join_family(spark):
         assert used == "jd" and rows_of(df) == direct()
 
         # pinned hierarchy with the derived key
-        df, used = answer_join_rollup_aggregate(
+        df, used = answer_join_grouping_sets(
             spark, mv_root, fact_now(), manifest, dims,
-            group_cols=["g", "bkt"], aggs=aggs, derived=derived,
+            sets=rollup_sets(["g", "bkt"]),
+            aggs=aggs, derived=derived,
         )
         assert used == "jd" and rows_of(df) == direct(rollup=True)
 
@@ -1319,9 +1362,10 @@ def test_derived_group_keys_reach_the_join_family(spark):
         def fact_project_live(df):
             return fact_project(df)
 
-        df, mode = answer_join_rollup_aggregate_live(
+        df, mode = answer_join_grouping_sets_live(
             spark, mv_root, "jd", fact_project_live, [(dim, ["fk"])],
-            group_cols=["g", "bkt"], aggs=aggs, derived=derived,
+            sets=rollup_sets(["g", "bkt"]),
+            aggs=aggs, derived=derived,
         )
         assert mode == "mv_delta" and rows_of(df) == direct(rollup=True)
     finally:

@@ -797,10 +797,10 @@ _BUILD_JOBS_SANCTIONED = {
     # eager=False) goes through queryExecution.toRdd, and under AQE
     # that executes the compose's shuffle map stages immediately (the
     # serve's own work scheduled early and REUSED by the final
-    # stages, not an extra pass; checkpoint_compose=False restores
-    # job-free construction at per-level re-scan cost). The r18
-    # hierarchy serves mask the same behavior behind their
-    # fixture-builder sanctioning above.
+    # stages, not an extra pass). A stale multi-set live serve always
+    # checkpoints its compose, so its construction is never job-free.
+    # The other live hierarchy serves mask the same behavior behind
+    # their fixture-builder sanctioning above.
     "mv_join_time_hierarchy_live",
     # round-19: top-k MV fixture (create_topk_mv build)
     "mv_topk_rewrite",

@@ -7,6 +7,7 @@ from __future__ import annotations
 import gc
 import os
 import tempfile
+import threading
 import warnings
 
 from py4j.java_gateway import GatewayClient
@@ -65,6 +66,25 @@ def test_get_spark_turns_off_call_site_capture(spark):
     )
 
 
+def _drain_py4j_deletes(spark):
+    """Return once py4j's finalizer thread has sent every proxy delete
+    queued so far: the thread sends them in queue order, so a marker
+    queued last runs after all of them."""
+    pending = getattr(
+        spark.sparkContext._gateway._gateway_client, "finalizer_deque", None
+    )
+    if pending is None:  # unpinned gateway: deletes go out inline
+        return
+    sent = threading.Event()
+
+    class _Marker:
+        def garbage_collect_object(self, target_id, enqueue=True):
+            sent.set()
+
+    pending.appendleft((_Marker(), None))
+    assert sent.wait(30), "py4j finalizer thread did not drain"
+
+
 def test_enriched_json_plan_round_trip_budget(spark, monkeypatch):
     """Building the enrichment plan of a small feed stays within 500 py4j
     round trips; with call-site capture on it makes about 1,800."""
@@ -80,12 +100,17 @@ def test_enriched_json_plan_round_trip_budget(spark, monkeypatch):
         return send(self, *args, **kwargs)
 
     # collect earlier tests' garbage first and hold the cycle collector
-    # off while counting: freeing an old py4j proxy sends a command too
+    # off while counting: freeing an old py4j proxy sends a command too.
+    # The deletes it queues go out from py4j's finalizer thread, so wait
+    # them out before counting; after planning, wait out the deletes of
+    # the proxies planning itself freed, so they are counted every time
     gc.collect()
     gc.disable()
-    monkeypatch.setattr(GatewayClient, "send_command", counted)
     try:
+        _drain_py4j_deletes(spark)
+        monkeypatch.setattr(GatewayClient, "send_command", counted)
         pipe.enriched_json(spark, streaming=False)
+        _drain_py4j_deletes(spark)
     finally:
         monkeypatch.undo()
         gc.enable()

@@ -1166,8 +1166,9 @@ def main() -> None:
         import tempfile
 
         from pulsar_cdc_experiment_spark.plans.mv import (
-            answer_join_rollup_aggregate,
+            answer_join_grouping_sets,
             create_join_mv,
+            rollup_sets,
         )
 
         base = tempfile.mkdtemp(prefix="stress_jmvh_")
@@ -1197,10 +1198,10 @@ def main() -> None:
             def timed(use_mv):
                 root = mv_root if use_mv else os.path.join(base, "none")
                 t0 = time.perf_counter()
-                df, used = answer_join_rollup_aggregate(
+                df, used = answer_join_grouping_sets(
                     spark, root, fact, fact_path,
                     [(dim, dim_path, ["fk"])],
-                    group_cols=["g", "pbit"], aggs=aggs,
+                    sets=rollup_sets(["g", "pbit"]), aggs=aggs,
                 )
                 rows = df.collect()
                 return time.perf_counter() - t0, used, rows
@@ -1234,7 +1235,7 @@ def main() -> None:
         dashboard state), ROLLUP(g, pbit) answered by the native path
         (full table scan through the MoR overlay + Expand) vs composed
         LIVE from the stale MV's stored partials ⊕ the unapplied
-        change-feed span (answer_rollup_aggregate_live; the fact
+        change-feed span (answer_grouping_sets_live; the fact
         scanned by nobody). The gap is the fact-pass cost the lambda
         serve avoids; identical results asserted. Flat in fact size by
         construction: the compose reads O(groups + span)."""
@@ -1247,9 +1248,10 @@ def main() -> None:
             read_mor,
         )
         from pulsar_cdc_experiment_spark.plans.mv import (
-            answer_rollup_aggregate_live,
+            answer_grouping_sets_live,
             bind_mv_to_mor,
             create_mv,
+            rollup_sets,
         )
 
         base = tempfile.mkdtemp(prefix="stress_lmvh_")
@@ -1306,9 +1308,9 @@ def main() -> None:
 
             def timed_live():
                 t0 = time.perf_counter()
-                df, mode = answer_rollup_aggregate_live(
+                df, mode = answer_grouping_sets_live(
                     spark, mv_root, "lh", project,
-                    group_cols=["g", "pbit"], aggs=aggs,
+                    sets=rollup_sets(["g", "pbit"]), aggs=aggs,
                 )
                 rows = df.collect()
                 return time.perf_counter() - t0, mode, rows
