@@ -7,13 +7,15 @@ window, losing the min-of-3 map from the committed artifact):
 1. the FULL record — {"metric": "headline_total", "value": <sec>,
    "unit": "sec", "queries": {name: sec}, "spread": {...},
    "steady": {...}, "steady_value": <sec>, "calib_sec": <sec>,
-   "key_aliases": {...}, "skew_join": {...}, "sf": <sf>} — for anyone
-   reading the raw run log;
+   "key_aliases": {...}, "skew_join": {...}, "sf": <sf>, "cpus": <n>,
+   "shuffle_partitions": <n>} — for anyone reading the raw run log;
+   ``cpus`` is the session's core count (its default parallelism) and
+   ``shuffle_partitions`` the effective ``spark.sql.shuffle.partitions``;
 2. a COMPACT line, printed LAST and size-guarded to fit a 2000-char tail
    whole, carrying everything the round artifact must retain:
    {"metric": ..., "value", "steady_value", "unit", "sf", "calib_sec",
    "fmt": "min3", "queries": {name: min3}, "legs_bs": [[build, serve]
-   x6 in LEG_BREAKDOWN order]} (1-decimal per-query since round 19 —
+   x6 in LEG_BREAKDOWN order], "cpus", "shuffle_partitions"} (1-decimal per-query since round 19 —
    the 64-entry map outgrew the window at 2 decimals; quantization is
    inside the measured same-day envelope — keys pre-canonicalized:
    round 17 sheds the key_aliases map from the tail artifact by
@@ -284,7 +286,11 @@ def _compact_line(compact: dict, limit: int = 1990) -> str:
     # lives in the FULL line and SCALE.md's round notes — it must never
     # displace a per-query entry from the driver-visible series.
     # calib_sec is the cross-VM comparison key, last survivor.
-    for drop in ("legs_bs", "skew_join", "key_aliases", "calib_sec"):
+    # The host shape (cpus, shuffle_partitions) sheds just before it.
+    for drop in (
+        "legs_bs", "skew_join", "key_aliases", "shuffle_partitions",
+        "cpus", "calib_sec",
+    ):
         if len(line) <= limit:
             break
         compact.pop(drop, None)
@@ -346,6 +352,10 @@ def main() -> None:
         app_name="bench",
         shuffle_partitions=shuffle_partitions_for_bytes(sf_bytes),
     )
+    # the host shape the run was measured on, read before any query
+    # can change the session's conf
+    cpus = spark.sparkContext.defaultParallelism
+    shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     queries = dict(entry_mod.queries())
     # Bench-only entry: the engine-hash MinHash fast path is a plain
     # function (not @register'd — it has no DuckDB oracle and would put a
@@ -595,6 +605,8 @@ def main() -> None:
         # heavyweights (see LEG_BREAKDOWN)
         "legs": legs,
         "sf": sf,
+        "cpus": cpus,
+        "shuffle_partitions": shuffle_parts,
     }
     if errors:
         full["errors"] = errors
@@ -663,6 +675,8 @@ def main() -> None:
             )
             for n in LEG_BREAKDOWN
         ],
+        "cpus": cpus,
+        "shuffle_partitions": shuffle_parts,
     }
     if errors:
         compact["errors"] = sorted(errors)

@@ -67,8 +67,14 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ..sources.tables import _SCHEMA_CACHE, _cached_schema, listing_state
+from ..sources.tables import (
+    _cached_schema,
+    data_schema,
+    listing_state,
+    seed_schema_cache,
+)
 from .layout import (
     MERGE_ASIDE as ASIDE,
 )
@@ -223,16 +229,18 @@ def merge_into(
     contract as any evolving parquet layout, and why this function's
     own target read and :func:`read_version` merge footers.
 
-    The target read's merged-footer schema is cached per visible file
-    listing (relpath, name, mtime and size of every data file; the
-    ``sources.tables`` schema cache under a ``merge::{root}`` key), so
-    only the first merge into a table, or one after any other writer
+    The target's data columns come from the root's slot in the
+    ``sources.tables`` schema cache, the one ``read_dir`` uses: the
+    merged-footer schema of the data columns, keyed on the visible file
+    listing (relpath, name, mtime and size of every data file), so only
+    a merge after a writer that left no slot, or after any other writer
     changed a file, runs the inference job. After publish the merge
-    seeds that slot with the new listing when it did not widen the
+    seeds that slot from the schema it wrote when it did not widen the
     table and wrote files whose data columns equal the target's, names
-    and types; an evolving merge, a type-widening one, or one that
-    wrote no row leaves the slot, and the next merge infers. The slot
-    holds the schema only, never data.
+    and types; an evolving merge, a type-widening one, or one that wrote
+    no row leaves the slot, and the next reader infers. The slot holds
+    the schema only, never data, and never the partition columns: the
+    merge reads them as strings, ``read_dir`` with their inferred types.
 
     ``file_scope=True`` (default) narrows the rewrite INSIDE each
     touched partition to the data files that hold a matched key, as the
@@ -304,29 +312,20 @@ def _merge_into_unlocked(
             "(null/empty partition values); merge_into does not support "
             "the hive default partition — repartition those rows first"
         )
-    # The target schema is the union of the data files' footers
-    # (mergeSchema: a previously evolved table carries files of mixed
-    # width), kept in the schema cache per visible file listing, so a
-    # merge into a table no other writer changed since the last merge
-    # runs no inference job. Partition type inference is off for the
-    # inference read only: merge bookkeeping keys partitions by their
-    # hive dir-name spelling (strings), and letting discovery re-type
-    # `p=0` as int would make touched-set values incomparable with the
-    # source's. With the schema given, partition columns read as those
-    # same strings.
-    slot = f"merge::{root}"
-
-    def infer():
-        inf_conf = "spark.sql.sources.partitionColumnTypeInference.enabled"
-        prev_inf = spark.conf.get(inf_conf, "true")
-        spark.conf.set(inf_conf, "false")
-        try:
-            return spark.read.option("mergeSchema", "true").parquet(root).schema
-        finally:
-            spark.conf.set(inf_conf, prev_inf)
-
-    schema = _cached_schema(slot, listing_state(root), infer)
-    target = spark.read.schema(schema).parquet(root)
+    # The target's data columns come from the root's schema slot (the
+    # union of the data files' footers: a previously evolved table
+    # carries files of mixed width), so a merge into a table no other
+    # writer changed since the last engine commit runs no inference job.
+    # Partition columns are appended as strings: merge bookkeeping keys
+    # partitions by their hive dir-name spelling, and letting discovery
+    # re-type `p=0` as int would make touched-set values incomparable
+    # with the source's.
+    schema = data_schema(spark, root)
+    target = spark.read.schema(
+        T.StructType(
+            schema.fields + [T.StructField(c, T.StringType()) for c in pcols]
+        )
+    ).parquet(root)
     data_cols = [c for c in target.columns if c not in pcols]
     missing = [
         c
@@ -681,17 +680,16 @@ def _merge_into_unlocked(
                 f"{staging})"
             )
         shutil.rmtree(staging, ignore_errors=True)
-        # seed the schema slot with the post-merge listing when inference
-        # would give back the target schema: the written files carry
-        # exactly the target's data columns and every other file was
-        # already part of the target
-        def data_fields(st):
-            return [(f.name, f.dataType) for f in st if f.name not in pcols]
-
-        if not extra and wrote and data_fields(merged.schema) == data_fields(
-            schema
-        ):
-            _SCHEMA_CACHE[slot] = (listing_state(root), schema)
+        # seed the root's slot from the written schema when inference
+        # would give back the target's data columns: the written files
+        # carry exactly them and every other file was already part of
+        # the target
+        written = [(f.name, f.dataType) for f in merged.schema
+                   if f.name not in pcols]
+        if not extra and wrote and written == [
+            (f.name, f.dataType) for f in schema
+        ]:
+            seed_schema_cache(root, merged.schema, pcols)
 
         # _rep(): the documented report spelling (plain value for a
         # single-level layout, value list for composite); raw tuples

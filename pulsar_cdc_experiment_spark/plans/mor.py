@@ -55,6 +55,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.tables import data_schema, read_dir, seed_schema_cache
 from .layout import maintenance_lock
 from .tuning import job_label
 
@@ -323,122 +324,22 @@ def _sweep_orphans(root: str, man: dict) -> None:
             _purge_recover(d)
 
 
-def _path_state(path: str) -> tuple:
-    """File-state key for the schema cache: every (relpath, name,
-    mtime, size) under ``path``, hidden/underscore entries skipped."""
-    state: list[tuple] = []
-    if os.path.isfile(path):
-        st = os.stat(path)
-        state.append((path, st.st_mtime_ns, st.st_size))
-    else:
-        for dirpath, dirnames, filenames in os.walk(path):
-            dirnames[:] = sorted(
-                d for d in dirnames if not d.startswith((".", "_"))
-            )
-            for fn in sorted(filenames):
-                if fn.startswith((".", "_")):
-                    continue
-                st = os.stat(os.path.join(dirpath, fn))
-                state.append(
-                    (os.path.relpath(dirpath, path), fn,
-                     st.st_mtime_ns, st.st_size)
-                )
-    return tuple(state)
-
-
-def _as_read_nullable(dt):
-    """Parquet read-back schema: Spark marks every field nullable on
-    inference (``StructType.asNullable``) regardless of how it was
-    written — mirror that so a seeded cache slot is byte-equivalent to
-    what ``spark.read.parquet(path).schema`` would have returned."""
-    from pyspark.sql import types as T
-
-    if isinstance(dt, T.StructType):
-        return T.StructType(
-            [
-                T.StructField(
-                    f.name, _as_read_nullable(f.dataType), True, f.metadata
-                )
-                for f in dt.fields
-            ]
-        )
-    if isinstance(dt, T.ArrayType):
-        return T.ArrayType(_as_read_nullable(dt.elementType), True)
-    if isinstance(dt, T.MapType):
-        return T.MapType(
-            _as_read_nullable(dt.keyType), _as_read_nullable(dt.valueType),
-            True,
-        )
-    return dt
-
-
-def seed_schema_cache(path: str, schema) -> None:
-    """Pre-populate the per-path schema cache for a directory this verb
-    JUST wrote, from the writer's own schema (read-nullability applied):
-    the follow-up reader — often a registered query's job-free plan
-    construction — then skips the schema-inference job entirely."""
-    from ..sources.tables import _SCHEMA_CACHE
-
-    _SCHEMA_CACHE[f"mor::{path}"] = (
-        _path_state(path), _as_read_nullable(schema)
-    )
-
-
-def _read_cached(
-    spark: SparkSession, path: str, base_path: str | None = None
-) -> DataFrame:
-    """Schema-cached parquet read keyed on (path, file state) — the
-    ``read_version`` discipline: re-constructing the same sequence plans
-    ZERO jobs (the registry's construction-is-job-free gate), and any
-    file change invalidates the slot."""
-    from ..sources.tables import _cached_schema
-
-    reader = spark.read
-    if base_path is not None:
-        reader = reader.option("basePath", base_path)
-    schema = _cached_schema(
-        f"mor::{path}",
-        _path_state(path),
-        lambda r=reader, p=path: r.parquet(p).schema,
-    )
-    return reader.schema(schema).parquet(path)
-
-
-def _component_schema(spark: SparkSession, path: str):
-    """Read schema of one overlay component via the per-path cache
-    (the ``mor::{path}`` key ``_read_cached`` uses) — zero inference
-    jobs on a warm cache, one on a cold one. ``merge_into_mor`` seeds
-    only its delete sidecar's slot: a delta directory's read-back
-    schema carries partition columns discovered from its path, which
-    the writer's schema does not spell, so the first read after each
-    merge runs one schema-inference job per new delta component."""
-    from ..sources.tables import _cached_schema
-
-    return _cached_schema(
-        f"mor::{path}",
-        _path_state(path),
-        lambda p=path: spark.read.parquet(p).schema,
-    )
-
-
 def _delta_span_scan(
     spark: SparkSession, root: str, seqs: list[dict]
 ) -> DataFrame | None:
     """ONE scan of the shared delta ROOT covering every appended delta
     in ``seqs``; ``None`` when the span appended nothing.
 
-    Round-20 (r19 verdict #3): the former per-sequence ``unionByName``
-    chain minted one scan relation per retained sequence, so every plan
-    construction/analysis over the overlay — live serves, feeds,
-    maintains — paid O(sequences) driver time. Deltas are laid out as
-    ``__born=<seq>`` partitions of one root (:func:`_delta_dir`), so a
-    single reader discovers the born sequence as a partition column;
-    the span membership filter is a partition-pruned ``isin`` (which
-    also keeps unpublished/orphaned dirs invisible). The explicit
-    schema is the by-name merge of the span components' cached schemas
-    (writer-seeded — construction stays job-free); parquet fills
-    columns a component lacks with typed NULL, the same semantics the
-    ``unionByName(allowMissingColumns=True)`` chain produced."""
+    Deltas are laid out as ``__born=<seq>`` partitions of one root
+    (:func:`_delta_dir`), so one scan relation serves any number of
+    retained sequences and a single reader discovers the born sequence
+    as a partition column; the span membership filter is a
+    partition-pruned ``isin`` (which also keeps unpublished/orphaned
+    dirs invisible). The explicit schema is the by-name merge of the
+    span components' data-column slots (writer-seeded, so construction
+    stays job-free) plus ``__born``; Spark appends the table's partition
+    columns from the directory names. Parquet fills columns a component
+    lacks with typed NULL, union-by-name semantics."""
     from pyspark.sql.types import IntegerType, StructField, StructType
 
     appended = [s["seq"] for s in seqs if s["n_appended"]]
@@ -446,14 +347,11 @@ def _delta_span_scan(
         return None
     fields: list = []
     seen: set[str] = set()
-    for s in seqs:
-        if s["n_appended"]:
-            for f in _component_schema(
-                spark, _delta_dir(root, s["seq"])
-            ).fields:
-                if f.name not in seen:
-                    seen.add(f.name)
-                    fields.append(f)
+    for seq in appended:
+        for f in data_schema(spark, _delta_dir(root, seq)).fields:
+            if f.name not in seen:
+                seen.add(f.name)
+                fields.append(f)
     fields.append(StructField("__born", IntegerType()))
     df = spark.read.schema(StructType(fields)).parquet(_delta_root(root))
     return df.filter(F.col("__born").isin(appended))
@@ -467,9 +365,7 @@ def _overlay_scan(
     with its ``__born`` sequence."""
     base_seq = man.get("base_seq", 0)
     base_dir = os.path.join(root, man["base"])
-    data = _read_cached(spark, base_dir, base_path=base_dir).withColumn(
-        "__born", F.lit(base_seq)
-    )
+    data = read_dir(spark, base_dir).withColumn("__born", F.lit(base_seq))
     deltas = _delta_span_scan(spark, root, seqs)
     if deltas is not None:
         data = data.unionByName(deltas, allowMissingColumns=True)
@@ -480,12 +376,12 @@ def _delete_scan(
     spark: SparkSession, root: str, seqs: list[dict]
 ) -> DataFrame:
     """ONE multi-file scan over the span's delete sidecars with
-    ``__dseq`` derived from the file name (``d-<seq>.parquet``) —
-    replaces the per-sequence union chain, same round-20 rationale as
+    ``__dseq`` derived from the file name (``d-<seq>.parquet``): one
+    scan relation for any number of sequences, as in
     :func:`_delta_span_scan` (plain files under one directory carry no
     partition structure, so a multi-path read needs no layout change)."""
     files = [_delete_file(root, s["seq"]) for s in seqs]
-    schema = _component_schema(spark, files[0])
+    schema = data_schema(spark, files[0])
     df = spark.read.schema(schema).parquet(*files)
     dseq = F.regexp_extract(
         F.input_file_name(), r"/d-(\d+)\.parquet$", 1
@@ -524,6 +420,7 @@ def init_mor(
     df.write.mode("errorifexists").partitionBy(*pcols).parquet(
         os.path.join(root, base)
     )
+    seed_schema_cache(os.path.join(root, base), df.schema, pcols)
     os.makedirs(os.path.join(root, MOR), exist_ok=True)
     man = {
         "keys": keys,
@@ -635,7 +532,7 @@ def merge_into_mor(
             # dot-prefixed tmp: the overlay read scans the shared delta
             # ROOT, and Spark's file listing skips dot-entries — a
             # half-written delta is invisible to concurrent readers
-            # until the publish rename below (round-20 single-root scan)
+            # until the publish rename below
             delta_tmp = os.path.join(
                 _delta_root(root), f".__born={seq:06d}.tmpdir"
             )
@@ -655,13 +552,13 @@ def merge_into_mor(
                     "spark.job.description"
                 )
 
+                delta = src.filter(~F.col(delete_col)).select(*out_cols)
+
                 def _write_delta():
                     spark.sparkContext.setJobDescription(desc)
-                    src.filter(~F.col(delete_col)).select(
-                        *out_cols
-                    ).write.mode("overwrite").partitionBy(*pcols).parquet(
-                        delta_tmp
-                    )
+                    delta.write.mode("overwrite").partitionBy(
+                        *pcols
+                    ).parquet(delta_tmp)
 
                 from concurrent.futures import ThreadPoolExecutor
 
@@ -707,6 +604,7 @@ def merge_into_mor(
                             f"delta dir {delta_dst} already exists"
                         )
                     os.rename(delta_tmp, delta_dst)
+                    seed_schema_cache(delta_dst, delta.schema, pcols)
             finally:
                 shutil.rmtree(tmp, ignore_errors=True)
                 shutil.rmtree(delta_tmp, ignore_errors=True)
@@ -763,10 +661,8 @@ def read_mor(
         )
     seqs = [s for s in man["seqs"] if s["seq"] <= hi]
 
-    # round-20: ONE multi-path scan per overlay side (base+deltas,
-    # delete sidecars) instead of a per-sequence unionByName chain —
-    # the plan and its analysis cost stay O(1) in retained sequences
-    # (r19 verdict #3; guide §6)
+    # ONE scan per overlay side (base+deltas, delete sidecars): the
+    # plan and its analysis cost stay O(1) in retained sequences
     data = _overlay_scan(spark, root, man, seqs)
     # schema as of `hi`: the manifest column order, restricted to what
     # some component at-or-below `hi` actually carries
@@ -884,6 +780,9 @@ def _compact_locked(
         *man["partition_col"]
     ).parquet(staging)
     os.rename(staging, os.path.join(root, new_base))
+    seed_schema_cache(
+        os.path.join(root, new_base), snap.schema, man["partition_col"]
+    )
     man["base"] = new_base
     man["base_seq"] = hi
     man["seqs"] = [s for s in man["seqs"] if s["seq"] > hi]
@@ -1215,9 +1114,7 @@ def purge_keys_mor(
         from pyspark.sql.types import StringType, StructField, StructType
 
         base_dir = os.path.join(root, man["base"])
-        base_schema = _read_cached(
-            spark, base_dir, base_path=base_dir
-        ).schema
+        base_schema = read_dir(spark, base_dir).schema
         probe_schema = StructType(
             [
                 StructField(f.name, StringType())

@@ -58,9 +58,10 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.tables import read_dir, seed_schema_cache
 from .layout import maintenance_lock
+from .mor import any_active_lease, lease_scope
 from .tuning import job_label
-from .mor import any_active_lease, lease_scope, seed_schema_cache
 
 #: requested-measure functions the rewriter understands.
 #: ``approx_distinct`` stores a MERGEABLE Datasketches HLL sketch per
@@ -461,9 +462,7 @@ def _folded_partials(
         ]
         if missing:
             raise ValueError(f"base_new lacks column(s) {missing}")
-    from .mor import _read_cached
-
-    data = _read_cached(spark, _data_dir(d, man))
+    data = read_dir(spark, _data_dir(d, man))
     _INTEGRAL = ("bigint", "int", "smallint", "tinyint")
     dtypes = dict(data.dtypes)
     for c, kinds in spec.items():
@@ -557,7 +556,6 @@ def scrub_mv_groups(
                 f"group columns {man['group_cols']}; got {cols}"
             )
         from ..operators.materialize import _group_join
-        from .mor import _read_cached
 
         if "mor_root" in man:
             # Round-19 ADVICE (medium): the scrub legitimately re-arms
@@ -589,7 +587,7 @@ def scrub_mv_groups(
                     "+ re-bind"
                 )
         _sweep_mv(d, man)
-        data = _read_cached(spark, _data_dir(d, man))
+        data = read_dir(spark, _data_dir(d, man))
         keys = group_rows.distinct()
         # NULL-safe: a scrub row with a NULL group value reaches the
         # MV's NULL group (a USING join would never match it)
@@ -997,11 +995,7 @@ def _serve_from_mv(
 ) -> DataFrame:
     # schema-cached read (the read_version/read_mor discipline): a
     # registered query re-planning the same MV runs zero Spark jobs
-    from .mor import _read_cached
-
-    mv = _read_cached(
-        spark, _data_dir(_mv_dir(mv_root, man["name"]), man)
-    )
+    mv = read_dir(spark, _data_dir(_mv_dir(mv_root, man["name"]), man))
     return _rollup_partials(mv, man, group_cols, aggs, where, derived)
 
 
@@ -1276,11 +1270,7 @@ def _serve_sets_pinned(
     markers in each set's rolled-away columns — all from ONE pinned
     manifest. Works identically for plain and join MVs (serving only
     ever reads the summary's data generation)."""
-    from .mor import _read_cached
-
-    mv = _read_cached(
-        spark, _data_dir(_mv_dir(mv_root, man["name"]), man)
-    )
+    mv = read_dir(spark, _data_dir(_mv_dir(mv_root, man["name"]), man))
     return _serve_sets_from_partials(
         mv, man, group_cols, sets, aggs, where, derived
     )
@@ -2035,10 +2025,10 @@ def answer_aggregate_live(
     publishes, minus the publish — so query cost is O(groups +
     unapplied span + risky-group base probe) instead of a fact pass,
     and the MV files are byte-untouched (maintenance stays a separate,
-    batched decision). On a warm schema cache plan construction runs
-    no Spark job; the first build after a merge runs one
-    schema-inference job per new delta component
-    (``plans.mor._component_schema``).
+    batched decision). Plan construction runs no Spark job when this
+    process wrote the components it reads, because each writer seeds
+    their schema slots (``sources.tables.seed_schema_cache``); a
+    component written elsewhere costs one inference job, once.
 
     ``project`` maps feed/table rows to the MV's group + measure
     columns exactly as in :func:`maintain_mv_from_mor`. Returns
@@ -2131,9 +2121,9 @@ def _live_partials(
 ) -> tuple[DataFrame | None, str | None]:
     """Resolve a MoR-bound MV's PARTIALS at the table's CURRENT state,
     or at a pinned ``(mor_manifest, boundary_seq)`` — the shared core
-    of the plain live serves. On a warm schema cache this runs no
-    Spark job; the first call after a merge runs one schema-inference
-    job per new delta component (``plans.mor._component_schema``).
+    of the plain live serves. This runs no Spark job when this process
+    wrote the components it reads, because each writer seeds their
+    schema slots (``sources.tables.seed_schema_cache``).
     Returns ``(partials, mode)``:
 
     - the stored generation (mode ``"mv"``) when the MV is fresh or
@@ -2148,7 +2138,7 @@ def _live_partials(
       the span was compacted away, or an out-of-band rewrite (a purge
       or a rollback of a folded sequence) bumped the mutation
       counter."""
-    from .mor import _read_cached, _read_manifest
+    from .mor import _read_manifest
 
     subsumed = (
         need <= set(man["group_cols"])
@@ -2160,7 +2150,7 @@ def _live_partials(
     mor_root = man["mor_root"]
     if pinned is None:
         if man["fingerprint"] == _fingerprint(man["source_path"]):
-            return _read_cached(spark, _data_dir(d, man)), "mv"
+            return read_dir(spark, _data_dir(d, man)), "mv"
         mor_man = _read_manifest(mor_root)
         latest = (
             mor_man["seqs"][-1]["seq"]
@@ -2184,7 +2174,7 @@ def _live_partials(
         # sequence, or a compaction folded exactly to the MV's floor):
         # the stored partials ARE the state even though the source
         # fingerprint moved
-        return _read_cached(spark, _data_dir(d, man)), "mv"
+        return read_dir(spark, _data_dir(d, man)), "mv"
     composed = _folded_partials(
         spark, d, man,
         _span_changes(spark, mor_root, applied, latest, project),
@@ -2299,7 +2289,7 @@ def _live_join_partials(
     additionally forces ``(None, None)`` — attribute reassignment is
     not compensatable from any fact feed."""
     from ..operators.materialize import star_join_delta
-    from .mor import _read_cached, _read_manifest, change_feed_mor, read_mor
+    from .mor import _read_manifest, change_feed_mor, read_mor
 
     subsumed = (
         need <= set(man["group_cols"])
@@ -2314,7 +2304,7 @@ def _live_join_partials(
         return None, None
     mor_root = man["mor_root"]
     if man["fingerprint"] == _fingerprint(man["source_path"]):
-        return _read_cached(spark, _data_dir(d, man)), "mv"
+        return read_dir(spark, _data_dir(d, man)), "mv"
     mor_man = _read_manifest(mor_root)
     latest = (
         mor_man["seqs"][-1]["seq"]
@@ -2332,7 +2322,7 @@ def _live_join_partials(
     if applied == latest:
         # no unapplied span — stored partials current (see
         # _live_partials)
-        return _read_cached(spark, _data_dir(d, man)), "mv"
+        return read_dir(spark, _data_dir(d, man)), "mv"
     feed = fact_project(
         change_feed_mor(spark, mor_root, applied, latest)
     )
@@ -2786,7 +2776,7 @@ class MvsSnapshot:
         (time-traveled fact ⋈ current dims), same convention as the
         live serves."""
         from ..operators.materialize import star_join_delta
-        from .mor import _read_cached, change_feed_mor, read_mor
+        from .mor import change_feed_mor, read_mor
 
         man = self._mans[name]
         _validate_join_live(man, name, dims)
@@ -2840,7 +2830,7 @@ class MvsSnapshot:
         if not subsumed or not dims_static or not compensatable:
             return base_at_boundary(), None
         d = _mv_dir(self._mv_root, name)
-        stored = _read_cached(spark, _data_dir(d, man))
+        stored = read_dir(spark, _data_dir(d, man))
         if applied == latest:
             return (
                 _apply_having(

@@ -54,7 +54,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .mor import seed_schema_cache
+from ..sources.tables import read_dir, seed_schema_cache
 from .mv import (
     _data_dir,
     _fingerprint,
@@ -316,12 +316,10 @@ def maintain_topk_mv(
     ``maintain_mv`` calling convention): publish
     :func:`_folded_topk`'s result as a new data generation under the
     shared staged-swap + derivation-token discipline."""
-    from .mor import _read_cached
-
     with maintenance_lock(mv_root):
         d, man = _load_topk(mv_root, name)
         _sweep_mv(d, man)
-        stored = _read_cached(spark, _data_dir(d, man))
+        stored = read_dir(spark, _data_dir(d, man))
         changes = changes.persist()
         try:
             out = _folded_topk(
@@ -380,8 +378,6 @@ def answer_topk(
     docstring for why that is exact), identical ``order_by``, and
     ``k ≤`` the stored k. Returns ``(df, served_from_mv_name|None)``;
     the result carries the MV's group + payload columns."""
-    from .mor import _read_cached
-
     group_cols = list(group_cols)
     order_by = _norm_order(order_by)
     best = None
@@ -405,7 +401,7 @@ def answer_topk(
     if best is None:
         return _topk_of(source, group_cols, order_by, k), None
     d = _mv_dir(mv_root, best["name"])
-    stored = _read_cached(spark, _data_dir(d, best))
+    stored = read_dir(spark, _data_dir(d, best))
     return _topk_of(stored, group_cols, order_by, k), best["name"]
 
 
@@ -466,10 +462,8 @@ def maintain_topk_from_mor(
                 "change_type", F.lit("insert")
             )
         ).drop("change_type")
-        from .mor import _read_cached
-
         _sweep_mv(d, man)
-        stored = _read_cached(spark, _data_dir(d, man))
+        stored = read_dir(spark, _data_dir(d, man))
         changes = changes.persist()
         try:
             out = _folded_topk(
@@ -506,7 +500,6 @@ def answer_topk_live(
     table), ``None`` (not servable — not subsumed, or an
     out-of-band rewrite: falls back to the base top-k)."""
     from .mor import (
-        _read_cached,
         _read_manifest,
         change_feed_mor,
         read_mor,
@@ -533,7 +526,7 @@ def answer_topk_live(
     if not _topk_subsumes(man, group_cols, order_by, k):
         return base_now(), None
     if man["fingerprint"] == _fingerprint(man["source_path"]):
-        stored = _read_cached(spark, _data_dir(d, man))
+        stored = read_dir(spark, _data_dir(d, man))
         return _topk_of(stored, group_cols, order_by, k), "mv"
     mor_man = _read_manifest(man["mor_root"])
     latest = (
@@ -547,7 +540,7 @@ def answer_topk_live(
         mor_man.get("base_seq", 0) <= applied <= latest
     ):
         return base_now(), None
-    stored = _read_cached(spark, _data_dir(d, man))
+    stored = read_dir(spark, _data_dir(d, man))
     if applied == latest:
         return _topk_of(stored, group_cols, order_by, k), "mv"
     feed = project(

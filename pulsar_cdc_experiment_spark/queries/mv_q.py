@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from ..plans.mv import answer_aggregate, create_mv
 from ..registry import register
-from ..sources.tables import table
+from ..sources.tables import read_dir, table
 from .fixture_cache import session_fixture, write_feed_batches
 
 
@@ -303,7 +303,6 @@ def mv_serving_fixture(spark, sf_dir: str) -> str:
     def build(root: str) -> None:
         from ..plans.merge import merge_into
         from ..plans.mv import maintain_mv
-        from ..sources.tables import read_dir
         from .merge_q import _ORDER_COLS, _TOUCHED, _changeset
 
         fact = os.path.join(root, "orders")
@@ -431,8 +430,6 @@ def mv_incremental_serving(spark, sf_dir):
 
     root = mv_serving_fixture(spark, sf_dir)
     fact = os.path.join(root, "orders")
-    from ..sources.tables import read_dir
-
     cents = F.floor(
         F.col("o_totalprice") * 100 + F.lit(0.5)
     ).cast("long").alias("cents")
@@ -3487,12 +3484,10 @@ def _join_live_serve_df(spark, sf_dir, server, out_cols, **spec):
     fixture, run the given answer_join_*_live server over the stale
     summary with the grouping ``spec`` (``group_cols=`` or ``sets=``),
     stamp the mode and select the group columns ``out_cols``."""
-    from ..plans.mor import _read_cached
-
     root = mv_join_live_fixture(spark, sf_dir)
     mv_root = os.path.join(root, "mvs")
     # schema-cached dim read: re-planning constructs zero jobs
-    dim = _read_cached(spark, os.path.join(root, "cust_dim"))
+    dim = read_dir(spark, os.path.join(root, "cust_dim"))
     cents = F.floor(
         F.col("o_totalprice") * 100 + F.lit(0.5)
     ).cast("long").alias("cents")
@@ -3703,14 +3698,13 @@ def mv_join_advisor_workload(spark, sf_dir):
     100 TB this designs the star-summary layer before paying a single
     fact ⋈ dims shuffle: N dashboard queries, one stored join
     rollup."""
-    from ..plans.mor import _read_cached
     from ..plans.mv import answer_join_aggregate
 
     root = mv_join_advisor_fixture(spark, sf_dir)
     fact_path = os.path.join(sf_dir, "orders.parquet")
     dim_path = os.path.join(root, "cust_dim")
     # schema-cached dim read: re-planning constructs zero jobs
-    dim = _read_cached(spark, dim_path)
+    dim = read_dir(spark, dim_path)
     cents = F.floor(
         F.col("o_totalprice") * 100 + F.lit(0.5)
     ).cast("long").alias("cents")
@@ -3888,12 +3882,11 @@ def mv_join_policy_serve(spark, sf_dir):
     The maintain and base routes are pytest-pinned
     (test_join_policy_router_full_matrix) — they write, and a
     registered query must not mutate its session fixture."""
-    from ..plans.mor import _read_cached
     from ..plans.mv import answer_join_aggregate_policied
 
     root = mv_join_live_fixture(spark, sf_dir)
     mv_root = os.path.join(root, "mvs")
-    dim = _read_cached(spark, os.path.join(root, "cust_dim"))
+    dim = read_dir(spark, os.path.join(root, "cust_dim"))
     cents = F.floor(
         F.col("o_totalprice") * 100 + F.lit(0.5)
     ).cast("long").alias("cents")
@@ -4118,12 +4111,11 @@ def mv_join_time_hierarchy_live(spark, sf_dir):
     mode 'mv_delta' at every level; the oracle recomputes the whole
     hierarchy closed-form from the raw tables, the risky max at each
     level included."""
-    from ..plans.mor import _read_cached
     from ..plans.mv import answer_join_grouping_sets_live, rollup_sets
 
     root = mv_join_live_fixture(spark, sf_dir)
     mv_root = os.path.join(root, "mvs")
-    dim = _read_cached(spark, os.path.join(root, "cust_dim"))
+    dim = read_dir(spark, os.path.join(root, "cust_dim"))
     cents = F.floor(
         F.col("o_totalprice") * 100 + F.lit(0.5)
     ).cast("long").alias("cents")

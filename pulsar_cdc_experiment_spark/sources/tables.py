@@ -1,20 +1,32 @@
-"""Readers for the driver-generated parquet tables (TESTDATA.md).
+"""Readers for the driver-generated parquet tables (TESTDATA.md) and for
+the directories the engine's writers leave.
 
 One parquet file per table under ``{sf_dir}/{name}.parquet``. Readers are
 plain ``spark.read.parquet`` so Catalyst gets predicate pushdown, column
 pruning, and (on partitioned layouts) partition pruning for free.
 
-Schemas are inferred ONCE per path and cached driver-side: every later
-``table()`` call passes the cached schema explicitly, so building a query
-plan runs zero Spark jobs (tests/test_scale_plans.py asserts this for the
-whole registry). At 100 TB the same discipline matters for real — footer
-schema inference over a many-thousand-file table is a cluster job per
-read, and a catalog (or this cache) pays it once instead of per query.
+Every reader passes an explicit schema, so building a query plan runs
+zero Spark jobs (tests/test_scale_plans.py asserts this for the whole
+registry). The schema cache holds one slot per file or directory: the
+union of its data files' footers (``mergeSchema``), DATA columns only,
+keyed on the visible file listing (:func:`listing_state`). Partition
+columns are never cached: given a data-only schema, Spark discovers
+them from the directory names on the driver, with no job, and appends
+them after the data columns, typed as a reader asks (``read_dir`` lets
+Spark infer them; the copy-on-write merge spells them as strings).
+Every engine writer seeds the slot of the directory it just published
+from the schema it wrote (:func:`seed_schema_cache`), so the first read
+after an engine commit runs no inference job either; only a listing no
+engine writer seeded (a fixture, another writer's file) is inferred, once.
+At 100 TB the same discipline matters for real — footer inference over a
+many-thousand-file table is a cluster job per read, and a catalog (or
+this cache) pays it once instead of per query.
 """
 
 from __future__ import annotations
 
 import os
+import urllib.parse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -35,15 +47,12 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# path -> (freshness state, inferred StructType); filled on first read
-# of each table file/dir. The freshness state (stat fields, or the full
-# file listing for directories) invalidates the entry when content is
-# regenerated in place (a stale explicit schema on a parquet read
-# silently returns nulls for renamed/retyped columns instead of
-# failing). Keyed per PATH with replace-on-change — keying on the state
-# itself would retain one dead entry (holding an entire directory
-# listing) per rewrite of a repeatedly-rebuilt fixture dir, unbounded
-# over a bench sweep.
+# normalised path -> (listing state, data-column schema). Keyed per
+# PATH with replace-on-change: a stale explicit schema on a parquet read
+# silently returns nulls for renamed/retyped columns instead of failing,
+# and keying on the state itself would retain one dead entry (holding an
+# entire directory listing) per rewrite of a repeatedly-rebuilt fixture
+# dir, unbounded over a bench sweep.
 _SCHEMA_CACHE: dict[str, tuple[object, T.StructType]] = {}
 
 
@@ -52,12 +61,12 @@ def clear_schema_cache() -> None:
     _SCHEMA_CACHE.clear()
 
 
-def _cached_schema(path: str, state: object, infer):
-    hit = _SCHEMA_CACHE.get(path)
+def _cached_schema(slot: str, state: object, infer):
+    hit = _SCHEMA_CACHE.get(slot)
     if hit is not None and hit[0] == state:
         return hit[1]
     schema = infer()
-    _SCHEMA_CACHE[path] = (state, schema)
+    _SCHEMA_CACHE[slot] = (state, schema)
     return schema
 
 
@@ -69,10 +78,9 @@ def local_rows(spark: SparkSession, rows, schema) -> DataFrame:
     relation then pays one Python-worker round-trip PER SLICE — and a
     single-task consumer (a ``coalesce(1)`` file write, a broadcast
     build) pays them SEQUENTIALLY: measured 5–6 s for a 2-row audit
-    write at local[32] vs 0.3 s at one slice (round-19 optimization;
-    guide §4 — the Python boundary is per-partition, so don't mint 32
-    partitions for 2 rows). Semantics identical: same rows, same
-    explicit schema, no inference job."""
+    write at local[32] vs 0.3 s at one slice. The Python boundary is
+    per partition, so 2 rows get one partition, not 32. Semantics
+    identical: same rows, same explicit schema, no inference job."""
     return spark.createDataFrame(
         spark.sparkContext.parallelize(rows, numSlices=1), schema
     )
@@ -81,14 +89,7 @@ def local_rows(spark: SparkSession, rows, schema) -> DataFrame:
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         _enable_nanos_as_long(spark)
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    st = os.stat(path)
-    schema = _cached_schema(
-        path,
-        (st.st_mtime_ns, st.st_size),
-        lambda: spark.read.parquet(path).schema,
-    )
-    df = spark.read.schema(schema).parquet(path)
+    df = read_dir(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         df = _normalize_events_ts(df)
     return df
@@ -107,11 +108,15 @@ def _visible(name: str) -> bool:
 
 
 def listing_state(path: str) -> tuple:
-    """Freshness state of a directory's visible data files: the sorted
-    (relpath, name, mtime_ns, size) of every file Spark would list under
-    ``path``. The exact tuple is the state — folding it through a hash
-    would admit a collision serving a stale schema after an in-place
-    rewrite, for zero savings."""
+    """Freshness state of a file or directory: the sorted (relpath, name,
+    mtime_ns, size) of every data file Spark would list under ``path``
+    (a plain file is its own one-entry listing, relpath ``""``). The
+    exact tuple is the state — folding it through a hash would admit a
+    collision serving a stale schema after an in-place rewrite, for zero
+    savings."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return (("", os.path.basename(path), st.st_mtime_ns, st.st_size),)
     entries = []
     for dirpath, dirnames, filenames in os.walk(path):
         # sorted traversal: the state must not depend on listdir order
@@ -125,29 +130,88 @@ def listing_state(path: str) -> tuple:
     return tuple(entries)
 
 
-def read_dir(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:
-    """Schema-cached read of an arbitrary columnar directory (the fixture
-    layouts the layout/ingest queries write). Same discipline as
-    :func:`table`: infer once per directory STATE, then pass the schema
-    explicitly so re-reading a session-cached fixture plans zero jobs
-    (the fixture-reuse gate in tests/test_scale_plans.py).
+def _partition_names(state: tuple) -> set[str]:
+    """Hive partition columns Spark discovers for a listing: the
+    trailing ``name=value`` segments of its first file's directory."""
+    names: set[str] = set()
+    if state and state[0][0] not in ("", "."):
+        for seg in reversed(state[0][0].split(os.sep)):
+            if "=" not in seg:
+                break
+            names.add(urllib.parse.unquote(seg.split("=", 1)[0]))
+    return names
 
-    The cache key folds in the recursive file listing
-    (:func:`listing_state`) — (relpath, name, mtime_ns, size) of every
-    data file — not just the directory's own stat: rewriting a data file
-    IN PLACE changes no directory entry, so a dir-stat key would serve a
-    stale schema. Local fixture dirs are small, so the walk is
-    microseconds; a 100 TB deployment gets this freshness from its
-    catalog instead."""
-    st = os.stat(path)
-    if os.path.isdir(path):
-        state: object = (listing_state(path), st.st_size)
-    else:
-        state = (st.st_mtime_ns, st.st_size)
-    schema = _cached_schema(
-        path, state, lambda: getattr(spark.read, fmt)(path).schema
+
+def _as_read_nullable(dt):
+    """Parquet read-back type: Spark marks every field nullable on
+    inference (``StructType.asNullable``) regardless of how it was
+    written — mirror that so a seeded slot equals what inference over
+    the written files returns."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [
+                T.StructField(
+                    f.name, _as_read_nullable(f.dataType), True, f.metadata
+                )
+                for f in dt.fields
+            ]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_as_read_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(
+            _as_read_nullable(dt.keyType), _as_read_nullable(dt.valueType),
+            True,
+        )
+    return dt
+
+
+def data_schema(
+    spark: SparkSession, path: str, fmt: str = "parquet"
+) -> T.StructType:
+    """Data-column schema of a file or directory from its slot: the union
+    of every data file's footer, partition columns stripped. A miss (no
+    slot, or a listing that changed since the slot was filled) runs one
+    ``mergeSchema`` inference job: after schema evolution files of both
+    widths sit side by side, and one footer would name only one width."""
+    state = listing_state(path)
+
+    def infer():
+        full = getattr(spark.read.option("mergeSchema", "true"), fmt)(path)
+        pcols = _partition_names(state)
+        return T.StructType([f for f in full.schema if f.name not in pcols])
+
+    return _cached_schema(os.path.abspath(path), state, infer)
+
+
+def seed_schema_cache(path: str, schema, pcols=()) -> None:
+    """Fill the slot of a file or directory a writer JUST published, from
+    the schema it wrote: ``schema`` minus the partition columns
+    ``pcols`` it was written by, read-nullability applied, keyed on the
+    listing as it now stands. The next reader — often a registered
+    query's job-free plan construction — then skips the inference job."""
+    fields = [f for f in schema.fields if f.name not in pcols]
+    _SCHEMA_CACHE[os.path.abspath(path)] = (
+        listing_state(path), _as_read_nullable(T.StructType(fields))
     )
-    return getattr(spark.read.schema(schema), fmt)(path)
+
+
+def read_dir(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:
+    """Schema-cached read of a columnar file or directory (the fixture
+    layouts the layout/ingest queries write, and every table directory
+    the engine writes): the slot's data-column schema
+    (:func:`data_schema`) passed explicitly, so re-reading an unchanged
+    directory plans zero jobs (the fixture-reuse gate in
+    tests/test_scale_plans.py); Spark appends the partition columns it
+    discovers from the directory names, with their types inferred.
+
+    The slot is keyed on the recursive file listing
+    (:func:`listing_state`), not the directory's own stat: rewriting a
+    data file IN PLACE changes no directory entry, so a dir-stat key
+    would serve a stale schema. Local directories are small, so the walk
+    is microseconds; a 100 TB deployment gets this freshness from its
+    catalog instead."""
+    return getattr(spark.read.schema(data_schema(spark, path, fmt)), fmt)(path)
 
 
 def _normalize_events_ts(df: DataFrame) -> DataFrame:

@@ -111,6 +111,36 @@ def test_compact_line_fits_tail_window_with_headroom():
     assert set(out["queries"]) == set(names)
 
 
+def test_compact_line_carries_host_shape():
+    """The compact line names the core count and the effective shuffle
+    partition count the run measured with, while every headline query
+    still fits; under pressure they shed before ``calib_sec`` and never
+    displace a query."""
+    bench = _load("bench.py", "bench_mod_host")
+    names = [
+        {"dedup_minhash_lsh_fast": "dedup_minhash_lsh"}.get(n, n)
+        for n in bench.HEADLINE
+    ] + ["cdc_enrich_plane"]
+    compact = {
+        "metric": "headline_total", "value": 99.999, "steady_value": 99.999,
+        "unit": "sec", "sf": 0.1, "calib_sec": 0.999, "fmt": "min3",
+        "queries": {
+            n: 0.14 if i % 2 == 0 else 9.9 for i, n in enumerate(names)
+        },
+        "legs_bs": [[9.9, 9.9]] * 6,
+        "cpus": 32,
+        "shuffle_partitions": 200,
+    }
+    out = json.loads(bench._compact_line(compact))
+    assert (out["cpus"], out["shuffle_partitions"]) == (32, 200)
+    assert set(out["queries"]) == set(names)
+    compact["queries"] = {n: 99.9 for n in names}
+    compact["calib_sec"] = 12.345
+    out = json.loads(bench._compact_line(compact))
+    assert "calib_sec" in out and set(out["queries"]) == set(names)
+    assert len(json.dumps(out, separators=(",", ":"))) <= 1990
+
+
 def test_bench_series_expands_pair_format():
     bs = _load("tools/bench_series.py", "bench_series_mod")
     parsed = bs._expand_pairs({

@@ -93,8 +93,7 @@ def test_read_dir_schema_cache_exact_freshness(spark, sf_dir):
     assert len(tmod._SCHEMA_CACHE) == before + 1
     # the freshness state embeds the exact (relpath, name, mtime_ns,
     # size) entries
-    state, _schema = tmod._SCHEMA_CACHE[out]
-    listing = state[0]
+    listing, _schema = tmod._SCHEMA_CACHE[out]
     assert isinstance(listing, tuple) and len(listing) > 0
     assert all(len(e) == 4 and isinstance(e[3], int) for e in listing)
 

@@ -385,6 +385,39 @@ def test_merge_schema_evolution_widens_only_with_opt_in(spark):
     shutil.rmtree(root, ignore_errors=True)
 
 
+def test_read_dir_sees_evolved_column(spark):
+    """An evolving merge that file scoping narrows to one file leaves
+    old-width files beside the wide one, in the touched leaf and in
+    every other leaf. ``read_dir`` after it serves the union of the
+    footers, the evolved column included, whether the changed key sits
+    in the first leaf or the last."""
+    from pulsar_cdc_experiment_spark.sources.tables import read_dir
+
+    for k, leaf in ((0, "a"), (29, "c")):
+        root = tempfile.mkdtemp(prefix="merge_evolve_read_")
+        _mk_table(spark, root, _base_rows())
+        assert read_dir(spark, root).columns == ["k", "v", "p"]
+        rep = merge_into(
+            spark, root,
+            spark.createDataFrame(
+                [(k, 1.5, leaf, "gold", False)],
+                "k bigint, v double, p string, tier string, "
+                "is_delete boolean",
+            ),
+            keys=["k"], partition_col="p", evolve_schema=True,
+            file_scope_min_mb=0,
+        )
+        assert rep["schema_evolved"] == ["tier"], rep
+        assert rep["files_kept"] >= 1, rep
+        table = read_dir(spark, root)
+        assert table.columns == ["k", "v", "tier", "p"], (leaf, table.columns)
+        got = {r["k"]: (r["v"], r["tier"], r["p"]) for r in table.collect()}
+        assert len(got) == 30
+        assert got[k] == (1.5, "gold", leaf)
+        assert [t for _v, t, _p in got.values() if t is not None] == ["gold"]
+        shutil.rmtree(root, ignore_errors=True)
+
+
 def test_merge_rejects_hive_default_partition_both_sides(spark):
     """Round-9 review: ''-valued partition values land in
     __HIVE_DEFAULT_PARTITION__, whose dir name does not round-trip to

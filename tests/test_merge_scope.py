@@ -24,7 +24,11 @@ from pulsar_cdc_experiment_spark.plans.merge import (
     rollback_last_merge,
     vacuum_merge_history,
 )
-from pulsar_cdc_experiment_spark.sources.tables import read_dir
+from pulsar_cdc_experiment_spark.sources.tables import (
+    _SCHEMA_CACHE,
+    data_schema,
+    read_dir,
+)
 
 
 def _mk_ranged_table(spark, root):
@@ -521,6 +525,128 @@ def test_merge_schema_slot_keeps_the_evolved_column(spark):
     assert got[8] == (0.8, None, "a") and got[1000] == (10.0, "gold", "b")
     assert got[2] == (2.0, None, "a") and got[21] == (21.0, None, "b")
     shutil.rmtree(root, ignore_errors=True)
+
+
+def test_read_dir_after_merge_runs_no_job(spark):
+    """Every merge seeds the root's slot from the schema it wrote, so
+    building a ``read_dir`` plan of the table it just committed runs no
+    Spark job, merge after merge, and serves what a cold footer read
+    of the table would."""
+    root = tempfile.mkdtemp(prefix="mslot_read_")
+    _mk_ranged_table(spark, root)
+    for i, rows in enumerate([
+        [(4, 7.0, "a", False)],
+        [(15, 0.0, "b", True), (100, 1.0, "a", False)],
+        [(3, 3.5, "b", False)],
+    ]):
+        merge_into(
+            spark, root, _chg(spark, rows), keys=["k"], partition_col="p",
+            file_scope_min_mb=0,
+        )
+        df, n = _jobs(spark, f"mslot_read_{i}", lambda: read_dir(spark, root))
+        assert n == 0, (i, n)
+        assert df.schema == spark.read.parquet(root).schema
+    assert sorted(tuple(r) for r in df.collect()) == sorted(
+        _state(spark, root)
+    )
+    shutil.rmtree(root, ignore_errors=True)
+
+
+def _seeded_vs_cold(spark, path: str, tag: str):
+    """(the slot's schema as a writer seeded it, a cold inference's);
+    reading the seeded slot must run no job."""
+    seeded, n = _jobs(spark, tag, lambda: data_schema(spark, path))
+    assert n == 0, (path, n)
+    del _SCHEMA_CACHE[os.path.abspath(path)]
+    return seeded, data_schema(spark, path)
+
+
+def _fields(schema):
+    return [(f.name, f.dataType, f.nullable) for f in schema]
+
+
+def test_seeded_slots_equal_cold_inference(spark):
+    """The schema a writer seeds equals what inference over the files it
+    wrote returns — names, order, types and nullability — for a
+    copy-on-write root (plain, composite with escaped leaf names, and
+    numeric-spelled partition values) and for a merge-on-read base
+    (created and compacted), delta component and delete sidecar. The
+    slot never holds partition columns: ``read_dir`` types a numeric
+    spelling as int while the merge keys it by its string."""
+    from pulsar_cdc_experiment_spark.plans.mor import (
+        compact_mor,
+        init_mor,
+        merge_into_mor,
+    )
+    from pyspark.sql.types import IntegerType
+
+    def check(path, tag):
+        seeded, cold = _seeded_vs_cold(spark, path, tag)
+        assert _fields(seeded) == _fields(cold), (tag, seeded, cold)
+        assert seeded == cold, tag
+
+    base = tempfile.mkdtemp(prefix="mslot_eq_")
+    # copy-on-write, one level
+    root = os.path.join(base, "cow")
+    _mk_ranged_table(spark, root)
+    merge_into(spark, root, _chg(spark, [(4, 7.0, "a", False)]),
+               keys=["k"], partition_col="p", file_scope_min_mb=0)
+    check(root, "mslot_eq_cow")
+    # composite layout whose leaf names need escaping
+    root = os.path.join(base, "esc")
+    l1, l2 = ("x y", "5%"), ("z%", "w v")
+    cols = _mk_interleaved_table(spark, root, [l1, l2])
+    assert os.path.isdir(os.path.join(root, "c0=x y", "c1=5%25"))
+    merge_into(
+        spark, root,
+        spark.createDataFrame(
+            [(2, 200.0, *l1, False), (11, 110.0, *l1, False)],
+            "k bigint, v double, c0 string, c1 string, is_delete boolean",
+        ),
+        keys=["k"], partition_col=cols, file_scope_min_mb=0,
+    )
+    check(root, "mslot_eq_esc")
+    assert read_dir(spark, root).schema == spark.read.parquet(root).schema
+    # numeric-spelled partition values
+    root = os.path.join(base, "num")
+    spark.createDataFrame(
+        [(k, float(k), str(k % 3)) for k in range(12)],
+        "k bigint, v double, p string",
+    ).repartition(2).write.partitionBy("p").parquet(root)
+    rep = merge_into(spark, root, _chg(spark, [(4, 7.0, "1", False)]),
+                     keys=["k"], partition_col="p", file_scope_min_mb=0)
+    assert rep["touched"] == ["1"]
+    check(root, "mslot_eq_num")
+    table = read_dir(spark, root)
+    assert table.schema == spark.read.parquet(root).schema
+    assert table.schema["p"].dataType == IntegerType()
+    assert (4, 7.0, 1) in {tuple(r) for r in table.collect()}
+    # merge-on-read: base, delta component, delete sidecar, new base
+    root = os.path.join(base, "mor")
+    init_mor(
+        spark, root,
+        spark.createDataFrame(
+            [(k, float(k), "a" if k % 2 else "b") for k in range(10)],
+            "k bigint, v double, p string",
+        ),
+        keys=["k"], partition_col="p",
+    )
+    check(os.path.join(root, "base-000000"), "mslot_eq_base0")
+    rep = merge_into_mor(
+        spark, root,
+        spark.createDataFrame(
+            [(1, 1.5, "a", False), (2, 0.0, "b", True)],
+            "k bigint, v double, p string, is_delete boolean",
+        ),
+    )
+    seq = rep["seq"]
+    check(os.path.join(root, ".mor", "delta", f"__born={seq:06d}"),
+          "mslot_eq_delta")
+    check(os.path.join(root, ".mor", "delete", f"d-{seq:06d}.parquet"),
+          "mslot_eq_sidecar")
+    assert compact_mor(spark, root)["base"] == "base-000001"
+    check(os.path.join(root, "base-000001"), "mslot_eq_base1")
+    shutil.rmtree(base, ignore_errors=True)
 
 
 def test_file_scope_maps_escaped_composite_leaves(spark):

@@ -27,6 +27,8 @@ from pulsar_cdc_experiment_spark.plans.mor import (
     read_mor,
 )
 
+from .test_merge_scope import _jobs
+
 
 def _mk(spark, rows):
     return spark.createDataFrame(rows, "k bigint, v double, p string")
@@ -492,6 +494,101 @@ def test_auto_compact_policy_boundaries(spark, mor_table):
         "overlay_depth": 0, "sidecar_keys": 0,
         "triggered": False, "reasons": [],
     }
+
+
+def test_read_mor_after_each_commit_runs_no_job(spark, mor_table):
+    """Every merge-on-read writer seeds the slots of what it publishes —
+    ``init_mor`` its base, ``merge_into_mor`` its delta component and
+    delete sidecar, compaction its new base — so building a
+    ``read_mor`` plan after each commit runs no Spark job."""
+    from pulsar_cdc_experiment_spark.plans.mor import auto_compact_mor
+
+    root = mor_table
+    want = set(_base_rows())
+    _df, n = _jobs(spark, "mor_read_init", lambda: read_mor(spark, root))
+    assert n == 0
+    for i, rows in enumerate([
+        [(1, 10.0, "b", False), (2, 0.0, "a", True), (40, 4.0, "a", False)],
+        [(3, 30.0, "b", False), (41, 4.1, "b", False)],
+    ]):
+        merge_into_mor(spark, root, _chg(spark, rows))
+        for k, v, p, d in rows:
+            want = {r for r in want if r[0] != k} | (
+                set() if d else {(k, v, p)}
+            )
+        _df, n = _jobs(
+            spark, f"mor_read_merge_{i}", lambda: read_mor(spark, root)
+        )
+        assert n == 0, (i, n)
+    assert auto_compact_mor(spark, root, max_overlay_depth=0)["triggered"]
+    df, n = _jobs(spark, "mor_read_compact", lambda: read_mor(spark, root))
+    assert n == 0
+    assert {(r["k"], r["v"], r["p"]) for r in df.collect()} == want
+
+
+def _mv_on_mor(spark, base):
+    """A merge-on-read table under ``base`` with a count/sum MV bound to
+    it; returns (table root, MV root, project)."""
+    from pulsar_cdc_experiment_spark.plans.mv import bind_mv_to_mor, create_mv
+
+    root, mv_root = os.path.join(base, "t"), os.path.join(base, "mvs")
+    init_mor(spark, root, _mk(spark, _base_rows()), keys=["k"],
+             partition_col="p")
+
+    def project(df):
+        cols = [F.col("p"), F.col("k")]
+        if "change_type" in df.columns:
+            cols = [F.col("change_type")] + cols
+        return df.select(*cols)
+
+    create_mv(
+        spark, mv_root, name="m",
+        source_path=os.path.join(root, MOR, "manifest.json"),
+        source=project(read_mor(spark, root)), group_cols=["p"],
+        measures={"n": ("count", None), "s": ("sum", "k")},
+    )
+    bind_mv_to_mor(mv_root, "m", root)
+    return root, mv_root, project
+
+
+def test_maintain_from_mor_infers_no_new_delta(spark):
+    """``merge_into_mor`` seeds the slot of the delta component it
+    writes, so ``maintain_mv_from_mor`` right after the merge runs as
+    many jobs as after a read that warmed every slot: it pays no
+    inference job for the new delta."""
+    from pulsar_cdc_experiment_spark.plans.mv import (
+        answer_aggregate,
+        maintain_mv_from_mor,
+    )
+
+    chg = [(1, 10.0, "b", False), (2, 0.0, "a", True), (40, 4.0, "a", False)]
+    base = tempfile.mkdtemp(prefix="mor_mv_jobs_")
+    jobs = []
+    for warm in (False, True):
+        root, mv_root, project = _mv_on_mor(
+            spark, os.path.join(base, str(warm))
+        )
+        merge_into_mor(spark, root, _chg(spark, chg))
+        if warm:
+            read_mor(spark, root)
+        _r, n = _jobs(
+            spark, f"mor_mv_maintain_{warm}",
+            lambda: maintain_mv_from_mor(spark, mv_root, "m", project),
+        )
+        jobs.append(n)
+        df, used = answer_aggregate(
+            spark, mv_root, project(read_mor(spark, root)),
+            os.path.join(root, MOR, "manifest.json"), group_cols=["p"],
+            aggs={"n": ("count", None), "s": ("sum", "k")},
+        )
+        assert used == "m"
+        want = {}
+        for k, _v, p in _state(spark, root):
+            n_p, s_p = want.get(p, (0, 0))
+            want[p] = (n_p + 1, s_p + k)
+        assert {r["p"]: (r["n"], r["s"]) for r in df.collect()} == want
+    assert jobs[0] == jobs[1], jobs
+    shutil.rmtree(base, ignore_errors=True)
 
 
 def _mor_purge_jobs(spark, n_seqs, tag):
