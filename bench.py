@@ -15,11 +15,11 @@ window, losing the min-of-3 map from the committed artifact):
    whole, carrying everything the round artifact must retain:
    {"metric": ..., "value", "steady_value", "unit", "sf", "calib_sec",
    "fmt": "min3", "queries": {name: min3}, "legs_bs": [[build, serve]
-   x6 in LEG_BREAKDOWN order], "cpus", "shuffle_partitions"} (1-decimal per-query since round 19 —
-   the 64-entry map outgrew the window at 2 decimals; quantization is
-   inside the measured same-day envelope — keys pre-canonicalized:
-   round 17 sheds the key_aliases map from the tail artifact by
-   applying it at emission).
+   x6 in LEG_BREAKDOWN order], "cpus", "shuffle_partitions"}
+   (1-decimal per-query since round 19 — the 64-entry map outgrew the
+   window at 2 decimals; quantization is inside the measured same-day
+   envelope — keys pre-canonicalized: round 17 sheds the key_aliases
+   map from the tail artifact by applying it at emission).
    tools/bench_series.py expands the r8-r12 pair format back into the
    min3 and steady series for older artifacts.
 

@@ -26,7 +26,6 @@ this cache) pays it once instead of per query.
 from __future__ import annotations
 
 import os
-import urllib.parse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -130,18 +129,6 @@ def listing_state(path: str) -> tuple:
     return tuple(entries)
 
 
-def _partition_names(state: tuple) -> set[str]:
-    """Hive partition columns Spark discovers for a listing: the
-    trailing ``name=value`` segments of its first file's directory."""
-    names: set[str] = set()
-    if state and state[0][0] not in ("", "."):
-        for seg in reversed(state[0][0].split(os.sep)):
-            if "=" not in seg:
-                break
-            names.add(urllib.parse.unquote(seg.split("=", 1)[0]))
-    return names
-
-
 def _as_read_nullable(dt):
     """Parquet read-back type: Spark marks every field nullable on
     inference (``StructType.asNullable``) regardless of how it was
@@ -173,15 +160,18 @@ def data_schema(
     of every data file's footer, partition columns stripped. A miss (no
     slot, or a listing that changed since the slot was filled) runs one
     ``mergeSchema`` inference job: after schema evolution files of both
-    widths sit side by side, and one footer would name only one width."""
-    state = listing_state(path)
+    widths sit side by side, and one footer would name only one width.
+    ``recursiveFileLookup`` turns partition discovery off for that read,
+    so the inferred schema is the data columns alone."""
 
     def infer():
-        full = getattr(spark.read.option("mergeSchema", "true"), fmt)(path)
-        pcols = _partition_names(state)
-        return T.StructType([f for f in full.schema if f.name not in pcols])
+        reader = (
+            spark.read.option("mergeSchema", "true")
+            .option("recursiveFileLookup", "true")
+        )
+        return getattr(reader, fmt)(path).schema
 
-    return _cached_schema(os.path.abspath(path), state, infer)
+    return _cached_schema(os.path.abspath(path), listing_state(path), infer)
 
 
 def seed_schema_cache(path: str, schema, pcols=()) -> None:
